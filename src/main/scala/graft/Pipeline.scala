@@ -3,7 +3,7 @@ package graft
 import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.yaml.snakeyaml.Yaml
 
@@ -76,14 +76,30 @@ object Retry {
   }
 }
 
-/** The three-phase engine over a layered TableStore. */
+/** The three-phase engine over a layered TableStore.
+  *
+  * K3 — the reference prints `len(df)` after every write
+  * (mabna_tables_create.py:62, :123, :158; mabna_tables_update.py:60).
+  * Every phase here returns that per-table row count, observed on the
+  * write's own execution: each table's plan runs exactly once, where a
+  * `count()` after the write would rerun the whole lineage (the scan,
+  * the joins, the dedup shuffle, the API fetch). */
 final class Pipeline(spark: SparkSession, store: LayeredStore,
                      transport: String, retries: Int = 2) {
+
+  /** Run `write` on `df` with a row counter attached and return the
+    * rows it wrote. Call it inside the retried body: an Observation
+    * serves one execution only, so every attempt gets a fresh one. */
+  private def written(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val obs = Observation()
+    write(df.observe(obs, count(lit(1)).as("rows")))
+    obs.get("rows").asInstanceOf[Long]
+  }
 
   /** Phase 1 — EXTRACT (full refresh): driver-side fetch per endpoint,
     * schema inferred from the JSON like the reference's
     * `json_normalize + to_sql(replace)` (mabna_tables_create.py:55-61).
-    * Returns per-table row counts (K3); failures are isolated (C5). */
+    * Returns per-table row counts; failures are isolated (C5). */
   def fullRefresh(specs: Seq[EndpointSpec]): Map[String, Try[Long]] =
     specs.map { spec =>
       spec.tableName -> Retry.retrying(retries) {
@@ -91,8 +107,7 @@ final class Pipeline(spark: SparkSession, store: LayeredStore,
         val body = TransportRegistry.get(transport)
           .fetch(spec.endpoint, Map("meta.version" -> "0", "meta.version_op" -> "gt"))
         val df = JsonFlatten.parseEnvelope(spark, Seq(body).toDS())
-        store.replace("source", spec.tableName, df)
-        df.count()
+        written(df)(store.replace("source", spec.tableName, _))
       }
     }.toMap
 
@@ -114,11 +129,7 @@ final class Pipeline(spark: SparkSession, store: LayeredStore,
           .option("versionColumn", versionCol)
           .load()
           .filter(col(versionCol) > lit(wm))
-          // materialize once: append + count would otherwise each run
-          // the scan, fetching every endpoint twice over the network
-          .localCheckpoint(true)
-        store.append("source", spec.tableName, fresh)
-        fresh.count()
+        written(fresh)(store.append("source", spec.tableName, _))
       }
     }.toMap
 
@@ -128,10 +139,10 @@ final class Pipeline(spark: SparkSession, store: LayeredStore,
                 mode: String = "replace"): Map[String, Try[Long]] =
     tables.map { case (table, fn) =>
       table -> Retry.retrying(retries) {
-        val out = fn(store.read("source", table))
-        if (mode == "replace") store.replace("staging", table, out)
-        else store.append("staging", table, out)
-        out.count()
+        written(fn(store.read("source", table))) { out =>
+          if (mode == "replace") store.replace("staging", table, out)
+          else store.append("staging", table, out)
+        }
       }
     }
 
@@ -141,8 +152,7 @@ final class Pipeline(spark: SparkSession, store: LayeredStore,
   def load(table: String, build: LayeredStore => DataFrame,
            keys: Seq[String], versionCol: String): Try[Long] =
     Retry.retrying(retries) {
-      val out = Dedup.keepLast(build(store), keys, Seq(col(versionCol)))
-      store.replace("production", table, out)
-      out.count()
+      written(Dedup.keepLast(build(store), keys, Seq(col(versionCol))))(
+        store.replace("production", table, _))
     }
 }

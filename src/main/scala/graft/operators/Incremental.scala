@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -83,7 +84,9 @@ object Incremental {
   * source/staging/production Postgres schemas, behind one API. Two
   * implementations — parquet directories (pure-Spark engine) and JDBC
   * (reference-semantics parity against a relational database). Pipeline
-  * code never cares which one it talks to.
+  * code never cares which one it talks to. `replace` and `append` must
+  * write the DataFrame they are given in one write action: Pipeline
+  * observes its row count on that execution.
   */
 trait LayeredStore {
   def spark: SparkSession
@@ -140,19 +143,25 @@ final case class TableStore(spark: SparkSession, root: String) extends LayeredSt
   override def read(layer: String, table: String): DataFrame =
     spark.read.parquet(path(layer, table))
 
+  /** Entries of a store directory (none if it is absent), resolved
+    * through Hadoop's FileSystem like the parquet reader and writer do,
+    * so a URI root (`file:`, `hdfs:`, an object store) lists the same
+    * tables as the plain path. */
+  private def children(dir: String): Seq[FileStatus] = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    if (fs.exists(p) && fs.getFileStatus(p).isDirectory) fs.listStatus(p).toSeq
+    else Seq.empty
+  }
+
   /** Directory-with-content check, not `_SUCCESS`: dynamic-partition
     * overwrites commit through a staging dir and do not leave a root
     * success marker. */
-  override def exists(layer: String, table: String): Boolean = {
-    val dir = new java.io.File(path(layer, table))
-    dir.isDirectory && Option(dir.listFiles()).exists(_.nonEmpty)
-  }
+  override def exists(layer: String, table: String): Boolean =
+    children(path(layer, table)).nonEmpty
 
-  override def tables(layer: String): Seq[String] = {
-    val dir = new java.io.File(s"$root/$layer")
-    Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(_.isDirectory).map(_.getName).toSeq.sorted
-  }
+  override def tables(layer: String): Seq[String] =
+    children(s"$root/$layer").filter(_.isDirectory).map(_.getPath.getName).sorted
 
   /** Schema-evolving read: unions the schemas of every file in the
     * table (parquet mergeSchema), so an append that added columns stays

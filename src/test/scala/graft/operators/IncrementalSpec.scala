@@ -109,4 +109,60 @@ class IncrementalSpec extends SparkSpec {
     }
     assert(last.collect().toSet == full.collect().toSet)
   }
+
+  test("schema-evolving read unions appended columns, old rows null-filled") {
+    val root = Files.createTempDirectory("graft-evolve").toString
+    val store = TableStore(spark, root)
+    store.replace("source", "t", Seq((1L, "a")).toDF("id", "name"))
+    store.append("source", "t",
+      Seq((2L, "b", 9.5)).toDF("id", "name", "score"))
+    val merged = store.readMerged("source", "t")
+    assert(merged.columns.toSet == Set("id", "name", "score"))
+    val byId = merged.collect()
+      .map(r => r.getAs[Long]("id") ->
+        (if (r.isNullAt(r.fieldIndex("score"))) None
+         else Some(r.getAs[Double]("score")))).toMap
+    assert(byId(1L).isEmpty && byId(2L).contains(9.5))
+  }
+
+  test("a file: URI root sees the same tables, existence and watermarks " +
+    "as the plain-path root") {
+    val dir = Files.createTempDirectory("graft-uri")
+    val plain = TableStore(spark, dir.toString)
+    val uri = TableStore(spark, dir.toUri.toString.stripSuffix("/"))
+    assert(uri.root.startsWith("file:"))
+    plain.replace("source", "a", Seq((1L, "x"), (3L, "y")).toDF("v", "k"))
+    uri.replace("source", "b", Seq((5L, "z"), (2L, "w"), (4L, "u")).toDF("v", "k"))
+    plain.replace("source", "empty", Seq.empty[(Long, String)].toDF("v", "k"))
+    assert(uri.tables("source") == Seq("a", "b", "empty"))
+    assert(uri.tables("source") == plain.tables("source"))
+    assert(uri.tables("staging").isEmpty)
+    Seq("a", "b", "empty", "absent").foreach { t =>
+      assert(uri.exists("source", t) == plain.exists("source", t), t)
+    }
+    assert(uri.exists("source", "b") && !uri.exists("source", "absent"))
+    val wm = uri.probeWatermarks("source", "v")
+    assert(wm == Map("a" -> 3L, "b" -> 5L))
+    assert(wm == plain.probeWatermarks("source", "v"))
+  }
+
+  test("a partitioned upsert under a file: URI root keeps the stored rows " +
+    "the batch does not replace") {
+    val dir = Files.createTempDirectory("graft-uri-part")
+    val store = TableStore(spark, dir.toUri.toString.stripSuffix("/"))
+    val keys = Seq("k")
+    val ord = Seq(col("v"))
+    store.incrementalUpsertPartitioned("prod", "t",
+      Seq((1L, "a", "m1"), (6L, "e", "m1"), (2L, "b", "m2"), (3L, "c", "m3"))
+        .toDF("v", "k", "m"),
+      "v", keys, ord, "m")
+    // the batch touches partition m1 only: e in m1 and all of m2 and m3
+    // must survive the overwrite
+    store.incrementalUpsertPartitioned("prod", "t",
+      Seq((4L, "a", "m1"), (5L, "d", "m1")).toDF("v", "k", "m"),
+      "v", keys, ord, "m")
+    val out = TableStore(spark, dir.toString).read("prod", "t")
+      .select("k", "v").as[(String, Long)].collect().toMap
+    assert(out == Map("a" -> 4L, "b" -> 2L, "c" -> 3L, "d" -> 5L, "e" -> 6L))
+  }
 }

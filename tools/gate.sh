@@ -1,9 +1,10 @@
 #!/usr/bin/env bash
-# Full-suite gate: runs `sbt test` and, on green, records a fingerprint of
-# the exact src/ tree the suite ran against (.gate/green). The pre-commit
-# hook (tools/pre-commit) refuses commits that touch src/ unless the
-# current tree matches a recorded green run — making "snapshot only after
-# a full green test run" mechanical instead of advisory (VERDICT r12/r13).
+# Full-suite gate: runs the benchmark's unit tests and `sbt test` and, on
+# green, records a fingerprint of the exact src/ tree the suite ran against
+# (.gate/green). The pre-commit hook (tools/pre-commit) refuses commits
+# that touch src/ unless the current tree matches a recorded green run —
+# making "snapshot only after a full green test run" mechanical instead of
+# advisory (VERDICT r12/r13).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -18,6 +19,9 @@ tree_hash() {
 }
 
 before=$(tree_hash)
+# The benchmark's own tests first: a green fingerprint also certifies the
+# harness that measures the engine.
+python3 -m unittest discover -s perfbench -p 'test_*.py'
 sbt test
 after=$(tree_hash)
 if [[ "$before" != "$after" ]]; then
