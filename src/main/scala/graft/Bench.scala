@@ -382,6 +382,14 @@ object Bench {
     }
 
   def main(args: Array[String]): Unit = {
+    // dev-only subset knob (comma-separated name prefixes, mirroring
+    // Verify's; an unknown prefix fails here, before any work): the
+    // committed artifact is always the FULL registry, and a subset
+    // run's totals/anchors are not cross-round comparable
+    val onlyPrefixes = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      .filter(_.nonEmpty)
+    val chosen = SparkEntry.matching(onlyPrefixes.getOrElse(Seq(""))).toSet
     val sfDirOrig = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Pin the input in RAM for the measured runs: the bench's contract is
     // warm-cache engine throughput (BENCH_HISTORY.md), but this host's
@@ -410,12 +418,7 @@ object Bench {
       } else sfDirOrig
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Engine.withGraftConfs(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.localSession(cpus.toInt)
     // warm-up: JIT/codegen/parquet-footer caches, so the first measured
     // query isn't charged the session's fixed costs
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -621,16 +624,8 @@ object Bench {
     // mid-run contention the run-level flag can't see
     val winSize = 10
     val interiorProbes = scala.collection.mutable.ArrayBuffer.empty[Double]
-    // dev-only subset knob (comma-separated name prefixes, mirroring
-    // Verify's): the committed artifact contract is the FULL registry —
-    // the driver never sets this, and a subset run's totals/anchors are
-    // not cross-round comparable
-    val onlyPrefixes = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .filter(_.nonEmpty)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
-      onlyPrefixes.forall(_.exists(n.startsWith))
-    }
+    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => chosen(n) }
     val firstPass = selected.zipWithIndex.map { case ((name, fn), qi) =>
       if (qi > 0 && qi % winSize == 0) interiorProbes += probeSample()
       val (t0s, err0) = measure(fn, perQueryReps(name))
@@ -707,7 +702,7 @@ object Bench {
     // subset run has forfeited anyway; paying 20 full anchors there
     // would dwarf the subset itself
     val anchorNames: Seq[String] = SparkEntry.queries.keys.toSeq
-      .filter(n => onlyPrefixes.forall(_.exists(n.startsWith)))
+      .filter(chosen)
       .flatMap(n => bandOf(n).map(b => (n, b)))
       .sortBy(-_._2).take(anchorBudget).map(_._1).sorted
     val anchorTimes = scala.collection.mutable.Map.empty[String, Double]

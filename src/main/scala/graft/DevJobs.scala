@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 /** Scratch: per-JOB wall-time breakdown of ONE named query (dev only).
@@ -13,21 +12,7 @@ object DevJobs {
     val q = args(0)
     val reps = if (args.length > 1) args(1).toInt else 2
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    // diagnostic conf overrides: SPARK_GRAFT_DEV_CONFS="k=v;k=v" — for
-    // A/B-ing a conf's local overhead (e.g. AQE on/off) before deciding
-    // whether a scale-honest fix exists. Dev only; the bench never sets it.
-    val extra = sys.env.getOrElse("SPARK_GRAFT_DEV_CONFS", "")
-      .split(";").filter(_.contains("=")).map { kv =>
-        val Array(k, v) = kv.split("=", 2); (k, v)
-      }
-    val b0 = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-    val spark = Engine.withGraftConfs(
-      extra.foldLeft(b0) { case (b, (k, v)) => b.config(k, v) })
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.localSession(32)
     val starts = scala.collection.concurrent.TrieMap.empty[Int, (Long, String)]
     val rows = scala.collection.mutable.ArrayBuffer.empty[(Int, Double, String)]
     spark.sparkContext.addSparkListener(new SparkListener {

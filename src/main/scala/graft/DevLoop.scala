@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Scratch: time one named query N times in a warm session (dev only).
   *
@@ -16,12 +15,7 @@ object DevLoop {
         val Array(k, vs) = d.split("=", 2)
         (a, b, c.toInt, Some(k -> vs.split('|').toSeq))
     }
-    val spark = Engine.withGraftConfs(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.localSession(32)
     spark.range(1000000).selectExpr("sum(id)").collect()
     val settings: Seq[Option[(String, String)]] = contrast match {
       case None          => Seq(None)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Scratch: dump `.explain("formatted")` for a list of queries into
@@ -10,23 +9,18 @@ object DevPlans {
     val outDir = args(0)
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    val spark = Engine.withGraftConfs(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Files.createDirectories(Paths.get(outDir))
-    names.foreach { prefix =>
-      // all matches, not .find().get: Map key order is unspecified, so
-      // an ambiguous prefix (q15 → q151/q154/…) would dump a
-      // nondeterministic query; unknown prefixes get the candidate list
-      val matches = SparkEntry.queries.keys.filter(_.startsWith(prefix)).toSeq.sorted
+    // exactly one match per prefix: an ambiguous prefix (q15 →
+    // q151/q154/…) would dump whichever query came first
+    val fulls = names.map { prefix =>
+      val matches = SparkEntry.matching(Seq(prefix))
       require(matches.size == 1,
         s"prefix '$prefix' matches ${matches.size} queries: " +
-          (if (matches.isEmpty) SparkEntry.queries.keys.toSeq.sorted.mkString(", ")
-           else matches.mkString(", ")))
-      val full = matches.head
+          matches.mkString(", "))
+      matches.head
+    }
+    val spark = Engine.localSession(32)
+    Files.createDirectories(Paths.get(outDir))
+    fulls.foreach { full =>
       val df = SparkEntry.queries(full)(spark, sfDir)
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only adjudication probe for q141's rep distribution (r15
@@ -12,12 +11,7 @@ import org.apache.spark.sql.functions._
   * one-per-JVM backlog build; the steady-state reps are the band. */
 object DevQ141 {
   def main(args: Array[String]): Unit = {
-    val spark = Engine.withGraftConfs(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.localSession(32)
     val dir = "/root/testdata/sf0.1"
     val backlog = s"${System.getProperty("java.io.tmpdir")}/dev-q141-backlog"
     if (!new java.io.File(backlog).exists()) {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 /** Scratch: where the SHORT-TAIL per-action floor lives (round-20,
@@ -19,12 +18,9 @@ object DevTail {
       args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq else Seq("")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
-    val spark = Engine.withGraftConfs(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val registry = SparkEntry.queries
+    val selected = SparkEntry.matching(prefixes).map(n => n -> registry(n))
+    val spark = Engine.localSession(32)
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val inJobs = new java.util.concurrent.atomic.AtomicLong(0L) // ms
     val starts = scala.collection.concurrent.TrieMap.empty[Int, Long]
@@ -37,8 +33,6 @@ object DevTail {
         }
     })
     spark.range(1000000).selectExpr("sum(xxhash64(id))").collect()
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => prefixes.exists(n.startsWith) }
     println(s"[devtail] ${selected.size} queries, $reps reps, $sfDir")
     val rows = selected.map { case (name, fn) =>
       // warm rep 0 (uncounted): JIT + any build-once stores

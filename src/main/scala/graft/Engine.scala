@@ -88,7 +88,8 @@ object Engine {
     dir.getAbsolutePath
   }
 
-  /** Configs every graft session needs, applied to a builder.
+  /** Configs every graft session needs, set by [[localSession]] — the
+    * one place a graft session is configured.
     *
     *  - `nanosAsLong`: the driver's `events.parquet` carries
     *    TIMESTAMP(NANOS) which Spark's TimestampType (micros) rejects;
@@ -97,7 +98,7 @@ object Engine {
     *  - AQE on: runtime re-planning (skew joins, coalesced shuffle
     *    partitions) is the 100 TB story for free.
     */
-  def withGraftConfs(b: SparkSession.Builder): SparkSession.Builder = b
+  private def withGraftConfs(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     // Reference parity: pandas never raises on bad arithmetic — division
     // by zero flows as ±Inf (X2), out-of-range element_at as null (X3),
@@ -173,8 +174,11 @@ object Engine {
     if (est * 2 < target) df.repartition(target, key) else df
   }
 
-  /** Local session for tests/dev. Shuffle partitions sized to cores, not
-    * the 200 default (SURVEY.md §4 — local[n] has n executor threads). */
+  /** The graft session every main, spec and benchmark runs on: the
+    * graft confs plus [[graft.plans.GraftExtensions]]. Shuffle partitions
+    * sized to cores, not the 200 default (SURVEY.md §4 — local[n] has n
+    * executor threads); a caller that wants another width sets the
+    * runtime conf on the returned session. */
   def localSession(cores: Int = 8): SparkSession = {
     val s = withGraftConfs(
       SparkSession.builder()

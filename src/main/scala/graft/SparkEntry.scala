@@ -4625,6 +4625,19 @@ object SparkEntry {
     "q50_resample_locf" -> q50,
   )
 
+  /** Registry names that start with any of `prefixes`, sorted — the one
+    * query selector of Verify, Bench and the dev mains. A prefix that
+    * matches no query fails with the candidate list, so a typo never
+    * turns into an empty run that exits 0. */
+  def matching(prefixes: Seq[String]): Seq[String] = {
+    val names = queries.keys.toSeq.sorted
+    prefixes.foreach { p =>
+      require(names.exists(_.startsWith(p)),
+        s"prefix '$p' matches no query; candidates: ${names.mkString(", ")}")
+    }
+    names.filter(n => prefixes.exists(n.startsWith))
+  }
+
   // ------------------------------------------------------------ oracle SQL
 
   /** DuckDB 60-bit md5 hash — must mirror TextOps.hash60 exactly. */

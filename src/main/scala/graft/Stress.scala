@@ -1,18 +1,30 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.{Graphs, TextOps}
 
-/** Scale stress for the dedup family: blow the sf0.1 documents table up
-  * N× (each copy's text perturbed by one appended token → a near-dup,
-  * not an exact dup), then run the LSH near-dup pipeline end to end.
-  * This makes every original doc a 20-member near-dup cluster —
-  * a duplicate-STORM corpus, far denser than a real crawl — so the
-  * candidate path, exact verification and connected components all see
-  * quadratic-per-group load (C(20,2)·5k ≈ 950k true pairs at 20×).
-  * Evidence for docs/SCALE.md, not part of the driver contract. */
+/** Scale stress: a registry of storms, each blowing sf0.1 up `factor`×
+  * and timing one operator family end to end. Evidence for
+  * docs/SCALE.md; no storm is part of the Verify/Bench contract.
+  *
+  * The default `all` storm (= `text` + `embed`) blows the sf0.1
+  * documents table up N× (each copy's text perturbed by one appended
+  * token → a near-dup, not an exact dup), then runs the LSH near-dup
+  * pipeline end to end. This makes every original doc a 20-member
+  * near-dup cluster — a duplicate-STORM corpus, far denser than a real
+  * crawl — so the candidate path, exact verification and connected
+  * components all see quadratic-per-group load (C(20,2)·5k ≈ 950k true
+  * pairs at 20×).
+  *
+  * Usage: runMain graft.Stress [factor=20] [storm=all]. An unknown storm
+  * exits non-zero and lists the registered names. */
 object Stress {
   /** Pin the file-source delivery ORDER of sequentially appended batch
     * files (round-17 advice): the crash-storm harnesses replay batches
@@ -38,21 +50,10 @@ object Stress {
             "batch ordering would be nondeterministic")
       }
 
-  def main(args: Array[String]): Unit = {
-    val factor = args.headOption.map(_.toInt).getOrElse(20)
-    // "all" (default = text+embed) | "text" | "embed" | "skew" | "pq" |
-    // "spans" |
-    // "median" | "media" | "incr" | "purge" | "asof" | "graph" — a mode flag lets one family
-    // re-run without repaying the others (the text sweep alone is
-    // ~5 min at 40x)
-    val mode = args.lift(1).getOrElse("all")
-    val spark = Engine.withGraftConfs(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+  /** The factor× near-dup documents corpus of the text family, built
+    * (and checkpointed) only by the storms that read it. */
+  private final class Corpus(c: Ctx) {
+    import c._
     val base = Tables.documents(spark, "/root/testdata/sf0.1")
       .select("doc_id", "text")
     val big = base
@@ -62,14 +63,144 @@ object Stress {
       .localCheckpoint(true)
     val n = big.count()
     println(s"[stress] corpus: $n docs (${factor}x sf0.1)")
+  }
 
-    def time(name: String)(f: => Long): Unit = {
+  /** What every storm shares: the session, the factor, the command
+    * line, the timer, scratch dirs, meters and the shared corpora. */
+  private final class Ctx(val spark: SparkSession, val factor: Int,
+                          val args: Seq[String]) {
+    private lazy val corpus = new Corpus(this)
+    def base: DataFrame = corpus.base
+    def big: DataFrame = corpus.big
+    def n: Long = corpus.n
+
+    /** Prints the named cell's wall time and returns its row count. */
+    def time(name: String)(f: => Long): Long = {
       val t0 = System.nanoTime()
       val rows = f
       println(f"[stress] $name%-24s ${(System.nanoTime() - t0) / 1e9}%8.1f s  ($rows rows)")
+      rows
     }
 
-    if (mode == "all" || mode == "text") {
+    /** A fresh (emptied) scratch directory under java.io.tmpdir. */
+    def scratch(name: String): String = {
+      val p = s"${System.getProperty("java.io.tmpdir")}/graft-stress-$name"
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
+      p
+    }
+
+    /** Regular files under `path` — what a fold collapses. */
+    def fileCount(path: String): Long = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
+      try { import scala.jdk.CollectionConverters._
+        s.iterator().asScala.count(java.nio.file.Files.isRegularFile(_)).toLong
+      } finally s.close()
+    }
+
+    /** Runs one cell under a task listener and prints its wall time,
+      * the shuffle bytes its tasks actually read and its row count
+      * (`rows` of the result); returns the result and those bytes. */
+    def shuffleMetered[T](cell: String, name: String)(body: => T)(
+        rows: T => Long): (T, Long) = {
+      val shuffled = new AtomicLong
+      val meter = new org.apache.spark.scheduler.SparkListener {
+        override def onTaskEnd(
+            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          if (t.taskMetrics != null)
+            shuffled.addAndGet(t.taskMetrics.shuffleReadMetrics.totalBytesRead): Unit
+      }
+      spark.sparkContext.addSparkListener(meter)
+      val t0 = System.nanoTime()
+      val out = body
+      val secs = (System.nanoTime() - t0) / 1e9
+      Thread.sleep(2000) // storm-grade settle for the async listener bus
+      spark.sparkContext.removeSparkListener(meter)
+      val bytes = shuffled.get()
+      println(f"[stress] $cell/$name%-6s $secs%6.1f s  " +
+        f"shuffleRead=${bytes / 1048576.0}%9.2f MiB  (${rows(out)} rows)")
+      (out, bytes)
+    }
+
+    /** `factor` perturbed copies of each vector (cosine ≥ 0.999 to the
+      * original), ids interleaved as `vec_id * factor + copy`. */
+    def perturbed(emb: DataFrame): DataFrame = emb
+      .crossJoin(spark.range(factor).select(col("id").as("copy")))
+      .select((col("vec_id") * factor + col("copy")).as("vec_id"),
+        expr("transform(embedding, (x, i) -> double(x) + 0.003 * (pmod(copy * 31 + i, 7) - 3))")
+          .as("embedding"))
+      .localCheckpoint(true)
+
+    /** `factor` disjoint copies of the sf0.1 trade graph (ids shifted
+      * per copy), customer → supplier: edges scale linearly, structure
+      * per copy unchanged. */
+    def tradeCopies(orders: DataFrame, lineitem: DataFrame): DataFrame = {
+      val shift = 10000000L
+      lineitem.join(orders, lineitem("l_orderkey") === orders("o_orderkey"))
+        .crossJoin(spark.range(factor).select(col("id").as("copy")))
+        .select((col("o_custkey") * 2 + col("copy") * shift).as("src"),
+          (col("l_suppkey") * 2 + 1 + col("copy") * shift).as("dst"))
+    }
+
+    /** The file-source stream a crash child replays: one batch file per
+      * trigger, in mtime order. */
+    def batchStream(input: String): DataFrame =
+      spark.readStream.schema(spark.read.parquet(input).schema)
+        .option("maxFilesPerTrigger", "1").parquet(input)
+  }
+
+  /** `reps` copies of `df` with its id (first) column shifted by
+    * `rep * nBase` and renamed `doc_id`; with `tag`, each copy's text
+    * gains a ` copytag<rep>` token, so copies are near-dups, not exact
+    * ones. */
+  private def replicas(df: DataFrame, reps: Long, nBase: Long,
+                       tag: Boolean = true): DataFrame =
+    df.crossJoin(df.sparkSession.range(reps).select(col("id").as("__rep")))
+      .select((col(df.columns.head) + col("__rep") * nBase).as("doc_id") +:
+        df.columns.toSeq.tail.map {
+          case "text" if tag =>
+            concat(col("text"), lit(" copytag"), col("__rep")).as("text")
+          case other => col(other)
+        }: _*)
+
+  def main(args: Array[String]): Unit = {
+    val factor = args.headOption.map(_.toInt).getOrElse(20)
+    val mode = args.lift(1).getOrElse("all")
+    // resolve the storm before any session or corpus exists
+    val storm = storms.getOrElse(mode, {
+      System.err.println(s"[stress] unknown storm '$mode'; registered: " +
+        storms.keys.mkString(", "))
+      sys.exit(2)
+    })
+    val spark = Engine.localSession(32)
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
+    storm(new Ctx(spark, factor, args.toSeq))
+    spark.stop()
+  }
+
+  /** Storm name → storm. A crash storm `x` also registers `x-child`,
+    * the half its child JVMs run. */
+  private lazy val storms: ListMap[String, Ctx => Unit] = ListMap[String, Ctx => Unit](
+    ("all", c => { text(c); embed(c) }),
+    ("text", text), ("embed", embed), ("pq", pq), ("skew", skew),
+    ("median", median), ("sem", sem), ("fold", fold), ("incr", incr),
+    ("purge", purge), ("asof", asof), ("media", media),
+    ("phashskew", phashskew), ("simhashskew", simhashskew),
+    ("graph", graph), ("lpaskew", lpaskew), ("bpe", bpe),
+    ("bpeapply", bpeapply), ("curation", curation), ("semfold", semfold),
+    ("curstream", curstream), ("curbloom", curbloom), ("spans", spans),
+    ("epochfold", epochfold), ("attr", attr),
+    ("gatecrash", gatecrash), ("gatecrash-child", gatecrashChild)) ++
+    crashStorms.flatMap { case (name, s) =>
+      Seq(name -> crashStorm(name, s) _, s"$name-child" -> crashChild(s) _)
+    }
+
+  /** Names of every registered storm, in registry order. */
+  def stormNames: Seq[String] = storms.keys.toSeq
+
+  // ------------------------------------------------------------ storms
+
+  private def text(c: Ctx): Unit = {
+    import c._
     time("exactDedup") {
       TextOps.exactDedup(big, "doc_id", "text").count()
     }
@@ -145,9 +276,10 @@ object Stress {
         qBatch, "query_id", "qtext", k = 10).count()
     }
 
-    }
+  }
 
-    if (mode == "all" || mode == "embed") {
+  private def embed(c: Ctx): Unit = {
+    import c._
     // embedding near-dup storm: every sf0.1 vector gains factor−1
     // deterministically perturbed copies (cosine ≥ 0.999 to the
     // original), so the corpus holds factor·2000 vectors in 2000
@@ -155,11 +287,7 @@ object Stress {
     // engine must track that true-pair mass; the retired fixed-p=4
     // single-band shape is timed alongside as the Θ(n²/16) contrast.
     val ebig = Tables.embeddings(spark, "/root/testdata/sf0.1")
-      .crossJoin(spark.range(factor).select(col("id").as("copy")))
-      .select((col("vec_id") * factor + col("copy")).as("vec_id"),
-        expr("transform(embedding, (x, i) -> double(x) + 0.003 * (pmod(copy * 31 + i, 7) - 3))")
-          .as("embedding"))
-      .localCheckpoint(true)
+      .transform(perturbed)
     println(s"[stress] embeddings: ${ebig.count()} vectors (${factor}x sf0.1)")
     time("cosinePairs(banded auto)") {
       graft.operators.Similarity.cosineDedupPairsAuto(
@@ -176,9 +304,10 @@ object Stress {
           nPlanes = 4, nTables = 1).count()
       }
     }
-    }
+  }
 
-    if (mode == "pq") {
+  private def pq(c: Ctx): Unit = {
+    import c._
     // PQ serving storm: the perturbed-copy vector corpus at factor×,
     // a fixed 40-query batch asking for top-5. pqTopK ADC-scores every
     // corpus code (compute term linear in corpus size); ivfPqTopK
@@ -187,11 +316,7 @@ object Stress {
     // table records. Training chains dominate at small factors; the
     // scoring gap is what survives at 100 TB.
     val ebig = Tables.embeddings(spark, "/root/testdata/sf0.1")
-      .crossJoin(spark.range(factor).select(col("id").as("copy")))
-      .select((col("vec_id") * factor + col("copy")).as("vec_id"),
-        expr("transform(embedding, (x, i) -> double(x) + 0.003 * (pmod(copy * 31 + i, 7) - 3))")
-          .as("embedding"))
-      .localCheckpoint(true)
+      .transform(perturbed)
     val queries = Tables.embeddings(spark, "/root/testdata/sf0.1")
       .filter(col("vec_id") % 50 === 0)
     println(s"[stress] pq corpus: ${ebig.count()} vectors (${factor}x sf0.1)")
@@ -205,9 +330,10 @@ object Stress {
         "embedding", dim = 64, nCoarse = 8, coarseIters = 1, m = 4,
         codebookK = 8, pqIters = 1, nProbe = 2, k = 5).count()
     }
-    }
+  }
 
-    if (mode == "skew") {
+  private def skew(c: Ctx): Unit = {
+    import c._
     // hot-key join storm: one key owns 90% of the fact side — the
     // "null-ish default id / bot user" shape. With broadcast off (the
     // skew regime: both sides too big to broadcast at 100 TB) a plain
@@ -261,9 +387,10 @@ object Stress {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
       spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
     }
-    }
+  }
 
-    if (mode == "median") {
+  private def median(c: Ctx): Unit = {
+    import c._
     // 90%-skewed exact-median storm: one source owns 90% of the
     // corpus (the hot-domain shape). The old order-statistic window
     // lands the hot source's entire partition on ONE task's sort; the
@@ -300,9 +427,10 @@ object Stress {
         s"two-phase medians diverge from the window reference")
       windowed.size.toLong
     }
-    }
+  }
 
-    if (mode == "sem") {
+  private def sem(c: Ctx): Unit = {
+    import c._
     // SemDeDup storm: corpus = factor× the sf0.1 embeddings (ids
     // offset per replica), k scaled with the corpus as the paper
     // prescribes (k ≈ n/256 here) so expected cluster size stays
@@ -354,9 +482,10 @@ object Stress {
         k = k, iters = 2, thrNum = 49L, thrDen = 400L, clusterCap = 48L)
         .count()
     }
-    }
+  }
 
-    if (mode == "fold") {
+  private def fold(c: Ctx): Unit = {
+    import c._
     // versioned-history storm: a 15-minute index cadence is 96
     // batches/day, and every batch adds a `b=` directory level to each
     // touched term partition — q115's fold is the retention move. Build
@@ -368,8 +497,7 @@ object Stress {
     import graft.operators.TextOps
     val parts = 32
     val nb = math.max(4, factor)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft-stress-fold-$nb"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
+    val path = scratch(s"fold-$nb")
     val docs = Tables.documents(spark, "/root/testdata/sf0.1")
       .select(col("doc_id"), col("text"))
     val t0 = System.nanoTime()
@@ -377,34 +505,29 @@ object Stress {
       TextOps.writePostingIndexVersioned(docs.filter(pmod(col("doc_id"), lit(nb)) === b),
         "doc_id", "text", path, parts, b))
     println(f"[stress] built $nb versioned batches in ${(System.nanoTime()-t0)/1e9}%.1f s")
-    def fileCount(): Long = {
-      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
-      try { import scala.jdk.CollectionConverters._
-        s.iterator().asScala.count(java.nio.file.Files.isRegularFile(_)).toLong
-      } finally s.close()
-    }
     val queries = docs.filter(col("doc_id") % 100 === 0)
       .select(col("doc_id").as("query_id"),
         concat_ws(" ", slice(TextOps.tokens(col("text")), 1, 5)).as("qtext"))
     def read() = TextOps.bm25TopKIndexed(spark, path, parts, queries,
         "query_id", "qtext", k = 10, asOf = Some(nb - 1L))
       .collect().map(_.toString).sorted.toSeq
-    println(s"[stress] files pre-fold: ${fileCount()}")
+    println(s"[stress] files pre-fold: ${fileCount(path)}")
     var pre: Seq[String] = Seq.empty
     time("read asOf latest (pre-fold)") { pre = read(); pre.size.toLong }
     time(s"foldVersions(upTo=${nb / 2})") {
       TextOps.foldPostingIndexVersions(spark, path, upTo = nb / 2L)
       1L
     }
-    println(s"[stress] files post-fold: ${fileCount()}")
+    println(s"[stress] files post-fold: ${fileCount(path)}")
     time("read asOf latest (post-fold)") {
       val post = read()
       require(post == pre, "fold changed a read at the latest as-of")
       post.size.toLong
     }
-    }
+  }
 
-    if (mode == "incr") {
+  private def incr(c: Ctx): Unit = {
+    import c._
     // incremental-maintenance storm: history = the factor× corpus, the
     // increment = ONE more sf0.1-sized batch (ids disjoint above the
     // history range, text a fresh near-dup of every clique). The
@@ -492,11 +615,7 @@ object Stress {
     // contrast above. Same storm construction as the embed mode.
     import graft.operators.Similarity
     val evec = Tables.embeddings(spark, "/root/testdata/sf0.1")
-      .crossJoin(spark.range(factor).select(col("id").as("copy")))
-      .select((col("vec_id") * factor + col("copy")).as("vec_id"),
-        expr("transform(embedding, (x, i) -> double(x) + 0.003 * (pmod(copy * 31 + i, 7) - 3))")
-          .as("embedding"))
-      .localCheckpoint(true)
+      .transform(perturbed)
     val nv = evec.count()
     val vHi = 5000L * factor
     val vBatch = Tables.embeddings(spark, "/root/testdata/sf0.1")
@@ -558,9 +677,10 @@ object Stress {
         Incremental.distinctState(ev, Seq("event_type"), "user_id")),
         Seq("event_type")).count()
     }
-    }
+  }
 
-    if (mode == "purge") {
+  private def purge(c: Ctx): Unit = {
+    import c._
     // takedown storm: a 500-doc purge batch (the realistic "remove
     // these opted-out documents" request size) against the factor×
     // posting index. The naive strategy rebuilds the index without the
@@ -599,9 +719,10 @@ object Stress {
       .distinct().count()
     println(s"[stress] purge: $nPurge docs touched $touchedParts/$pParts " +
       "term partitions")
-    }
+  }
 
-    if (mode == "asof") {
+  private def asof(c: Ctx): Unit = {
+    import c._
     // time-travel storm: history accumulates as `factor` versioned
     // batches of FIXED size (doc_id mod factor ⇒ each batch ≈ |sf0.1|
     // docs at every factor — only the batch COUNT grows with the
@@ -643,9 +764,10 @@ object Stress {
       TextOps.bm25TopKIndexed(spark, aDir, aParts, aBatch,
         "query_id", "qtext", k = 10, asOf = Some(factor - 1L)).count()
     }
-    }
+  }
 
-    if (mode == "media") {
+  private def media(c: Ctx): Unit = {
+    import c._
     // media frame-stats storm: synthetic binaries at doubling sizes,
     // constant total bytes per tier (more files × smaller, then fewer ×
     // bigger). The one-pass kernel must be ~flat across tiers at equal
@@ -684,8 +806,7 @@ object Stress {
     time(s"phashDedupClusters(${factor}x)") {
       Multimodal.phashDedupClusters(mbig, width = 64, maxDist = 3).count()
     }
-    val ppath = s"${System.getProperty("java.io.tmpdir")}/graft-stress-phash-$factor"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ppath))
+    val ppath = scratch(s"phash-$factor")
     time(s"writePhashStore(${factor}x)") {
       Multimodal.writePhashStore(mbig, width = 64, ppath)
       spark.read.parquet(s"$ppath/phash").count()
@@ -697,9 +818,30 @@ object Stress {
       Multimodal.servePhashDedup(spark, ppath, pbatch,
         width = 64, maxDist = 3).filter(col("is_fresh") === false).count()
     }
-    }
+  }
 
-    if (mode == "phashskew") {
+  /** The pre-collapse (round-17) banded self-join over ALL rows of an
+    * (id, hash) table — the skew storms' measured "before" control:
+    * every mega-cluster member lands in the same (chunk, chunk_val)
+    * bucket and the join emits O(m²·chunks) rows into the distinct.
+    * Returns the pairs within Hamming distance 3. */
+  private def uncollapsedPairs(hashes: DataFrame, bits: Int): Long = {
+    val Array(id, h) = hashes.columns
+    val keyed = graft.operators.Hamming
+      .groupBandKeys(hashes.localCheckpoint(true), h, bits, 3)
+    val l = keyed.select(col(id).as("id_a"), col(h).as("h_a"),
+      col("chunk"), col("chunk_val"))
+    val r = keyed.select(col(id).as("id_b"), col(h).as("h_b"),
+      col("chunk"), col("chunk_val"))
+    l.join(r, Seq("chunk", "chunk_val"))
+      .filter(col("id_a") < col("id_b"))
+      .select("id_a", "id_b", "h_a", "h_b").distinct()
+      .filter(expr("bit_count(h_a ^ h_b)") <= 3)
+      .count()
+  }
+
+  private def phashskew(c: Ctx): Unit = {
+    import c._
     // Duplicate-heavy perceptual-hash storm (round 18, from the
     // round-17 hot-bucket finding): 40% of the corpus collapses onto 8
     // identical payloads — the blank-thumbnail/placeholder-GIF regime
@@ -709,7 +851,7 @@ object Stress {
     // path (clusters, store serve) at the storm factor, the all-pairs
     // contract where its own output is feasible, and the PRE-COLLAPSE
     // join shape as the measured "before" control.
-    import graft.operators.{Hamming, Multimodal}
+    import graft.operators.Multimodal
     val nClusters = 8
     val sk = big.select(col("doc_id"),
         when(pmod(col("doc_id"), lit(10)) < 4,
@@ -727,9 +869,7 @@ object Stress {
     time(s"phashskew dedupClusters(${factor}x)") {
       Multimodal.phashDedupClusters(msk, width = 64, maxDist = 3).count()
     }
-    val ppath =
-      s"${System.getProperty("java.io.tmpdir")}/graft-stress-phashskew-$factor"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ppath))
+    val ppath = scratch(s"phashskew-$factor")
     time(s"phashskew writeStore(${factor}x)") {
       Multimodal.writePhashStore(msk, width = 64, ppath)
       spark.read.parquet(s"$ppath/phash").count()
@@ -762,26 +902,17 @@ object Stress {
     // into the distinct
     if (factor <= 10)
       time(s"phashskew UNCOLLAPSED control(${factor}x)") {
-        val ph = Multimodal.perceptualHash(msk, width = 64)
-          .select(col("media_id"), col("dhash")).localCheckpoint(true)
-        val keyed = Hamming.groupBandKeys(ph, "dhash", 64, 3)
-        val l = keyed.select(col("media_id").as("id_a"),
-          col("dhash").as("h_a"), col("chunk"), col("chunk_val"))
-        val r = keyed.select(col("media_id").as("id_b"),
-          col("dhash").as("h_b"), col("chunk"), col("chunk_val"))
-        l.join(r, Seq("chunk", "chunk_val"))
-          .filter(col("id_a") < col("id_b"))
-          .select("id_a", "id_b", "h_a", "h_b").distinct()
-          .filter(expr("bit_count(h_a ^ h_b)") <= 3)
-          .count()
+        uncollapsedPairs(Multimodal.perceptualHash(msk, width = 64)
+          .select(col("media_id"), col("dhash")), 64)
       }
     else
       println(s"[stress] phashskew: SKIPPED uncollapsed control at " +
         s"${factor}x — its pre-distinct join output alone is " +
         "O(m² · 4 chunks) per mega-cluster (~1e10 rows here)")
-    }
+  }
 
-    if (mode == "simhashskew") {
+  private def simhashskew(c: Ctx): Unit = {
+    import c._
     // Text-lens twin of phashskew (round 19, verdict task 4): 40% of
     // the corpus carries one of 8 boilerplate texts — the template-
     // chrome/empty-page regime of web crawls, where SimHash signatures
@@ -792,7 +923,6 @@ object Stress {
     // feasible, and the PRE-COLLAPSE join shape as the "before" control
     // — so the text-side sparse-CC claim has the same measured row the
     // media side got in round 18.
-    import graft.operators.{Hamming, TextOps}
     val nClusters = 8
     val sk = big.select(col("doc_id"),
         when(pmod(col("doc_id"), lit(10)) < 4,
@@ -809,9 +939,7 @@ object Stress {
     time(s"simhashskew dedupClusters(${factor}x)") {
       TextOps.simhashDedupClusters(sk, "doc_id", "text", maxDist = 3).count()
     }
-    val spath =
-      s"${System.getProperty("java.io.tmpdir")}/graft-stress-simhashskew-$factor"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(spath))
+    val spath = scratch(s"simhashskew-$factor")
     time(s"simhashskew writeStore(${factor}x)") {
       TextOps.writeSimhashStore(sk, "doc_id", "text", spath)
       spark.read.parquet(s"$spath/simhash").count()
@@ -842,27 +970,17 @@ object Stress {
     // bucket, O(m²·chunks) pre-distinct rows
     if (factor <= 10)
       time(s"simhashskew UNCOLLAPSED control(${factor}x)") {
-        val sh = TextOps.simhash(sk, "doc_id", "text")
-          .select(col("doc_id"), col("simhash")).localCheckpoint(true)
-        val keyed = Hamming.groupBandKeys(sh, "simhash",
-          TextOps.SimhashBits, 3)
-        val l = keyed.select(col("doc_id").as("id_a"),
-          col("simhash").as("h_a"), col("chunk"), col("chunk_val"))
-        val r = keyed.select(col("doc_id").as("id_b"),
-          col("simhash").as("h_b"), col("chunk"), col("chunk_val"))
-        l.join(r, Seq("chunk", "chunk_val"))
-          .filter(col("id_a") < col("id_b"))
-          .select("id_a", "id_b", "h_a", "h_b").distinct()
-          .filter(expr("bit_count(h_a ^ h_b)") <= 3)
-          .count()
+        uncollapsedPairs(TextOps.simhash(sk, "doc_id", "text")
+          .select(col("doc_id"), col("simhash")), TextOps.SimhashBits)
       }
     else
       println(s"[stress] simhashskew: SKIPPED uncollapsed control at " +
         s"${factor}x — its pre-distinct join output alone is " +
         "O(m² · 4 chunks) per mega-cluster")
-    }
+  }
 
-    if (mode == "graph") {
+  private def graph(c: Ctx): Unit = {
+    import c._
     // iterative-operator storm: k-means and the graph family are the
     // only operators whose WORK is a fixed number of full passes, so
     // the scale claim is linearity — double the input, double the
@@ -872,28 +990,18 @@ object Stress {
     // shuffles per round over (node, long) rows against the cached
     // src-partitioned edges.
     val gvec = Tables.embeddings(spark, "/root/testdata/sf0.1")
-      .crossJoin(spark.range(factor).select(col("id").as("copy")))
-      .select((col("vec_id") * factor + col("copy")).as("vec_id"),
-        expr("transform(embedding, (x, i) -> double(x) + 0.003 * (pmod(copy * 31 + i, 7) - 3))")
-          .as("embedding"))
-      .localCheckpoint(true)
+      .transform(perturbed)
     println(s"[stress] kmeans corpus: ${gvec.count()} vectors (${factor}x sf0.1)")
     time("kmeans k=8 iters=3") {
       val (a, _) = graft.operators.Clustering.kmeansQuantized(
         gvec, "vec_id", "embedding", k = 8, iters = 3)
       a.count()
     }
-    // factor disjoint copies of the sf0.1 trade graph (ids shifted per
-    // copy): edges scale linearly, structure per copy unchanged
     val go = Tables.orders(spark, "/root/testdata/sf0.1")
       .select(col("o_orderkey"), col("o_custkey"))
     val gl = Tables.lineitem(spark, "/root/testdata/sf0.1")
       .select(col("l_orderkey"), col("l_suppkey"))
-    val shift = 10000000L
-    val gfwd = gl.join(go, gl("l_orderkey") === go("o_orderkey"))
-      .crossJoin(spark.range(factor).select(col("id").as("copy")))
-      .select((col("o_custkey") * 2 + col("copy") * shift).as("src"),
-        (col("l_suppkey") * 2 + 1 + col("copy") * shift).as("dst"))
+    val gfwd = tradeCopies(go, gl)
     val gedges = gfwd
       .union(gfwd.select(col("dst").as("src"), col("src").as("dst")))
       .localCheckpoint(true)
@@ -917,9 +1025,10 @@ object Stress {
     time("labelPropagation iters=3") {
       Graphs.labelPropagation(gedges, iters = 3).count()
     }
-    }
+  }
 
-    if (mode == "lpaskew") {
+  private def lpaskew(c: Ctx): Unit = {
+    import c._
     // celebrity-graph LPA storm (r16 verdict #5): the trade graph with
     // ~a third of all edges REROUTED into 3 celebrity nodes — the
     // crawl-scale shape (every page links the hub) where the per-dst
@@ -930,11 +1039,7 @@ object Stress {
       .select(col("o_orderkey"), col("o_custkey"))
     val gl = Tables.lineitem(spark, "/root/testdata/sf0.1")
       .select(col("l_orderkey"), col("l_suppkey"))
-    val shift = 10000000L
-    val gfwd = gl.join(go, gl("l_orderkey") === go("o_orderkey"))
-      .crossJoin(spark.range(factor).select(col("id").as("copy")))
-      .select((col("o_custkey") * 2 + col("copy") * shift).as("src"),
-        (col("l_suppkey") * 2 + 1 + col("copy") * shift).as("dst"))
+    val gfwd = tradeCopies(go, gl)
     val skewed = gfwd
       .union(gfwd.select(col("dst").as("src"), col("src").as("dst")))
       .select(col("src"),
@@ -961,9 +1066,35 @@ object Stress {
     require(saltedLabels == plainLabels,
       s"salted LPA diverged: ${saltedLabels.size} vs ${plainLabels.size}")
     println(s"[stress] lpaskew: salted == plain on ${plainLabels.size} labels")
-    }
+  }
 
-    if (mode == "bpe") {
+  private val syll = Array("an", "er", "in", "on", "at", "en", "es", "or",
+    "te", "ti", "al", "le", "re", "se", "de", "ra", "ro", "ne",
+    "li", "la", "ta", "to", "co", "ma", "qu", "ex", "ion", "ing")
+
+  /** Pseudo-word `i`: 2–5 syllables from a shared inventory (so merges
+    * find real structure), deterministic in `i`. */
+  private def syllables(i: Int): String = {
+    val sb = new StringBuilder
+    var h = scala.util.hashing.MurmurHash3.stringHash("w" + i)
+    val n = 2 + math.floorMod(h, 4)
+    var j = 0
+    while (j < n) {
+      h = scala.util.hashing.MurmurHash3.stringHash(s"$i/$j")
+      sb ++= syll(math.floorMod(h, syll.length))
+      j += 1
+    }
+    sb.toString
+  }
+
+  /** The bpe storms' synthetic dictionary: `nWords` distinct pseudo-words
+    * (a distinctness salt appended to each), Zipf-weighted. */
+  private def zipfDict(nWords: Int): Array[(String, Long)] = (0 until nWords)
+    .map(i => (syllables(i) + ('a' + math.floorMod(i, 26)).toChar + (i / 26),
+      math.max(1L, 10000000L / (i + 1L)))).toArray
+
+  private def bpe(c: Ctx): Unit = {
+    import c._
     // production-merge-count storm: the q116 oracle runs 32 merges; a
     // real tokenizer runs 32k over a ~100k-word dictionary. The
     // testdata vocabulary is 31 words, so the dict here is synthetic:
@@ -974,25 +1105,8 @@ object Stress {
     // interactive bound at 32k merges, where the full-recount
     // reference is O(merges·dict·len) and visibly cannot.
     import graft.functions.Bpe
-    val syll = Array("an", "er", "in", "on", "at", "en", "es", "or",
-      "te", "ti", "al", "le", "re", "se", "de", "ra", "ro", "ne",
-      "li", "la", "ta", "to", "co", "ma", "qu", "ex", "ion", "ing")
-    def word(i: Int): String = {
-      val sb = new StringBuilder
-      var h = scala.util.hashing.MurmurHash3.stringHash("w" + i)
-      val n = 2 + math.floorMod(h, 4)
-      var j = 0
-      while (j < n) {
-        h = scala.util.hashing.MurmurHash3.stringHash(i + "/" + j)
-        sb ++= syll(math.floorMod(h, syll.length))
-        j += 1
-      }
-      sb.append(('a' + math.floorMod(i, 26)).toChar) // distinctness salt
-      sb.toString + (i / 26)
-    }
     val nWords = 100000
-    val dict = (0 until nWords)
-      .map(i => (word(i), math.max(1L, 10000000L / (i + 1L)))).toArray
+    val dict = zipfDict(nWords)
     require(dict.map(_._1).distinct.length == nWords, "dict collision")
     println(s"[stress] bpe dict: $nWords words, " +
       s"max merges bound ${dict.map(_._1.length - 1L).sum}")
@@ -1002,9 +1116,10 @@ object Stress {
     for (m <- Seq(1000, 8000, 32000)) {
       time(s"learn($m) incremental") { Bpe.learn(dict, m).length.toLong }
     }
-    }
+  }
 
-    if (mode == "bpeapply") {
+  private def bpeapply(c: Ctx): Unit = {
+    import c._
     // serve-path storm: ENCODING under a production 32k-merge model.
     // The memo only covers repeated words; a hapax-heavy corpus (every
     // word unique — the worst case the Zipf memo can't touch) exposes
@@ -1012,24 +1127,7 @@ object Stress {
     // per word — at 32k merges that is ~3 orders beyond the priority
     // encode's O(len²) rank-map loop the BpeModel now uses.
     import graft.functions.Bpe
-    val syll = Array("an", "er", "in", "on", "at", "en", "es", "or",
-      "te", "ti", "al", "le", "re", "se", "de", "ra", "ro", "ne",
-      "li", "la", "ta", "to", "co", "ma", "qu", "ex", "ion", "ing")
-    def word(i: Int): String = {
-      val sb = new StringBuilder
-      var h = scala.util.hashing.MurmurHash3.stringHash("w" + i)
-      val n = 2 + math.floorMod(h, 4)
-      var j = 0
-      while (j < n) {
-        h = scala.util.hashing.MurmurHash3.stringHash(i + "/" + j)
-        sb ++= syll(math.floorMod(h, syll.length))
-        j += 1
-      }
-      sb.toString
-    }
-    val dict = (0 until 100000)
-      .map(i => (word(i) + ('a' + math.floorMod(i, 26)).toChar + (i / 26),
-        math.max(1L, 10000000L / (i + 1L)))).toArray
+    val dict = zipfDict(100000)
     var merges: Array[(String, String)] = Array.empty
     time("learn(32000)") {
       merges = Bpe.learn(dict, 32000); merges.length.toLong
@@ -1039,7 +1137,7 @@ object Stress {
     // so nothing is memoizable), encoded once per path on the driver:
     // the per-word cost is what a map stage pays per tail word
     val hapax = (0 until 10000 * factor.toInt)
-      .map(i => word(i * 7 + 3) + "x" + i).toArray
+      .map(i => syllables(i * 7 + 3) + "x" + i).toArray
     val nPrio = time(s"priority encode (${hapax.length} hapax words)") {
       var n = 0L; hapax.foreach(w => n += Bpe.encodeWordPriority(w, rankOf, merges).length); n
     }
@@ -1047,9 +1145,10 @@ object Stress {
       var n = 0L; hapax.foreach(w => n += Bpe.encodeWord(w, merges).length); n
     }
     require(nPrio == nRank, s"encoders disagree: $nPrio vs $nRank")
-    }
+  }
 
-    if (mode == "curation") {
+  private def curation(c: Ctx): Unit = {
+    import c._
     // closed-loop curation storm: the q139 composition over a factor×
     // corpus (documents AND embeddings replicated with shifted ids;
     // text perturbed by a copy tag so replicas are NEAR-dups — every
@@ -1116,9 +1215,10 @@ object Stress {
         Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), "graft")
       d5.join(split.select("doc_id", "split"), Seq("doc_id")).count()
     }
-    }
+  }
 
-    if (mode == "semfold") {
+  private def semfold(c: Ctx): Unit = {
+    import c._
     // sem-store history storm: a 15-minute dedup cadence is 96
     // batches/day and each batch adds b=<id> partition levels to
     // members AND pairs — foldSemStore is the retention move. Build
@@ -1128,8 +1228,7 @@ object Stress {
     import graft.operators.Similarity
     import graft.streaming.SemStream
     val nb = math.max(4, factor)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft-stress-semfold-$nb"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
+    val path = scratch(s"semfold-$nb")
     val nBase = 2000L
     val ecorp = Tables.embeddings(spark, "/root/testdata/sf0.1")
       .crossJoin(spark.range(factor).select(col("id").as("__rep")))
@@ -1146,31 +1245,27 @@ object Stress {
     }
     println(f"[stress] built seed + $nb sem batches " +
       f"(${ecorp.count()} vectors) in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    def fileCount(): Long = {
-      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
-      try { import scala.jdk.CollectionConverters._
-        s.iterator().asScala.count(java.nio.file.Files.isRegularFile(_)).toLong
-      } finally s.close()
-    }
     val probeBatch = ecorp.filter(col("vec_id") % 97 === 0)
       .limit(200).localCheckpoint(true)
     def probe() = Similarity.probeSemStore(spark, path, probeBatch,
         "vec_id", "embedding", 49L, 400L, 48L, "graft")
       .collect().map(_.toString).sorted.toSeq
-    println(s"[stress] files pre-fold: ${fileCount()}")
+    println(s"[stress] files pre-fold: ${fileCount(path)}")
     var pre: Seq[String] = Seq.empty
     time("probe 200 vecs (pre-fold)") { pre = probe(); pre.size.toLong }
     time(s"foldSemStore(upTo=$nb)") {
       SemStream.foldSemStore(spark, path, upTo = nb.toLong); 1L
     }
-    println(s"[stress] files post-fold: ${fileCount()}")
+    println(s"[stress] files post-fold: ${fileCount(path)}")
     time("probe 200 vecs (post-fold)") {
       val post = probe()
       require(post == pre, "fold changed the probe")
       post.size.toLong
     }
-    }
-    if (mode == "curstream") {
+  }
+
+  private def curstream(c: Ctx): Unit = {
+    import c._
     // Continuous-curation storm: the q149/q150 loop at a day's cadence.
     // `factor` crawl batches are served+absorbed in sequence against a
     // growing store (docs AND vectors replicated with perturbed text so
@@ -1182,20 +1277,14 @@ object Stress {
     // this measures the COST story those laws ride on.
     import graft.streaming.CurationStream
     val nb = math.max(4, factor)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft-stress-curstream-$nb"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
+    val path = scratch(s"curstream-$nb")
     val nBase = 5000L
     val d0 = Tables.documents(spark, "/root/testdata/sf0.1")
     val e0 = Tables.embeddings(spark, "/root/testdata/sf0.1")
-    val reps = spark.range((nb + 2) / 4 + 1).select(col("id").as("__rep"))
-    val bigD = d0.crossJoin(reps)
-      .select((col("doc_id") + col("__rep") * nBase).as("doc_id"),
-        col("source"), col("lang"),
-        concat(col("text"), lit(" copytag"), col("__rep")).as("text"))
+    val reps = (nb + 2) / 4 + 1
+    val bigD = replicas(d0.selectExpr(curCols: _*), reps, nBase)
       .localCheckpoint(true)
-    val bigE = e0.crossJoin(reps)
-      .select((col("vec_id") + col("__rep") * nBase).as("doc_id"),
-        col("embedding"))
+    val bigE = replicas(e0.select("vec_id", "embedding"), reps, nBase)
       .localCheckpoint(true)
     val mod = nb + 2
     def dSlice(r: Int) = bigD.filter(pmod(col("doc_id"), lit(mod)) === r)
@@ -1216,22 +1305,18 @@ object Stress {
     (1 to nb).foreach { b =>
       time(f"serve+absorb batch $b%2d") { applyB(b, b.toLong); 1L }
     }
-    def fileCount(): Long = {
-      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
-      try { import scala.jdk.CollectionConverters._
-        s.iterator().asScala.count(java.nio.file.Files.isRegularFile(_)).toLong
-      } finally s.close()
-    }
-    println(s"[stress] files pre-fold: ${fileCount()}")
+    println(s"[stress] files pre-fold: ${fileCount(path)}")
     time(s"foldStore(upTo=$nb)") {
       CurationStream.foldStore(spark, path, upTo = nb.toLong); 1L
     }
-    println(s"[stress] files post-fold: ${fileCount()}")
+    println(s"[stress] files post-fold: ${fileCount(path)}")
     time("serve+absorb post-fold batch") {
       applyB(nb + 1, nb + 1L); 1L
     }
-    }
-    if (mode == "curbloom") {
+  }
+
+  private def curbloom(c: Ctx): Unit = {
+    import c._
     // Hash-log bloom storm — the r15 serve-path claim: with history
     // ≥20x the batch, the exact-dedup stage must stop moving the hash
     // log. Seed a store whose hash log is `factor`×5000 DISTINCT
@@ -1249,16 +1334,11 @@ object Stress {
     import graft.streaming.CurationStream
     import graft.operators.Curation
     val nb = math.max(40, factor)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft-stress-curbloom-$factor"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
+    val path = scratch(s"curbloom-$factor")
     val nBase = 5000L
     val d0 = Tables.documents(spark, "/root/testdata/sf0.1")
     val e0 = Tables.embeddings(spark, "/root/testdata/sf0.1")
-    val reps = spark.range(nb + 1).select(col("id").as("__rep"))
-    val bigD = d0.crossJoin(reps)
-      .select((col("doc_id") + col("__rep") * nBase).as("doc_id"),
-        col("source"), col("lang"),
-        concat(col("text"), lit(" copytag"), col("__rep")).as("text"))
+    val bigD = replicas(d0.selectExpr(curCols: _*), nb + 1, nBase)
     // the probe batch is SMALL (500 docs, fresh rep nb so its texts
     // are new): every non-log stage then shuffles KBs, and the
     // plain-vs-bloom delta IS the log's movement
@@ -1280,57 +1360,32 @@ object Stress {
     val logRows = spark.read.parquet(s"$path/hashes").count()
     println(s"[stress] curbloom: hash log $logRows rows " +
       s"(${logRows / 500}x the 500-doc probe batch)")
-    val shuffled = new java.util.concurrent.atomic.AtomicLong
-    val meter = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          shuffled.addAndGet(t.taskMetrics.shuffleReadMetrics.totalBytesRead): Unit
-    }
-    def meteredServe(name: String): (Double, Long, Long) = {
-      spark.sparkContext.addSparkListener(meter)
-      shuffled.set(0L)
-      val t0 = System.nanoTime()
-      val rows = Curation.serveBatch(spark, path, dProbe, eProbe,
-        "doc_id", "embedding", "lang", "source", "text",
-        49L, 400L, 48L, "graft", batchCut = Some(1L),
-        bloomMinItems = 0L).count()
-      val secs = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(2000) // storm-grade settle for the async listener bus
-      spark.sparkContext.removeSparkListener(meter)
-      val bytes = shuffled.get()
-      println(f"[stress] curbloom serve/$name%-6s $secs%6.1f s  " +
-        f"shuffleRead=${bytes / 1048576.0}%9.2f MiB  ($rows rows)")
-      (secs, bytes, rows)
-    }
+    def meteredServe(name: String): (Long, Long) =
+      shuffleMetered("curbloom serve", name) {
+        Curation.serveBatch(spark, path, dProbe, eProbe,
+          "doc_id", "embedding", "lang", "source", "text",
+          49L, 400L, 48L, "graft", batchCut = Some(1L),
+          bloomMinItems = 0L).count()
+      }(identity)
     // the audit shares hashFreshKeepers with serve (round-16: the r15
     // verdict found auditBatch re-shuffling the full log on every
     // audited batch) — meter it through the same harness so the shared
     // access path is MEASURED shared, not just code-shared
-    def meteredAudit(name: String): (Double, Long, Long) = {
-      spark.sparkContext.addSparkListener(meter)
-      shuffled.set(0L)
-      val t0 = System.nanoTime()
-      val rows = Curation.auditBatch(spark, path, dProbe, eProbe,
-        "doc_id", "embedding", "lang", "text",
-        49L, 400L, 48L, "graft", batchCut = Some(1L),
-        bloomMinItems = 0L).count()
-      val secs = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(2000)
-      spark.sparkContext.removeSparkListener(meter)
-      val bytes = shuffled.get()
-      println(f"[stress] curbloom audit/$name%-6s $secs%6.1f s  " +
-        f"shuffleRead=${bytes / 1048576.0}%9.2f MiB  ($rows rows)")
-      (secs, bytes, rows)
-    }
+    def meteredAudit(name: String): (Long, Long) =
+      shuffleMetered("curbloom audit", name) {
+        Curation.auditBatch(spark, path, dProbe, eProbe,
+          "doc_id", "embedding", "lang", "text",
+          49L, 400L, 48L, "graft", batchCut = Some(1L),
+          bloomMinItems = 0L).count()
+      }(identity)
     meteredServe("warmup") // order-bias guard: first serve pays model
                            // reads + codegen for BOTH paths' shared tail
-    val (_, bytesBloom, rowsBloom) = meteredServe("bloom")
-    val (_, aBytesBloom, aRowsBloom) = meteredAudit("bloom")
+    val (rowsBloom, bytesBloom) = meteredServe("bloom")
+    val (aRowsBloom, aBytesBloom) = meteredAudit("bloom")
     org.apache.commons.io.FileUtils
       .deleteDirectory(new java.io.File(s"$path/hashbloom"))
-    val (_, bytesPlain, rowsPlain) = meteredServe("plain")
-    val (_, aBytesPlain, aRowsPlain) = meteredAudit("plain")
+    val (rowsPlain, bytesPlain) = meteredServe("plain")
+    val (aRowsPlain, aBytesPlain) = meteredAudit("plain")
     require(rowsBloom == rowsPlain,
       s"bloom path changed the serve: $rowsBloom vs $rowsPlain rows")
     require(aRowsBloom == aRowsPlain,
@@ -1343,8 +1398,10 @@ object Stress {
       f"${aBytesPlain / math.max(aBytesBloom, 1L).toDouble}%.1fx " +
       f"(plain ${aBytesPlain / 1048576.0}%.2f MiB -> bloom " +
       f"${aBytesBloom / 1048576.0}%.2f MiB)")
-    }
-    if (mode == "spans") {
+  }
+
+  private def spans(c: Ctx): Unit = {
+    import c._
     // Span-dedup storm: (a) the full-corpus report/cut at factor× — the
     // gram exchange is the cost, it must scale with corpus tokens, not
     // pairs; (b) the incremental serve against a gram store ~factor×
@@ -1385,8 +1442,7 @@ object Stress {
     time(s"chunkContentDefined(${nb}x)") {
       TextOps.chunkContentDefined(hist, "doc_id", "text", 4, 16).count()
     }
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft-stress-spans-$nb"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
+    val path = scratch(s"spans-$nb")
     time(s"writeGramStore(${nb}x)") {
       SpanDedup.writeGramStore(spark, hist, "doc_id", "text", k = 8, path)
       spark.read.parquet(s"$path/grams").count()
@@ -1401,53 +1457,27 @@ object Stress {
       .localCheckpoint(true)
     println(s"[stress] spans: gram store $storeRows rows vs " +
       s"${probe.count()}-doc probe")
-    val shuffled = new java.util.concurrent.atomic.AtomicLong
-    val meter = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          shuffled.addAndGet(t.taskMetrics.shuffleReadMetrics.totalBytesRead): Unit
-    }
-    def meteredServe(name: String): (Long, Set[(Long, Long)]) = {
-      spark.sparkContext.addSparkListener(meter)
-      shuffled.set(0L)
-      val t0 = System.nanoTime()
-      val out = SpanDedup.serveSpanCut(spark, path, probe,
-          "doc_id", "text", k = 8)
-        .select("doc_id", "n_kept").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val secs = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(2000)
-      spark.sparkContext.removeSparkListener(meter)
-      println(f"[stress] spans serve/$name%-6s $secs%6.1f s  " +
-        f"shuffleRead=${shuffled.get() / 1048576.0}%9.2f MiB  (${out.size} rows)")
-      (shuffled.get(), out)
-    }
+    def kept(df: DataFrame): Set[(Long, Long)] = df.select("doc_id", "n_kept")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def meteredServe(name: String): (Set[(Long, Long)], Long) =
+      shuffleMetered("spans serve", name) {
+        kept(SpanDedup.serveSpanCut(spark, path, probe, "doc_id", "text", k = 8))
+      }(_.size.toLong)
     // the decontam serve shares the split (cutSpansAgainstStore) —
     // meter it through the same harness so the shared access path is
     // MEASURED shared, the curbloom-audit discipline
-    def meteredDecontam(name: String): (Long, Set[(Long, Long)]) = {
-      spark.sparkContext.addSparkListener(meter)
-      shuffled.set(0L)
-      val t0 = System.nanoTime()
-      val out = SpanDedup.cutSpansAgainstStore(spark, path, probe,
-          "doc_id", "text", k = 8)
-        .select("doc_id", "n_kept").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val secs = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(2000)
-      spark.sparkContext.removeSparkListener(meter)
-      println(f"[stress] spans decon/$name%-6s $secs%6.1f s  " +
-        f"shuffleRead=${shuffled.get() / 1048576.0}%9.2f MiB  (${out.size} rows)")
-      (shuffled.get(), out)
-    }
+    def meteredDecontam(name: String): (Set[(Long, Long)], Long) =
+      shuffleMetered("spans decon", name) {
+        kept(SpanDedup.cutSpansAgainstStore(spark, path, probe,
+          "doc_id", "text", k = 8))
+      }(_.size.toLong)
     meteredServe("warmup")
-    val (bytesBloom, outBloom) = meteredServe("bloom")
-    val (dBytesBloom, dOutBloom) = meteredDecontam("bloom")
+    val (outBloom, bytesBloom) = meteredServe("bloom")
+    val (dOutBloom, dBytesBloom) = meteredDecontam("bloom")
     org.apache.commons.io.FileUtils
       .deleteDirectory(new java.io.File(s"$path/grambloom"))
-    val (bytesPlain, outPlain) = meteredServe("plain")
-    val (dBytesPlain, dOutPlain) = meteredDecontam("plain")
+    val (outPlain, bytesPlain) = meteredServe("plain")
+    val (dOutPlain, dBytesPlain) = meteredDecontam("plain")
     require(outBloom == outPlain,
       s"bloom path changed the serve: ${outBloom.size} vs ${outPlain.size}")
     require(dOutBloom == dOutPlain,
@@ -1463,484 +1493,222 @@ object Stress {
       f"${dBytesPlain / math.max(dBytesBloom, 1L).toDouble}%.1fx " +
       f"(plain ${dBytesPlain / 1048576.0}%.2f MiB -> bloom " +
       f"${dBytesBloom / 1048576.0}%.2f MiB)")
-    }
-    if (mode == "spancrash") {
-    // Crash-kill storm for the REAL SpanStream.maintain query — the
-    // curcrash harness applied to continuous span dedup: child JVMs
-    // running the actual foreachBatch query are halt(137)'d at both
-    // crash windows (after the clean write; after gram absorption,
-    // both before the marker), restarted from the checkpoint, and the
-    // final store must equal the sequential no-crash control row for
-    // row. Batches share most grams with the b=0 seed (the copytag
-    // perturbation appends one token), so nearly every batch doc cuts
-    // hard against history — maximal absorption pressure on the
-    // redelivery fence.
-    import java.lang.management.ManagementFactory
-    import scala.jdk.CollectionConverters._
-    import graft.streaming.SpanStream
-    val nb = math.max(6, factor / 4)
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft-stress-spancrash-$factor"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    val (input, store, ctl, ckpt) =
-      (s"$root/input", s"$root/store", s"$root/control", s"$root/ckpt")
-    val nBase = 5000L
-    val d0 = Tables.documents(spark, "/root/testdata/sf0.1")
-    val reps = spark.range(nb + 1).select(col("id").as("__rep"))
-    val bigD = d0.crossJoin(reps)
-      .select((col("doc_id") + col("__rep") * nBase).as("doc_id"),
-        concat(col("text"), lit(" copytag"), col("__rep")).as("text"))
-      .localCheckpoint(true)
-    def dRep(r: Int) = bigD.filter(col("doc_id") >= r * nBase &&
-      col("doc_id") < (r + 1) * nBase)
-    val stamped = scala.collection.mutable.Set.empty[String]
-    (1 to nb).foreach { r =>
-      dRep(r).coalesce(1).write.mode("append").parquet(input)
-      stampBatchFiles(input, r, stamped)
-    }
-    SpanStream.init(dRep(0), "doc_id", "text", 8, ctl)
-    (1 to nb).foreach { b =>
-      SpanStream.applyBatch(dRep(b), "doc_id", "text", 8, ctl, b.toLong)
-    }
-    SpanStream.init(dRep(0), "doc_id", "text", 8, store)
-    val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    val jvmArgs = ManagementFactory.getRuntimeMXBean.getInputArguments
-      .asScala.toSeq
-    def runChild(poison: Option[(String, Long)]): Int = {
-      val cmd = Seq(javaBin) ++ jvmArgs ++
-        poison.toSeq.map { case (p, b) => s"-D$p=$b" } ++
-        Seq("-cp", System.getProperty("java.class.path"),
-          "graft.Stress", factor.toString, "spancrash-child",
-          input, store, ckpt)
-      val pb = new ProcessBuilder(cmd: _*).inheritIO()
-      pb.start().waitFor()
-    }
-    val kills = Seq(
-      ("graft.spans.crashAfterClean", 2L),
-      ("graft.spans.crashAfterAbsorb", (nb / 2).toLong),
-      ("graft.spans.crashAfterAbsorb", (nb - 1).toLong))
-    kills.foreach { case (p, b) =>
-      val rc = runChild(Some(p -> b))
-      println(s"[stress] spancrash: killed child at $p=$b (exit $rc)")
-      require(rc == 137, s"poisoned child exited $rc, expected halt 137")
-    }
-    val rcFinal = runChild(None)
-    require(rcFinal == 0, s"clean child exited $rcFinal")
-    def rowsOf(p: String, sub: String, cols: Seq[String]): Set[String] =
-      spark.read.parquet(s"$p/$sub")
-        .selectExpr(cols: _*).collect().map(_.toString).toSet
-    val diffs = Seq(
-      "clean" -> Seq("CAST(b AS LONG)", "doc_id", "clean_text", "n_kept"),
-      "grams" -> Seq("CAST(b AS LONG)", "__gh"))
-      .map { case (sub, cols) =>
-        val (a, c) = (rowsOf(store, sub, cols), rowsOf(ctl, sub, cols))
-        val d = (a diff c).size + (c diff a).size
-        println(s"[stress] spancrash: $sub rows stream=${a.size} " +
-          s"control=${c.size} diffed=$d")
-        d
-      }.sum
-    require(diffs == 0, s"crash-recovered store diverged: $diffs rows differ")
-    println(s"[stress] spancrash: ${kills.size} kills / ${kills.size} " +
-      s"recoveries / rows diffed = 0 over $nb batches")
-    }
-    if (mode == "spancrash-child") {
-    // child half: the REAL SpanStream.maintain over the file backlog
-    // until drained (or until the poison sysprop halts mid-batch)
-    import graft.streaming.SpanStream
-    val Seq(input, store, ckpt) = args.slice(2, 5).toSeq
-    val schema = spark.read.parquet(input).schema
-    val docsStream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(input)
-    val q = SpanStream.maintain(docsStream, "doc_id", "text", 8,
-      store, checkpoint = ckpt)
-    q.processAllAvailable()
-    q.stop()
-    }
-    if (mode == "phashcrash") {
-    // Crash-kill storm for the REAL PhashStream.maintain query — the
-    // spancrash harness on the media index: child JVMs are halt(137)'d
-    // after the verdict write and after hash absorption (both before
-    // the marker), restarted from the checkpoint, and the final store
-    // must equal the sequential no-crash control row for row. Each
-    // rep's payloads are one-token perturbations of the base corpus
-    // (near-identical planes), so most batch images dedup against
-    // history/absorbed keepers — maximal pressure on the fence.
-    import java.lang.management.ManagementFactory
-    import scala.jdk.CollectionConverters._
-    import graft.streaming.PhashStream
-    val nb = math.max(6, factor / 4)
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft-stress-phashcrash-$factor"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    val (input, store, ctl, ckpt) =
-      (s"$root/input", s"$root/store", s"$root/control", s"$root/ckpt")
-    val nBase = 5000L
-    val d0 = Tables.documents(spark, "/root/testdata/sf0.1")
-    val reps = spark.range(nb + 1).select(col("id").as("__rep"))
-    val bigD = d0.crossJoin(reps)
-      .select((col("doc_id") + col("__rep") * nBase).as("doc_id"),
-        concat(col("text"), lit(" copytag"), col("__rep")).as("text"))
-      .localCheckpoint(true)
-    def dRep(r: Int) = bigD.filter(col("doc_id") >= r * nBase &&
-      col("doc_id") < (r + 1) * nBase)
-    def mRep(r: Int) = graft.operators.Multimodal.asMediaTable(
-      dRep(r), "doc_id", "text", "image")
-    val stamped = scala.collection.mutable.Set.empty[String]
-    (1 to nb).foreach { r =>
-      dRep(r).coalesce(1).write.mode("append").parquet(input)
-      stampBatchFiles(input, r, stamped)
-    }
-    PhashStream.init(mRep(0), 64, ctl)
-    (1 to nb).foreach { b =>
-      PhashStream.applyBatch(mRep(b), 64, 3, ctl, b.toLong)
-    }
-    PhashStream.init(mRep(0), 64, store)
-    val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    val jvmArgs = ManagementFactory.getRuntimeMXBean.getInputArguments
-      .asScala.toSeq
-    def runChild(poison: Option[(String, Long)]): Int = {
-      val cmd = Seq(javaBin) ++ jvmArgs ++
-        poison.toSeq.map { case (p, b) => s"-D$p=$b" } ++
-        Seq("-cp", System.getProperty("java.class.path"),
-          "graft.Stress", factor.toString, "phashcrash-child",
-          input, store, ckpt)
-      val pb = new ProcessBuilder(cmd: _*).inheritIO()
-      pb.start().waitFor()
-    }
-    val kills = Seq(
-      ("graft.phash.crashAfterServe", 2L),
-      ("graft.phash.crashAfterAbsorb", (nb / 2).toLong),
-      ("graft.phash.crashAfterAbsorb", (nb - 1).toLong))
-    kills.foreach { case (p, b) =>
-      val rc = runChild(Some(p -> b))
-      println(s"[stress] phashcrash: killed child at $p=$b (exit $rc)")
-      require(rc == 137, s"poisoned child exited $rc, expected halt 137")
-    }
-    val rcFinal = runChild(None)
-    require(rcFinal == 0, s"clean child exited $rcFinal")
-    def rowsOf(p: String, sub: String, cols: Seq[String]): Set[String] =
-      spark.read.parquet(s"$p/$sub")
-        .selectExpr(cols: _*).collect().map(_.toString).toSet
-    val diffs = Seq(
-      "served" -> Seq("CAST(b AS LONG)", "media_id", "dup_of", "is_fresh"),
-      "phash" -> Seq("CAST(b AS LONG)", "media_id", "dhash"))
-      .map { case (sub, cols) =>
-        val (a, c) = (rowsOf(store, sub, cols), rowsOf(ctl, sub, cols))
-        val d = (a diff c).size + (c diff a).size
-        println(s"[stress] phashcrash: $sub rows stream=${a.size} " +
-          s"control=${c.size} diffed=$d")
-        d
-      }.sum
-    require(diffs == 0, s"crash-recovered store diverged: $diffs rows differ")
-    println(s"[stress] phashcrash: ${kills.size} kills / ${kills.size} " +
-      s"recoveries / rows diffed = 0 over $nb batches")
-    }
-    if (mode == "phashcrash-child") {
-    import graft.streaming.PhashStream
-    val Seq(input, store, ckpt) = args.slice(2, 5).toSeq
-    val schema = spark.read.parquet(input).schema
-    val rowsStream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(input)
-    val q = PhashStream.maintain(rowsStream, "doc_id", "text", "image",
-      64, 3, store, checkpoint = ckpt)
-    q.processAllAvailable()
-    q.stop()
-    }
-    if (mode == "simhashcrash") {
-    // Crash-kill storm for the REAL SimhashStream.maintain query — the
-    // phashcrash harness on the text fingerprint index: child JVMs are
-    // halt(137)'d after the verdict write and after fingerprint
-    // absorption (both before the marker), restarted from the
-    // checkpoint, and the final store must equal the sequential
-    // no-crash control row for row. Each rep's payloads are one-token
-    // perturbations of the base corpus (near-identical fingerprints),
-    // so most batch docs dedup against history/absorbed keepers —
-    // maximal pressure on the fence.
-    import java.lang.management.ManagementFactory
-    import scala.jdk.CollectionConverters._
-    import graft.streaming.SimhashStream
-    val nb = math.max(6, factor / 4)
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft-stress-simhashcrash-$factor"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    val (input, store, ctl, ckpt) =
-      (s"$root/input", s"$root/store", s"$root/control", s"$root/ckpt")
-    val nBase = 5000L
-    val d0 = Tables.documents(spark, "/root/testdata/sf0.1")
-    val reps = spark.range(nb + 1).select(col("id").as("__rep"))
-    val bigD = d0.crossJoin(reps)
-      .select((col("doc_id") + col("__rep") * nBase).as("doc_id"),
-        concat(col("text"), lit(" copytag"), col("__rep")).as("text"))
-      .localCheckpoint(true)
-    def dRep(r: Int) = bigD.filter(col("doc_id") >= r * nBase &&
-      col("doc_id") < (r + 1) * nBase)
-    val stamped = scala.collection.mutable.Set.empty[String]
-    (1 to nb).foreach { r =>
-      dRep(r).coalesce(1).write.mode("append").parquet(input)
-      stampBatchFiles(input, r, stamped)
-    }
-    SimhashStream.init(dRep(0), "doc_id", "text", ctl)
-    (1 to nb).foreach { b =>
-      SimhashStream.applyBatch(dRep(b), "doc_id", "text", 3, ctl, b.toLong)
-    }
-    SimhashStream.init(dRep(0), "doc_id", "text", store)
-    val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    val jvmArgs = ManagementFactory.getRuntimeMXBean.getInputArguments
-      .asScala.toSeq
-    def runChild(poison: Option[(String, Long)]): Int = {
-      val cmd = Seq(javaBin) ++ jvmArgs ++
-        poison.toSeq.map { case (p, b) => s"-D$p=$b" } ++
-        Seq("-cp", System.getProperty("java.class.path"),
-          "graft.Stress", factor.toString, "simhashcrash-child",
-          input, store, ckpt)
-      val pb = new ProcessBuilder(cmd: _*).inheritIO()
-      pb.start().waitFor()
-    }
-    val kills = Seq(
-      ("graft.simhash.crashAfterServe", 2L),
-      ("graft.simhash.crashAfterAbsorb", (nb / 2).toLong),
-      ("graft.simhash.crashAfterAbsorb", (nb - 1).toLong))
-    kills.foreach { case (p, b) =>
-      val rc = runChild(Some(p -> b))
-      println(s"[stress] simhashcrash: killed child at $p=$b (exit $rc)")
-      require(rc == 137, s"poisoned child exited $rc, expected halt 137")
-    }
-    val rcFinal = runChild(None)
-    require(rcFinal == 0, s"clean child exited $rcFinal")
-    def rowsOf(p: String, sub: String, cols: Seq[String]): Set[String] =
-      spark.read.parquet(s"$p/$sub")
-        .selectExpr(cols: _*).collect().map(_.toString).toSet
-    val diffs = Seq(
-      "served" -> Seq("CAST(b AS LONG)", "doc_id", "dup_of", "is_fresh"),
-      "simhash" -> Seq("CAST(b AS LONG)", "doc_id", "simhash"))
-      .map { case (sub, cols) =>
-        val (a, c) = (rowsOf(store, sub, cols), rowsOf(ctl, sub, cols))
-        val d = (a diff c).size + (c diff a).size
-        println(s"[stress] simhashcrash: $sub rows stream=${a.size} " +
-          s"control=${c.size} diffed=$d")
-        d
-      }.sum
-    require(diffs == 0, s"crash-recovered store diverged: $diffs rows differ")
-    println(s"[stress] simhashcrash: ${kills.size} kills / ${kills.size} " +
-      s"recoveries / rows diffed = 0 over $nb batches")
-    }
-    if (mode == "simhashcrash-child") {
-    import graft.streaming.SimhashStream
-    val Seq(input, store, ckpt) = args.slice(2, 5).toSeq
-    val schema = spark.read.parquet(input).schema
-    val rowsStream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(input)
-    val q = SimhashStream.maintain(rowsStream, "doc_id", "text",
-      3, store, checkpoint = ckpt)
-    q.processAllAvailable()
-    q.stop()
-    }
-    if (mode == "segdfcrash") {
-    // Crash-kill storm for the REAL SegDfStream.maintain query — the
-    // kill harness on the COUNT store (the one store whose naive
-    // crash-rerun would DOUBLE-COUNT rather than just duplicate): child
-    // JVMs are halt(137)'d after the verdict write and after count
-    // absorption (both before the marker), restarted from the
-    // checkpoint, and the final store must equal the sequential
-    // no-crash control row for row — counts included, which is what
-    // certifies the (segment, src) dedup discipline under redelivery.
-    import java.lang.management.ManagementFactory
-    import scala.jdk.CollectionConverters._
-    import graft.streaming.SegDfStream
-    val nb = math.max(6, factor / 4)
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft-stress-segdfcrash-$factor"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    val (input, store, ctl, ckpt) =
-      (s"$root/input", s"$root/store", s"$root/control", s"$root/ckpt")
-    val nBase = 5000L
-    val d0 = Tables.documents(spark, "/root/testdata/sf0.1")
-    val reps = spark.range(nb + 1).select(col("id").as("__rep"))
-    // NO copytag perturbation on the text: identical segment payloads
-    // across reps mean every batch re-raises the same segment dfs —
-    // maximal pressure on the count accumulation + redelivery fence
-    val bigD = d0.crossJoin(reps)
-      .select((col("doc_id") + col("__rep") * nBase).as("doc_id"),
-        col("text"))
-      .localCheckpoint(true)
-    def dRep(r: Int) = bigD.filter(col("doc_id") >= r * nBase &&
-      col("doc_id") < (r + 1) * nBase)
-    val stamped = scala.collection.mutable.Set.empty[String]
-    (1 to nb).foreach { r =>
-      dRep(r).coalesce(1).write.mode("append").parquet(input)
-      stampBatchFiles(input, r, stamped)
-    }
-    SegDfStream.init(dRep(0), "doc_id", "text", 10, ctl)
-    (1 to nb).foreach { b =>
-      SegDfStream.applyBatch(dRep(b), "doc_id", "text", 10, 2, ctl, b.toLong)
-    }
-    SegDfStream.init(dRep(0), "doc_id", "text", 10, store)
-    val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    val jvmArgs = ManagementFactory.getRuntimeMXBean.getInputArguments
-      .asScala.toSeq
-    def runChild(poison: Option[(String, Long)]): Int = {
-      val cmd = Seq(javaBin) ++ jvmArgs ++
-        poison.toSeq.map { case (p, b) => s"-D$p=$b" } ++
-        Seq("-cp", System.getProperty("java.class.path"),
-          "graft.Stress", factor.toString, "segdfcrash-child",
-          input, store, ckpt)
-      val pb = new ProcessBuilder(cmd: _*).inheritIO()
-      pb.start().waitFor()
-    }
-    val kills = Seq(
-      ("graft.segdf.crashAfterServe", 2L),
-      ("graft.segdf.crashAfterAbsorb", (nb / 2).toLong),
-      ("graft.segdf.crashAfterAbsorb", (nb - 1).toLong))
-    kills.foreach { case (p, b) =>
-      val rc = runChild(Some(p -> b))
-      println(s"[stress] segdfcrash: killed child at $p=$b (exit $rc)")
-      require(rc == 137, s"poisoned child exited $rc, expected halt 137")
-    }
-    val rcFinal = runChild(None)
-    require(rcFinal == 0, s"clean child exited $rcFinal")
-    def rowsOf(p: String, sub: String, cols: Seq[String]): Set[String] =
-      spark.read.parquet(s"$p/$sub")
-        .selectExpr(cols: _*).collect().map(_.toString).toSet
-    val diffs = Seq(
-      "served" -> Seq("CAST(b AS LONG)", "doc_id", "clean_text",
-        "n_kept_segments", "n_dropped_segments"),
-      "segdf" -> Seq("__seg", "df", "CAST(src AS LONG)"))
-      .map { case (sub, cols) =>
-        val (a, c) = (rowsOf(store, sub, cols), rowsOf(ctl, sub, cols))
-        val d = (a diff c).size + (c diff a).size
-        println(s"[stress] segdfcrash: $sub rows stream=${a.size} " +
-          s"control=${c.size} diffed=$d")
-        d
-      }.sum
-    require(diffs == 0, s"crash-recovered store diverged: $diffs rows differ")
-    println(s"[stress] segdfcrash: ${kills.size} kills / ${kills.size} " +
-      s"recoveries / rows diffed = 0 over $nb batches")
-    }
-    if (mode == "segdfcrash-child") {
-    import graft.streaming.SegDfStream
-    val Seq(input, store, ckpt) = args.slice(2, 5).toSeq
-    val schema = spark.read.parquet(input).schema
-    val rowsStream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(input)
-    val q = SegDfStream.maintain(rowsStream, "doc_id", "text",
-      10, 2, store, checkpoint = ckpt)
-    q.processAllAvailable()
-    q.stop()
-    }
-    if (mode == "curcrash") {
-    // Crash-kill storm for the REAL CurationStream.maintain query (r15
-    // verdict #7): the redelivery laws are spec-pinned at spec scale by
-    // calling applyBatch directly — this kills the ACTUAL JVM running
-    // the foreachBatch query at the two worst-ordered points (after the
-    // curated write; after absorption, both before the marker), restarts
-    // from the checkpoint, and asserts the final store converges to the
-    // sequential no-crash control row for row. Child JVMs are forked
-    // with the parent's own classpath and JVM flags; the poison is a
-    // sysprop read at CurationStream's documented crash-injection
-    // points; kill = Runtime.halt(137), so no shutdown hook can tidy up.
-    import java.lang.management.ManagementFactory
-    import scala.jdk.CollectionConverters._
-    import graft.streaming.CurationStream
-    val nb = math.max(6, factor / 4)
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft-stress-curcrash-$factor"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+  }
+
+  // ------------------------------------------------------ crash storms
+
+  /** The skeleton every crash-kill storm shares: `nb` rep slices of the
+    * sf0.1 documents (rep r = ids shifted by r·5000; with embeddings for
+    * the curation stores) are written to `input` one parquet file per
+    * batch; child JVMs — this main, mode `<name>-child`, forked with the
+    * parent's own classpath and JVM flags — run the REAL maintain query
+    * over that backlog, are halt(137)'d at the poison sysprop's crash
+    * window (so no shutdown hook can tidy up) and restarted from the
+    * checkpoint; the recovered store is then diffed row for row against
+    * a sequential no-crash control. */
+  private final class CrashRig(c: Ctx, name: String, docCols: Seq[String],
+                               tag: Boolean, withEmb: Boolean) {
+    import c.spark
+    val nb = math.max(6, c.factor / 4)
+    val root = c.scratch(s"$name-${c.factor}")
     val (input, store, ctl, ckpt) =
       (s"$root/input", s"$root/store", s"$root/control", s"$root/ckpt")
     val nBase = 5000L
     val d0 = Tables.documents(spark, "/root/testdata/sf0.1")
     val e0 = Tables.embeddings(spark, "/root/testdata/sf0.1")
-    val reps = spark.range(nb + 1).select(col("id").as("__rep"))
-    val bigD = d0.crossJoin(reps)
-      .select((col("doc_id") + col("__rep") * nBase).as("doc_id"),
-        col("source"), col("lang"),
-        concat(col("text"), lit(" copytag"), col("__rep")).as("text"))
+    private val bigD = replicas(d0.selectExpr(docCols: _*), nb + 1, nBase, tag)
       .localCheckpoint(true)
-    val bigE = e0.crossJoin(reps)
-      .select((col("vec_id") + col("__rep") * nBase).as("doc_id"),
-        col("embedding"))
+    private lazy val bigE = replicas(e0.select("vec_id", "embedding"), nb + 1, nBase)
       .localCheckpoint(true)
-    def dRep(r: Int) = bigD.filter(col("doc_id") >= r * nBase &&
+    def dRep(r: Int): DataFrame = bigD.filter(col("doc_id") >= r * nBase &&
       col("doc_id") < (r + 1) * nBase)
-    def eRep(r: Int) = bigE.filter(col("doc_id") >= r * nBase &&
+    def eRep(r: Int): DataFrame = bigE.filter(col("doc_id") >= r * nBase &&
       col("doc_id") < (r + 1) * nBase)
-    // one parquet file per batch, written sequentially (ascending
-    // mtimes ⇒ the file source delivers them in order, one per trigger)
-    val stamped = scala.collection.mutable.Set.empty[String]
-    (1 to nb).foreach { r =>
-      dRep(r).join(eRep(r), Seq("doc_id"))
+
+    /** One parquet file per batch, written sequentially and mtime-stamped
+      * (see [[stampBatchFiles]]), so the file source delivers them in
+      * order, one per trigger. */
+    private val stamped = scala.collection.mutable.Set.empty[String]
+    def writeBatches(rs: Range): Unit = rs.foreach { r =>
+      val rows = if (!withEmb) dRep(r) else dRep(r).join(eRep(r), Seq("doc_id"))
         .select("doc_id", "source", "lang", "text", "embedding")
-        .coalesce(1).write.mode("append").parquet(input)
+      rows.coalesce(1).write.mode("append").parquet(input)
       stampBatchFiles(input, r, stamped)
     }
-    // no-crash control: the sequential serve+absorb loop
-    def initStore(p: String): Unit =
-      CurationStream.init(dRep(0), eRep(0), "doc_id", "embedding",
-        "lang", "text", k = 16, iters = 2, numMerges = 32,
-        maxWords = 100000, dsirTarget = col("source").isin("src0", "src1"),
-        dsirBuckets = 256, path = p, seed = "graft")
-    initStore(ctl)
-    (1 to nb).foreach { b =>
-      CurationStream.applyBatch(dRep(b), eRep(b), "doc_id", "embedding",
-        "lang", "source", "text", ctl, 49L, 400L, 48L, "graft", b.toLong)
-    }
-    initStore(store)
-    val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    val jvmArgs = ManagementFactory.getRuntimeMXBean.getInputArguments
-      .asScala.toSeq
-    def runChild(poison: Option[(String, Long)]): Int = {
-      val cmd = Seq(javaBin) ++ jvmArgs ++
+
+    /** Runs one child JVM to completion and returns its exit code. */
+    def runChild(poison: Option[(String, Long)], extra: String*): Int = {
+      import scala.jdk.CollectionConverters._
+      val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+        .getInputArguments.asScala.toSeq
+      val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++ jvmArgs ++
         poison.toSeq.map { case (p, b) => s"-D$p=$b" } ++
         Seq("-cp", System.getProperty("java.class.path"),
-          "graft.Stress", factor.toString, "curcrash-child",
-          input, store, ckpt)
-      val pb = new ProcessBuilder(cmd: _*).inheritIO()
-      pb.start().waitFor()
+          "graft.Stress", c.factor.toString, s"$name-child",
+          input, store, ckpt) ++ extra
+      new ProcessBuilder(cmd: _*).inheritIO().start().waitFor()
     }
-    // kills straddle the run: early, middle, late; both crash points
-    val kills = Seq(
-      ("graft.curation.crashAfterCurated", 2L),
-      ("graft.curation.crashAfterAbsorb", (nb / 2).toLong),
-      ("graft.curation.crashAfterAbsorb", (nb - 1).toLong))
-    kills.foreach { case (p, b) =>
-      val rc = runChild(Some(p -> b))
-      println(s"[stress] curcrash: killed child at $p=$b (exit $rc)")
+
+    /** A poisoned child must die by the injected halt. */
+    def kill(what: String, poison: (String, Long), extra: String*): Unit = {
+      val rc = runChild(Some(poison), extra: _*)
+      println(s"[stress] $name: killed $what (exit $rc)")
       require(rc == 137, s"poisoned child exited $rc, expected halt 137")
     }
+
+    def rowsAt(path: String, cols: Seq[String]): Set[String] =
+      spark.read.parquet(path).selectExpr(cols: _*).collect().map(_.toString).toSet
+
+    /** Rows in exactly one of stream/control, reported per artifact. */
+    def diffed(label: String, stream: Set[String], control: Set[String]): Int = {
+      val d = (stream diff control).size + (control diff stream).size
+      println(s"[stress] $name: $label rows stream=${stream.size} " +
+        s"control=${control.size} diffed=$d")
+      d
+    }
+  }
+
+  /** What one crash storm supplies to the shared harness: its corpus
+    * shape, control init/apply, the maintain query its child runs, its
+    * two crash sysprops (the first fires at batch 2, the absorb one at
+    * batches nb/2 and nb−1) and the columns it diffs per artifact. */
+  private final case class Crash(
+      docCols: Seq[String], tag: Boolean, withEmb: Boolean,
+      init: (CrashRig, String) => Unit,
+      applyBatch: (CrashRig, Int, String) => Unit,
+      maintain: (DataFrame, String, String) => StreamingQuery,
+      firstKill: String, absorbKill: String,
+      artifacts: Seq[(String, Seq[String])])
+
+  private def crashStorm(name: String, s: Crash)(c: Ctx): Unit = {
+    val rig = new CrashRig(c, name, s.docCols, s.tag, s.withEmb)
+    import rig._
+    writeBatches(1 to nb)
+    s.init(rig, ctl)
+    (1 to nb).foreach(b => s.applyBatch(rig, b, ctl))
+    s.init(rig, store)
+    // kills straddle the run: early, middle, late; both crash points
+    val kills = Seq((s.firstKill, 2L), (s.absorbKill, (nb / 2).toLong),
+      (s.absorbKill, (nb - 1).toLong))
+    kills.foreach { case (p, b) => kill(s"child at $p=$b", p -> b) }
     val rcFinal = runChild(None)
     require(rcFinal == 0, s"clean child exited $rcFinal")
     // convergence: every artifact the serve path and the consumer read
     // must equal the no-crash control row for row
-    def rowsOf(p: String, sub: String, cols: Seq[String]): Set[String] =
-      spark.read.parquet(s"$p/$sub")
-        .selectExpr(cols: _*).collect().map(_.toString).toSet
-    val diffs = Seq(
-      "curated" -> Seq("CAST(b AS LONG)", "doc_id", "source", "lang",
-        "cluster", "bpe_tokens", "dsir_score"),
-      "hashes" -> Seq("CAST(b AS LONG)", "content_hash"),
-      "sem/members" -> Seq("CAST(b AS LONG)", "id", "CAST(cluster AS INT)"))
-      .map { case (sub, cols) =>
-        val (a, c) = (rowsOf(store, sub, cols), rowsOf(ctl, sub, cols))
-        val d = (a diff c).size + (c diff a).size
-        println(s"[stress] curcrash: $sub rows stream=${a.size} " +
-          s"control=${c.size} diffed=$d")
-        d
-      }.sum
+    val diffs = s.artifacts.map { case (sub, cols) =>
+      diffed(sub, rowsAt(s"$store/$sub", cols), rowsAt(s"$ctl/$sub", cols))
+    }.sum
     require(diffs == 0, s"crash-recovered store diverged: $diffs rows differ")
-    println(s"[stress] curcrash: ${kills.size} kills / ${kills.size} " +
+    println(s"[stress] $name: ${kills.size} kills / ${kills.size} " +
       s"recoveries / rows diffed = 0 over $nb batches")
-    }
-    if (mode == "curcrash-child") {
-    // child half of the curcrash storm: runs the REAL maintain query
-    // over the file-source backlog until drained (or until the poison
-    // sysprop halts the JVM mid-batch), then exits 0
-    import graft.streaming.CurationStream
-    val Seq(input, store, ckpt) = args.slice(2, 5).toSeq
-    val schema = spark.read.parquet(input).schema
-    val docsStream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(input)
-    val q = CurationStream.maintain(docsStream, "doc_id", "embedding",
-      "lang", "source", "text", store, 49L, 400L, 48L, "graft",
-      checkpoint = ckpt)
+  }
+
+  /** Child half of a crash storm: the REAL maintain query over the file
+    * backlog until drained (or until the poison sysprop halts the JVM
+    * mid-batch), then exit 0. */
+  private def crashChild(s: Crash)(c: Ctx): Unit = {
+    val Seq(input, store, ckpt) = c.args.slice(2, 5)
+    val q = s.maintain(c.batchStream(input), store, ckpt)
     q.processAllAvailable()
     q.stop()
-    }
-    if (mode == "gatecrash") {
+  }
+
+  private val textCols = Seq("doc_id", "text")
+  private val curCols = Seq("doc_id", "source", "lang", "text")
+
+  /** Curation store init and batch apply, shared by curcrash and
+    * gatecrash's control. */
+  private def curInit(d: DataFrame, e: DataFrame, path: String): Unit = {
+    import graft.streaming.CurationStream
+    CurationStream.init(d, e, "doc_id", "embedding",
+      "lang", "text", k = 16, iters = 2, numMerges = 32,
+      maxWords = 100000, dsirTarget = col("source").isin("src0", "src1"),
+      dsirBuckets = 256, path = path, seed = "graft")
+  }
+  private def curApply(rig: CrashRig, b: Int, path: String): Unit =
+    graft.streaming.CurationStream.applyBatch(rig.dRep(b), rig.eRep(b),
+      "doc_id", "embedding", "lang", "source", "text", path,
+      49L, 400L, 48L, "graft", b.toLong)
+  private val curArtifacts = Seq(
+    "curated" -> Seq("CAST(b AS LONG)", "doc_id", "source", "lang",
+      "cluster", "bpe_tokens", "dsir_score"),
+    "hashes" -> Seq("CAST(b AS LONG)", "content_hash"),
+    "sem/members" -> Seq("CAST(b AS LONG)", "id", "CAST(cluster AS INT)"))
+
+  private lazy val crashStorms: Seq[(String, Crash)] = {
+    import graft.streaming._
+    def media(rig: CrashRig, r: Int) = graft.operators.Multimodal
+      .asMediaTable(rig.dRep(r), "doc_id", "text", "image")
+    Seq(
+      // Span dedup: batches share most grams with the b=0 seed (the
+      // copytag perturbation appends one token), so nearly every batch
+      // doc cuts hard against history — maximal absorption pressure on
+      // the redelivery fence. Kills: after the clean write; after gram
+      // absorption, both before the marker.
+      "spancrash" -> Crash(textCols, tag = true, withEmb = false,
+        (rig, p) => SpanStream.init(rig.dRep(0), "doc_id", "text", 8, p),
+        (rig, b, p) => SpanStream.applyBatch(rig.dRep(b), "doc_id", "text",
+          8, p, b.toLong),
+        (in, store, ckpt) => SpanStream.maintain(in, "doc_id", "text", 8,
+          store, checkpoint = ckpt),
+        "graft.spans.crashAfterClean", "graft.spans.crashAfterAbsorb",
+        Seq("clean" -> Seq("CAST(b AS LONG)", "doc_id", "clean_text", "n_kept"),
+          "grams" -> Seq("CAST(b AS LONG)", "__gh"))),
+      // The media index: each rep's payloads are one-token perturbations
+      // of the base corpus (near-identical planes), so most batch images
+      // dedup against history/absorbed keepers — maximal pressure on the
+      // fence. Kills: after the verdict write; after hash absorption.
+      "phashcrash" -> Crash(textCols, tag = true, withEmb = false,
+        (rig, p) => PhashStream.init(media(rig, 0), 64, p),
+        (rig, b, p) => PhashStream.applyBatch(media(rig, b), 64, 3, p, b.toLong),
+        (in, store, ckpt) => PhashStream.maintain(in, "doc_id", "text",
+          "image", 64, 3, store, checkpoint = ckpt),
+        "graft.phash.crashAfterServe", "graft.phash.crashAfterAbsorb",
+        Seq("served" -> Seq("CAST(b AS LONG)", "media_id", "dup_of", "is_fresh"),
+          "phash" -> Seq("CAST(b AS LONG)", "media_id", "dhash"))),
+      // The text fingerprint index, same shape as phashcrash:
+      // near-identical fingerprints, kills after the verdict write and
+      // after fingerprint absorption.
+      "simhashcrash" -> Crash(textCols, tag = true, withEmb = false,
+        (rig, p) => SimhashStream.init(rig.dRep(0), "doc_id", "text", p),
+        (rig, b, p) => SimhashStream.applyBatch(rig.dRep(b), "doc_id",
+          "text", 3, p, b.toLong),
+        (in, store, ckpt) => SimhashStream.maintain(in, "doc_id", "text",
+          3, store, checkpoint = ckpt),
+        "graft.simhash.crashAfterServe", "graft.simhash.crashAfterAbsorb",
+        Seq("served" -> Seq("CAST(b AS LONG)", "doc_id", "dup_of", "is_fresh"),
+          "simhash" -> Seq("CAST(b AS LONG)", "doc_id", "simhash"))),
+      // The COUNT store, the one store whose naive crash-rerun would
+      // DOUBLE-COUNT rather than just duplicate. NO copytag perturbation:
+      // identical segment payloads across reps mean every batch re-raises
+      // the same segment dfs — maximal pressure on the count
+      // accumulation + redelivery fence. Counts are diffed too, which is
+      // what certifies the (segment, src) dedup discipline.
+      "segdfcrash" -> Crash(textCols, tag = false, withEmb = false,
+        (rig, p) => SegDfStream.init(rig.dRep(0), "doc_id", "text", 10, p),
+        (rig, b, p) => SegDfStream.applyBatch(rig.dRep(b), "doc_id", "text",
+          10, 2, p, b.toLong),
+        (in, store, ckpt) => SegDfStream.maintain(in, "doc_id", "text",
+          10, 2, store, checkpoint = ckpt),
+        "graft.segdf.crashAfterServe", "graft.segdf.crashAfterAbsorb",
+        Seq("served" -> Seq("CAST(b AS LONG)", "doc_id", "clean_text",
+          "n_kept_segments", "n_dropped_segments"),
+          "segdf" -> Seq("__seg", "df", "CAST(src AS LONG)"))),
+      // Continuous curation (r15 verdict #7): the redelivery laws are
+      // spec-pinned at spec scale by calling applyBatch directly — this
+      // kills the ACTUAL JVM running the foreachBatch query at the two
+      // worst-ordered points (after the curated write; after absorption,
+      // both before the marker).
+      "curcrash" -> Crash(curCols, tag = true, withEmb = true,
+        (rig, p) => curInit(rig.dRep(0), rig.eRep(0), p), curApply,
+        (in, store, ckpt) => CurationStream.maintain(in, "doc_id",
+          "embedding", "lang", "source", "text", store, 49L, 400L, 48L,
+          "graft", checkpoint = ckpt),
+        "graft.curation.crashAfterCurated", "graft.curation.crashAfterAbsorb",
+        curArtifacts))
+  }
+
+  private def gatecrash(c: Ctx): Unit = {
     // Drift→swap-under-load storm (r16, verdict #6): a scheduler tick
     // invokes CurationEpochs.retrainIfDrifted WHILE the epoch-aware
     // maintain query is mid-backlog, and the tick's JVM is halt(137)'d
@@ -1954,39 +1722,11 @@ object Stress {
     // gate log must carry exactly the ticks that reached the append
     // (the pre-log kill leaves no row; the post-log kill's row is the
     // one reconcile completes).
-    import java.lang.management.ManagementFactory
-    import scala.jdk.CollectionConverters._
-    import graft.streaming.{CurationEpochs, CurationStream}
-    val nb = math.max(6, factor / 4)
+    import graft.streaming.CurationEpochs
+    import c.spark
+    val rig = new CrashRig(c, "gatecrash", curCols, tag = true, withEmb = true)
+    import rig._
     val mid = nb / 2 // segment A = batches 1..mid, B = mid+1..nb
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft-stress-gatecrash-$factor"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    val (input, store, ctl, ckpt) =
-      (s"$root/input", s"$root/store", s"$root/control", s"$root/ckpt")
-    val nBase = 5000L
-    val d0 = Tables.documents(spark, "/root/testdata/sf0.1")
-    val e0 = Tables.embeddings(spark, "/root/testdata/sf0.1")
-    val reps = spark.range(nb + 1).select(col("id").as("__rep"))
-    val bigD = d0.crossJoin(reps)
-      .select((col("doc_id") + col("__rep") * nBase).as("doc_id"),
-        col("source"), col("lang"),
-        concat(col("text"), lit(" copytag"), col("__rep")).as("text"))
-      .localCheckpoint(true)
-    val bigE = e0.crossJoin(reps)
-      .select((col("vec_id") + col("__rep") * nBase).as("doc_id"),
-        col("embedding"))
-      .localCheckpoint(true)
-    def dRep(r: Int) = bigD.filter(col("doc_id") >= r * nBase &&
-      col("doc_id") < (r + 1) * nBase)
-    def eRep(r: Int) = bigE.filter(col("doc_id") >= r * nBase &&
-      col("doc_id") < (r + 1) * nBase)
-    val stamped = scala.collection.mutable.Set.empty[String]
-    def writeSeg(rs: Range): Unit = rs.foreach { r =>
-      dRep(r).join(eRep(r), Seq("doc_id"))
-        .select("doc_id", "source", "lang", "text", "embedding")
-        .coalesce(1).write.mode("append").parquet(input)
-      stampBatchFiles(input, r, stamped)
-    }
     // the retrain corpus is FIXED (history ∪ the first two crawl
     // batches' docs — input slices, not store reads), so every tick
     // sees the same signal regardless of stream progress
@@ -1999,37 +1739,21 @@ object Stress {
       k = 16, iters = 2, numMerges = 32, maxWords = 100000,
       dsirTarget = col("source").isin("src0", "src1"),
       dsirBuckets = 256, root = r, epoch = 0L, seed = "graft")
-    writeSeg(1 to mid)
+    writeBatches(1 to mid)
     initE0(store)
-    val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    val jvmArgs = ManagementFactory.getRuntimeMXBean.getInputArguments
-      .asScala.toSeq
-    def runChild(gateSeq: Long, poison: Option[String]): Int = {
-      val cmd = Seq(javaBin) ++ jvmArgs ++
-        poison.toSeq.map(p => s"-D$p=$gateSeq") ++
-        Seq("-cp", System.getProperty("java.class.path"),
-          "graft.Stress", factor.toString, "gatecrash-child",
-          input, store, ckpt, gateSeq.toString)
-      val pb = new ProcessBuilder(cmd: _*).inheritIO()
-      pb.start().waitFor()
-    }
     // tick 1 dies after the candidate build (no log row, no pointer
     // move); tick 2 dies after its decision row lands (logged publish,
     // pointer unmoved); tick 3 must reconcile-and-complete the swap
-    val rc1 = runChild(1L, Some("graft.epochs.crashAfterBuild"))
-    println(s"[stress] gatecrash: killed tick 1 after build (exit $rc1)")
-    require(rc1 == 137, s"poisoned child exited $rc1, expected halt 137")
-    val rc2 = runChild(2L, Some("graft.epochs.crashAfterGate"))
-    println(s"[stress] gatecrash: killed tick 2 after gate row (exit $rc2)")
-    require(rc2 == 137, s"poisoned child exited $rc2, expected halt 137")
+    kill("tick 1 after build", "graft.epochs.crashAfterBuild" -> 1L, "1")
+    kill("tick 2 after gate row", "graft.epochs.crashAfterGate" -> 2L, "2")
     require(CurationEpochs.publishedEpochs(spark, store) == Seq(0L),
       "a killed tick moved the serving pointer")
-    val rc3 = runChild(3L, None)
+    val rc3 = runChild(None, "3")
     require(rc3 == 0, s"clean child exited $rc3")
     require(CurationEpochs.currentEpoch(spark, store) == 1L,
       "tick 3 failed to reconcile the logged publish")
-    writeSeg(mid + 1 to nb)
-    val rc4 = runChild(0L, None) // drain segment B, no tick
+    writeBatches(mid + 1 to nb)
+    val rc4 = runChild(None, "0") // drain segment B, no tick
     require(rc4 == 0, s"drain child exited $rc4")
     // gate log: exactly the ticks that reached the append — tick 2's
     // completed publish and tick 3's post-swap no-op (candidate ≡ the
@@ -2063,42 +1787,27 @@ object Stress {
     // convergence: an in-process control replays the SAME pin
     // assignment against independently-built epoch stores
     initE0(ctl)
-    CurationStream.init(corpusD, corpusE, "doc_id", "embedding", "lang",
-      "text", k = 16, iters = 2, numMerges = 32, maxWords = 100000,
-      dsirTarget = col("source").isin("src0", "src1"),
-      dsirBuckets = 256, path = CurationEpochs.epochPath(ctl, 1L),
-      seed = "graft")
+    curInit(corpusD, corpusE, CurationEpochs.epochPath(ctl, 1L))
     pins.foreach { case (b, e) =>
-      CurationStream.applyBatch(dRep(b.toInt), eRep(b.toInt), "doc_id",
-        "embedding", "lang", "source", "text",
-        CurationEpochs.epochPath(ctl, e), 49L, 400L, 48L, "graft", b)
+      curApply(rig, b.toInt, CurationEpochs.epochPath(ctl, e))
     }
     def rowsOf(r: String, e: Long, sub: String, cols: Seq[String]): Set[String] = {
       val p = s"${CurationEpochs.epochPath(r, e)}/$sub"
-      if (!new java.io.File(p).exists()) Set.empty
-      else spark.read.parquet(p).selectExpr(cols: _*)
-        .collect().map(_.toString).toSet
+      if (!new java.io.File(p).exists()) Set.empty else rowsAt(p, cols)
     }
     val diffs = (for {
       e <- Seq(0L, 1L)
-      (sub, cols) <- Seq(
-        "curated" -> Seq("CAST(b AS LONG)", "doc_id", "source", "lang",
-          "cluster", "bpe_tokens", "dsir_score"),
-        "hashes" -> Seq("CAST(b AS LONG)", "content_hash"),
-        "sem/members" -> Seq("CAST(b AS LONG)", "id", "CAST(cluster AS INT)"))
-    } yield {
-      val (a, c) = (rowsOf(store, e, sub, cols), rowsOf(ctl, e, sub, cols))
-      val d = (a diff c).size + (c diff a).size
-      println(s"[stress] gatecrash: e=$e $sub rows stream=${a.size} " +
-        s"control=${c.size} diffed=$d")
-      d
-    }).sum
+      (sub, cols) <- curArtifacts
+    } yield diffed(s"e=$e $sub", rowsOf(store, e, sub, cols),
+      rowsOf(ctl, e, sub, cols))).sum
     require(diffs == 0, s"gate-crashed store diverged: $diffs rows differ")
     println(s"[stress] gatecrash: 2 kills (both gate windows, maintain " +
       s"mid-backlog) / 2 recoveries / rows diffed = 0 over $nb batches, " +
       s"swap completed by reconcile")
-    }
-    if (mode == "epochfold") {
+  }
+
+  private def epochfold(c: Ctx): Unit = {
+    import c._
     // Epoch-retention storm (r15 verdict #5 storm row): a retrain
     // cadence leaves a CHAIN of superseded epochs — each a complete
     // store — and readCurated unions live curated output across all of
@@ -2109,23 +1818,16 @@ object Stress {
     // batches, then fold to keep=2.
     import graft.streaming.{CurationEpochs, CurationStream}
     val nEpochs = 5
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft-stress-epochfold-$factor"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = scratch(s"epochfold-$factor")
     val nBase = 2500L
     val d0 = Tables.documents(spark, "/root/testdata/sf0.1")
       .filter(col("doc_id") < nBase)
     val e0 = Tables.embeddings(spark, "/root/testdata/sf0.1")
       .filter(col("vec_id") < nBase)
     val nSlices = 2 * nEpochs + 2 // reps 1..2E are batches, 2E+1 the post-fold serve
-    val reps = spark.range(nSlices).select(col("id").as("__rep"))
-    val bigD = d0.crossJoin(reps)
-      .select((col("doc_id") + col("__rep") * nBase).as("doc_id"),
-        col("source"), col("lang"),
-        concat(col("text"), lit(" copytag"), col("__rep")).as("text"))
+    val bigD = replicas(d0.selectExpr(curCols: _*), nSlices, nBase)
       .localCheckpoint(true)
-    val bigE = e0.crossJoin(reps)
-      .select((col("vec_id") + col("__rep") * nBase).as("doc_id"),
-        col("embedding"))
+    val bigE = replicas(e0.select("vec_id", "embedding"), nSlices, nBase)
       .localCheckpoint(true)
     def dUpTo(r: Int) = bigD.filter(col("doc_id") < (r + 1) * nBase)
     def eUpTo(r: Int) = bigE.filter(col("doc_id") < (r + 1) * nBase)
@@ -2200,8 +1902,9 @@ object Stress {
       f"bytes ${by0 / 1048576.0}%.1f->${by1 / 1048576.0}%.1f MiB " +
       f"(${by0.toDouble / by1}%.1fx), read ${rSecs0}%.1f->${rSecs1}%.1f s, " +
       f"serve cadence intact after the fold")
-    }
-    if (mode == "gatecrash-child") {
+  }
+
+  private def gatecrashChild(c: Ctx): Unit = {
     // child half of the gatecrash storm: the REAL epoch-aware maintain
     // query over the file-source backlog, with a concurrent scheduler
     // tick (retrainIfDrifted) fired from a second thread once two
@@ -2210,23 +1913,15 @@ object Stress {
     // taking the in-flight micro-batch down with it. gateSeq 0 = drain
     // only, no tick.
     import graft.streaming.CurationEpochs
+    import c._
     val Seq(input, store, ckpt) = args.slice(2, 5).toSeq
     val gateSeq = args.lift(5).map(_.toLong).getOrElse(0L)
     val nBase = 5000L
     val d0 = Tables.documents(spark, "/root/testdata/sf0.1")
     val e0 = Tables.embeddings(spark, "/root/testdata/sf0.1")
-    val reps3 = spark.range(3).select(col("id").as("__rep"))
-    val corpusD = d0.crossJoin(reps3)
-      .select((col("doc_id") + col("__rep") * nBase).as("doc_id"),
-        col("source"), col("lang"),
-        concat(col("text"), lit(" copytag"), col("__rep")).as("text"))
-    val corpusE = e0.crossJoin(reps3)
-      .select((col("vec_id") + col("__rep") * nBase).as("doc_id"),
-        col("embedding"))
-    val schema = spark.read.parquet(input).schema
-    val docsStream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(input)
-    val q = CurationEpochs.maintain(docsStream, "doc_id", "embedding",
+    val corpusD = replicas(d0.selectExpr(curCols: _*), 3, nBase)
+    val corpusE = replicas(e0.select("vec_id", "embedding"), 3, nBase)
+    val q = CurationEpochs.maintain(batchStream(input), "doc_id", "embedding",
       "lang", "source", "text", store, 49L, 400L, 48L, "graft",
       checkpoint = ckpt)
     val tick = new Thread(() => if (gateSeq > 0L) {
@@ -2245,8 +1940,10 @@ object Stress {
     q.processAllAvailable()
     tick.join()
     q.stop()
-    }
-    if (mode == "attr") {
+  }
+
+  private def attr(c: Ctx): Unit = {
+    import c._
     // Stream-join state retention storm — the q141 100 TB claim: with
     // a TIGHT lateness the interval-join condition doubles as the
     // retention policy, so join state must PLATEAU at O(horizon ×
@@ -2314,7 +2011,5 @@ object Stress {
         s"wideMax=${stWide.max}")
     println(s"[stress] attr: identical output, state bounded " +
       s"${stTight.max} vs linear ${stWide.max}")
-    }
-    spark.stop()
   }
 }

@@ -280,21 +280,6 @@ case class NgramCountsExpr(child: Expression, n: Int)
     copy(child = c)
 }
 
-/** array<long> of per-token hash60s (ordered, non-distinct). */
-case class TokenHash60Expr(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "token_hash60"
-  override def nullSafeEval(input: Any): Any =
-    new GenericArrayData(TextHash.tokenHashes(input.asInstanceOf[UTF8String]))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.functions.TextHash.tokenHashes($c))")
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
 /** Full k-slot MinHash signature in one pass — no explode, no shuffle.
   * Slot i = min over distinct shingles of (aᵢ·h + bᵢ) mod P, identical
   * to the declarative formulation (and the DuckDB oracle arithmetic). */
@@ -432,8 +417,6 @@ object TextHashFunctions {
     reg.createOrReplaceTempFunction("shingle_hash60",
       es => ShingleHash60Expr(es(0), intArg(es(1)), boolArg(es(2)), boolArg(es(3))),
       "scala_udf")
-    reg.createOrReplaceTempFunction("token_hash60",
-      es => TokenHash60Expr(es.head), "scala_udf")
     reg.createOrReplaceTempFunction("ngram_counts",
       es => NgramCountsExpr(es(0), intArg(es(1))), "scala_udf")
     reg.createOrReplaceTempFunction("minhash_signature",
@@ -459,8 +442,6 @@ object TextHashFunctions {
   def shingleHash60(text: Column, n: Int, distinct: Boolean = true,
                     modP: Boolean = false): Column =
     call_function("shingle_hash60", text, lit(n), lit(distinct), lit(modP))
-
-  def tokenHash60(text: Column): Column = call_function("token_hash60", text)
 
   def ngramCounts(text: Column, n: Int): Column =
     call_function("ngram_counts", text, lit(n))

@@ -105,15 +105,6 @@ object Similarity {
         col("cosine"), col("q_rank"))
   }
 
-  /** Single-table bucket (used by the pair-dedup variant). The bucket
-    * kernel is the native `hyperplane_buckets` expression — one
-    * compiled loop per row instead of nPlanes×dim element_at terms. */
-  def lshBucket(df: DataFrame, vecCol: String, nPlanes: Int): DataFrame = {
-    ArrayMath.register(df.sparkSession)
-    df.withColumn("bucket",
-      element_at(ArrayMath.hyperplaneBuckets(col(vecCol), nPlanes, 1), 1))
-  }
-
   /** Multi-table buckets: one row per (table, bucket) — the recall knob.
     * P(candidate) = 1 − (1 − p^nPlanes)^nTables for per-plane agreement
     * p; more tables buy recall linearly in index size, never O(n²). */

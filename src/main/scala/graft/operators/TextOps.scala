@@ -502,12 +502,13 @@ object TextOps {
     * sole smaller neighbor. Join/aggregate-based throughout: a
     * mega-cluster hub's neighborhood is never materialized as one array
     * or one task. Replaces min-label propagation (round 20): min-label
-    * needs O(component diameter) rounds, and the measured A/B (DevCC,
-    * q196's skewed near-dup shape) has large/small-star at 0.86× on the
-    * bench corpus and 0.60× at the 10× mega-cluster storm — identical
-    * labelings asserted on both, and pinned here by ClusterSpec's
-    * chain/transitivity laws (a 24-hop chain converges in ⌈log⌉ rounds,
-    * not 24). Convergence is EXACT set equality of the bidirected edge
+    * needs O(component diameter) rounds, and the measured A/B (q196's
+    * skewed near-dup shape) has large/small-star at 0.86× on the bench
+    * corpus and 0.60× at the 10× mega-cluster storm — identical
+    * labelings asserted on both. ClusterSpec keeps min-label as the
+    * reference of an equivalence law on seeded random graphs, beside
+    * its chain/transitivity laws (a 24-hop chain converges in ⌈log⌉
+    * rounds, not 24). Convergence is EXACT set equality of the bidirected edge
     * fixpoint (count + anti-join emptiness), not a hash signature.
     *
     * Calling this runs Spark jobs eagerly (every round materializes).
@@ -1188,15 +1189,6 @@ object TextOps {
       .withColumn("win_min", min(col("h")).over(win))
       .select(col(idCol), col("win_min").as("fingerprint"))
       .distinct()
-  }
-
-  /** Ordered (non-distinct) shingles — winnowing needs positions. */
-  def shinglesOrdered(text: Column, n: Int): Column = {
-    val w = tokens(text)
-    val grams = transform(
-      sequence(lit(1), size(w) - (n - 1)),
-      i => concat_ws(" ", slice(w, i, lit(n))))
-    when(size(w) >= n, grams).otherwise(array().cast("array<string>"))
   }
 
   // ---------------------------------------------- normalization / quality

@@ -36,7 +36,7 @@ class DocCountsSpec extends AnyFunSuite {
 
   test("README spec count equals the test call sites in src/test/scala") {
     // static `test(` call sites == runtime test count in this tree (no
-    // dynamically-registered tests; this spec's own five sites included)
+    // dynamically-registered tests; this spec's own sites included)
     val testRx = raw"(?m)^\s*test\(".r
     val actual = {
       val s = Files.walk(Paths.get("src/test/scala"))
@@ -55,10 +55,11 @@ class DocCountsSpec extends AnyFunSuite {
 
   test("NOTES suite counts match the suite classes in src/test/scala") {
     // round-11 drift class: NOTES/commit text claimed 46 suites when
-    // scalatest reports 45 (one helper class is not a suite). Every
-    // "N suites" claim in NOTES must equal the static suite count:
-    // classes extending a scalatest base — helper classes excluded —
-    // OR be a historical note for an earlier round (strictly smaller).
+    // scalatest reports 45 (one helper class is not a suite). The
+    // newest "N suites" claim — the first in NOTES, which runs newest
+    // round first — must equal the static suite count: classes
+    // extending a scalatest base, helper classes excluded. Older claims
+    // are history and may be larger (a later round deleted a suite).
     val suiteRx = raw"(?m)^class\s+\w+\s+extends\s+(SparkSpec|AnyFunSuite|AnyPropSpec)".r
     val actual = {
       val s = Files.walk(Paths.get("src/test/scala"))
@@ -69,11 +70,30 @@ class DocCountsSpec extends AnyFunSuite {
           .map(p => suiteRx.findAllIn(read(p.toString)).size).sum
       } finally s.close()
     }
-    val claims = raw"(\d+) suites".r.findAllMatchIn(read("NOTES.md"))
-      .map(_.group(1).toInt).toSeq
-    assert(claims.nonEmpty, "NOTES.md has no 'N suites' claim")
-    assert(claims.max == actual,
-      s"NOTES.md's largest suite claim ${claims.max} != actual $actual suites")
+    val newest = firstInt(read("NOTES.md"), raw"(\d+) suites".r, "NOTES.md")
+    assert(newest == actual,
+      s"NOTES.md's newest suite claim $newest != actual $actual suites")
+  }
+
+  test("every `Stress <N> <storm>` cited in docs/SCALE.md is a registered storm") {
+    val cited = raw"`Stress (?:\d+|<N>) ([\w-]+)`".r
+      .findAllMatchIn(read("docs/SCALE.md")).map(_.group(1)).toSeq.distinct
+    assert(cited.nonEmpty, "docs/SCALE.md cites no `Stress <N> <storm>` run")
+    val unknown = cited.filterNot(Stress.stormNames.contains)
+    assert(unknown.isEmpty,
+      s"docs/SCALE.md cites unregistered storms: ${unknown.mkString(", ")}")
+  }
+
+  test("SparkEntry.matching: prefixes select sorted names; an unknown " +
+    "prefix fails with the candidates") {
+    val all = SparkEntry.queries.keys.toSeq.sorted
+    assert(SparkEntry.matching(Seq("")) == all)
+    assert(SparkEntry.matching(Seq("q02_", "q01")) ==
+      all.filter(n => n.startsWith("q01") || n.startsWith("q02_")))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.matching(Seq("q02_", "nosuchquery")))
+    assert(e.getMessage.contains("'nosuchquery' matches no query") &&
+      e.getMessage.contains("q02_prd_trades_star"))
   }
 
   test("every registered query has a COVERAGE row") {

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -34,6 +35,61 @@ class ClusterSpec extends SparkSpec {
     assert((1L to 49L).forall(cc(_) == 1L))
     assert(Seq(90L, 100L, 150L, 151L).forall(cc(_) == 90L))
     assert(cc.size == 53)
+  }
+
+  /** Reference CC: iterative min-label propagation (the round-19 engine
+    * CC) — each round every node adopts the smallest label in its
+    * neighbourhood; fixpoint in O(component diameter) rounds. */
+  private def minLabel(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
+    val cut: DataFrame => DataFrame = df => df.localCheckpoint(true)
+    val p = cut(pairs)
+    val edges = cut(p.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .union(p.select(col("id_b").as("src"), col("id_a").as("dst"))))
+    var labels = cut(edges.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id")))
+    var converged = false
+    var i = 0
+    while (!converged && i < maxIter) {
+      val neighborMin = edges.join(labels, edges("dst") === labels("id"))
+        .groupBy(col("src")).agg(min(col("label")).as("nlabel"))
+      val updated = cut(
+        labels.join(neighborMin, labels("id") === neighborMin("src"), "left")
+          .select(col("id"), col("label").as("prev"),
+            least(col("label"), coalesce(col("nlabel"), col("label"))).as("label")))
+      converged = updated.filter(col("label") =!= col("prev")).isEmpty
+      labels = updated.select("id", "label")
+      i += 1
+    }
+    require(converged, s"minLabel did not converge in $maxIter rounds")
+    labels
+  }
+
+  test("CC (large/small-star) ≡ min-label propagation on seeded random " +
+    "graphs: chains, isolated pairs and one large component") {
+    for (seed <- Seq(3L, 17L, 2024L)) {
+      val rnd = new scala.util.Random(seed)
+      // one large component: a random recursive tree over 200 shuffled
+      // ids plus 60 random chords (duplicates and both orientations)
+      val ids = rnd.shuffle((0L until 200L).map(_ * 7 + 1000L))
+      val large = (1 until 200).map(i => (ids(rnd.nextInt(i)), ids(i))) ++
+        Seq.fill(60)((ids(rnd.nextInt(200)), ids(rnd.nextInt(200))))
+          .filter(e => e._1 != e._2)
+      // chains of random length whose ids are not in path order
+      val chains = (0 until 6).flatMap { c =>
+        val path = rnd.shuffle((0L until 2L + rnd.nextInt(10)).map(_ + 100L * c))
+        path.sliding(2).map(w => (w(0), w(1)))
+      }
+      val isolated = (0 until 15).map(i => (5000L + 2 * i, 5001L + 2 * i))
+      val pairs = (large ++ chains ++ isolated)
+        .map { case (a, b) => if (rnd.nextBoolean()) (a, b) else (b, a) }
+        .toDF("id_a", "id_b")
+      val got = TextOps.connectedComponents(pairs)
+        .as[(Long, Long)].collect().toMap
+      val want = minLabel(pairs).as[(Long, Long)].collect().toMap
+      assert(got == want, s"seed $seed")
+      assert(want.size == 200 + chains.map(_._1).toSet
+        .union(chains.map(_._2).toSet).size + 30, s"seed $seed")
+    }
   }
 
   test("reliable-checkpoint CC equals the executor-local-cut result") {
