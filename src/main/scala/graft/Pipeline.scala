@@ -134,9 +134,13 @@ final class Pipeline(spark: SparkSession, store: LayeredStore,
     }.toMap
 
   /** Phase 2 — TRANSFORM: named staging transforms (P1/F1/X1/X2 shapes)
-    * applied source → staging. */
+    * applied source → staging, replacing (`"replace"`) or appending to
+    * (`"append"`) each staging table; any other mode is rejected before
+    * a table is touched. */
   def transform(tables: Map[String, DataFrame => DataFrame],
-                mode: String = "replace"): Map[String, Try[Long]] =
+                mode: String = "replace"): Map[String, Try[Long]] = {
+    require(mode == "replace" || mode == "append",
+      s"transform mode must be \"replace\" or \"append\", not \"$mode\"")
     tables.map { case (table, fn) =>
       table -> Retry.retrying(retries) {
         written(fn(store.read("source", table))) { out =>
@@ -145,6 +149,7 @@ final class Pipeline(spark: SparkSession, store: LayeredStore,
         }
       }
     }
+  }
 
   /** Phase 3 — LOAD: join/filter to production + keep-last repair (W1).
     * The dedup is the single-shuffle window, not the reference's

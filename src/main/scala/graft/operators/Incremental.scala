@@ -13,20 +13,25 @@ import org.apache.spark.sql.functions._
   *   3. append (:58-59);
   *   4. keep-last dedup repair (:271-280).
   *
-  * Re-expressed: the watermark probe is a scalar agg (parquet
-  * footer-min/max makes it a metadata-mostly scan), the filter pushes
-  * down, the append is an atomic parquet append, the dedup is W1's
-  * single-shuffle window instead of a full rewrite.
+  * Re-expressed: the watermark probe of a stored parquet table is the
+  * max of its row-group statistics, read from the file footers on the
+  * driver with no Spark job (any other input is a scalar agg), the
+  * filter pushes down, the append is an atomic parquet append, the
+  * dedup is W1's single-shuffle window instead of a full rewrite.
   */
 object Incremental {
 
   /** A1 — watermark probe: ungrouped MAX over the version column.
-    * Returns None on an empty/absent table (first run). */
+    * Returns None on an empty/absent table (first run). A bare scan of
+    * an unpartitioned parquet table with an integral version column is
+    * answered from its footers' row-group statistics; anything else, or
+    * a footer that cannot answer, runs the aggregate. */
   def maxWatermark(df: DataFrame, versionCol: String): Option[Long] =
-    df.agg(max(col(versionCol)).cast("long")).first() match {
-      case r if r.isNullAt(0) => None
-      case r => Some(r.getLong(0))
-    }
+    ParquetFooters.maxOf(df, versionCol).getOrElse(
+      df.agg(max(col(versionCol)).cast("long")).first() match {
+        case r if r.isNullAt(0) => None
+        case r => Some(r.getLong(0))
+      })
 
   /** F3 — the incremental filter `version > wm`; pushed to the scan. */
   def newerThan(df: DataFrame, versionCol: String, wm: Option[Long]): DataFrame =
@@ -140,8 +145,14 @@ final case class TableStore(spark: SparkSession, root: String) extends LayeredSt
   override def append(layer: String, table: String, df: DataFrame): Unit =
     write(layer, table, df, SaveMode.Append)
 
-  override def read(layer: String, table: String): DataFrame =
-    spark.read.parquet(path(layer, table))
+  /** Reads with the schema parquet inference would find, taken from one
+    * file footer on the driver, so opening a table runs no Spark job;
+    * a table the footer cannot answer for is inferred as usual. */
+  override def read(layer: String, table: String): DataFrame = {
+    val p = path(layer, table)
+    ParquetFooters.inferredSchema(spark, children(p))
+      .fold(spark.read.parquet(p))(spark.read.schema(_).parquet(p))
+  }
 
   /** Entries of a store directory (none if it is absent), resolved
     * through Hadoop's FileSystem like the parquet reader and writer do,

@@ -13,7 +13,7 @@ import scala.util.Success
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{LayeredStore, TableStore}
+import graft.operators.{Incremental, LayeredStore, TableStore}
 import graft.sources.api.{ApiTransport, TransportRegistry}
 
 class PipelineSpec extends SparkSpec {
@@ -197,6 +197,69 @@ class PipelineSpec extends SparkSpec {
     val once = new Pipeline(spark, new FailFirstWrite(base), "unused", retries = 1)
     assert(bounded(once.load("u", _.read("staging", "t"), Seq("id"),
       "meta_version")).isFailure)
+  }
+
+  test("transform rejects an unknown mode before any table is touched") {
+    val root = Files.createTempDirectory("graft-pipe-mode")
+    val store = TableStore(spark, root.toString)
+    TransportRegistry.register("pipe-mode", new VersionedTransport(3))
+    val pipe = new Pipeline(spark, store, "pipe-mode")
+    assert(pipe.fullRefresh(EndpointRegistry.fromYaml(yaml)).values.forall(_.isSuccess))
+    val news = "src_exchange_news"
+    val keep = (df: DataFrame) => df.select(col("id"), col("meta_version"))
+    assert(pipe.transform(Map(news -> keep)) == Map(news -> Success(3L)))
+    def files(): Map[String, (Long, Long)] = {
+      val s = Files.walk(root)
+      try s.iterator().asScala.filter(Files.isRegularFile(_)).map { f =>
+        root.relativize(f).toString -> (Files.size(f), Files.getLastModifiedTime(f).toMillis)
+      }.toMap finally s.close()
+    }
+    val before = files()
+    Seq("Replace", "APPEND", "overwrite", "").foreach { mode =>
+      val e = intercept[IllegalArgumentException](
+        pipe.transform(Map(news -> keep), mode = mode))
+      assert(e.getMessage.contains(s"\"$mode\""))
+    }
+    assert(files() == before)
+    assert(store.read("staging", news).count() == 3L)
+  }
+
+  /** Spark jobs of one incremental batch over [[yaml]]'s four tables
+    * (incrementalRefresh, watermark probes, append transform, load),
+    * measured with each TableStore.read schema and each watermark taken
+    * from parquet footers. When each read inferred its schema in a job
+    * and each watermark ran a two-job scan, the same batch took 24. */
+  private val BatchJobBudget = 7
+
+  test("job budget: a flat-table read and its watermark probes launch no " +
+    "Spark job, and one batch stays within its budget") {
+    val root = Files.createTempDirectory("graft-pipe-budget").toString
+    val store = TableStore(spark, root)
+    val specs = EndpointRegistry.fromYaml(yaml)
+    TransportRegistry.register("pipe-budget", new VersionedTransport(5))
+    val pipe = new Pipeline(spark, store, "pipe-budget")
+    val news = "src_exchange_news"
+    val keep = (df: DataFrame) => df.select(col("id"), col("meta_version"))
+    def load() = pipe.load("prd_news", _.read("staging", news), Seq("id"), "meta_version")
+    assert(pipe.fullRefresh(specs).values.forall(_ == Success(5L)))
+    assert(pipe.transform(Map(news -> keep)) == Map(news -> Success(5L)))
+    assert(load() == Success(5L))
+
+    assert(jobsIn(store.read("source", news))._2 == 0)
+    val (wm, probeJobs) = jobsIn(store.probeWatermarks("source", "meta_version"))
+    assert(wm == specs.map(_.tableName -> 5L).toMap && probeJobs == 0)
+
+    TransportRegistry.register("pipe-budget", new VersionedTransport(8))
+    val ((inc, staged, loaded), jobs) = jobsIn {
+      val inc = pipe.incrementalRefresh(specs)
+      val swm = store.probeWatermarks("staging", "meta_version")
+      val staged = pipe.transform(Map(news -> ((df: DataFrame) =>
+        Incremental.newerThan(keep(df), "meta_version", swm.get(news)))), mode = "append")
+      (inc, staged, load())
+    }
+    assert(inc == specs.map(_.tableName -> Success(3L)).toMap)
+    assert(staged == Map(news -> Success(3L)) && loaded == Success(8L))
+    assert(jobs <= BatchJobBudget, s"one batch took $jobs jobs; its budget is $BatchJobBudget")
   }
 
   test("per-table error isolation: one bad endpoint never fails the run") {

@@ -10,4 +10,24 @@ object TestSession {
 
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
+
+  /** `body`'s result and the number of Spark jobs it launched from this
+    * thread, counted by job group. A sentinel job in a second group runs
+    * after `body`: the status store sees job starts in order, so once it
+    * shows the sentinel it shows every job of `body` too. */
+  def jobsIn[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    sc.setJobGroup(s"budget-$tag", "job budget")
+    val out = try body finally {
+      sc.setJobGroup(s"sentinel-$tag", "job budget sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    }
+    val deadline = System.nanoTime() + java.util.concurrent.TimeUnit.SECONDS.toNanos(60)
+    while (sc.statusTracker.getJobIdsForGroup(s"sentinel-$tag").isEmpty) {
+      assert(System.nanoTime() < deadline, "the status store never showed the sentinel job")
+      Thread.sleep(10)
+    }
+    (out, sc.statusTracker.getJobIdsForGroup(s"budget-$tag").length)
+  }
 }

@@ -22,6 +22,12 @@ before=$(tree_hash)
 # The benchmark's own tests first: a green fingerprint also certifies the
 # harness that measures the engine.
 python3 -m unittest discover -s perfbench -p 'test_*.py'
+# The benchmark's JVM side compiles against the engine, with the same
+# settings perfbench/run.py builds it with: an engine change that breaks
+# it (a LayeredStore member, a Pipeline signature) fails the gate.
+sbt 'set Compile / unmanagedSourceDirectories += baseDirectory.value / "perfbench" / "src"' \
+    'set target := baseDirectory.value / ".bench_build" / "target"' \
+    compile
 sbt test
 after=$(tree_hash)
 if [[ "$before" != "$after" ]]; then
