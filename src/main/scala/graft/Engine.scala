@@ -49,36 +49,7 @@ object Engine {
     // before any SparkSession exists (unlike applicationId) and scopes
     // the fresh-checkpoint contract to this process's own runs.
     val pid = ProcessHandle.current().pid()
-    // reap dead processes' namespaces so the (RAM-backed) scratch never
-    // accumulates across a session of many short-lived JVMs — a dir is
-    // only swept when its pid provably no longer runs
-    def rmTree(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete()
-    }
-    Option(new java.io.File(s"$base/graft-ckpt").listFiles())
-      .foreach(_.foreach { d =>
-        val digits = d.getName.drop(1)
-        val pidShaped = d.getName.startsWith("p") && digits.nonEmpty &&
-          digits.forall(_.isDigit)
-        if (pidShaped) {
-          // toLongOption (round-19 advice): a p-prefixed all-digit
-          // name longer than Long range would throw out of the
-          // unguarded parse and fail EVERY streaming query. Such a
-          // name is pid-SHAPED but unparseable — skip it entirely
-          // (review fix: it must not fall through to the legacy sweep,
-          // which would delete a dir we could not attribute)
-          digits.toLongOption.foreach { p =>
-            if (p != pid && ProcessHandle.of(p).isEmpty) rmTree(d)
-          }
-        } else {
-          // legacy pre-namespacing dir (graft-ckpt/<queryName> from
-          // before the p<pid> scheme) — can only belong to the old
-          // single-namespace contract, never to a live pid namespace,
-          // so it is safe to sweep (round-19 advice: these accumulated
-          // forever on the RAM-backed scratch)
-          rmTree(d)
-        }
-      })
+    sweepCheckpoints(new java.io.File(s"$base/graft-ckpt"), pid)
     val dir = new java.io.File(s"$base/graft-ckpt/p$pid/$name")
     // fresh-checkpoint contract: callers pass a per-run name; a stale
     // dir from a crashed earlier RUN of this pid must not silently
@@ -86,6 +57,44 @@ object Engine {
     // nothing)
     if (dir.exists()) rmTree(dir)
     dir.getAbsolutePath
+  }
+
+  /** Reap dead processes' namespaces under the checkpoint `root` so the
+    * (RAM-backed) scratch never accumulates across a session of many
+    * short-lived JVMs — a dir is only swept when its pid provably no
+    * longer runs. */
+  private[graft] def sweepCheckpoints(root: java.io.File, pid: Long): Unit =
+    Option(root.listFiles()).foreach(_.foreach { d =>
+      val digits = d.getName.drop(1)
+      val pidShaped = d.getName.startsWith("p") && digits.nonEmpty &&
+        digits.forall(_.isDigit)
+      if (pidShaped) {
+        // toLongOption: a p-prefixed all-digit name longer than Long
+        // range would throw out of an unguarded parse and fail EVERY
+        // streaming query. Such a name is pid-SHAPED but unparseable —
+        // skip it entirely: it must not fall through to the legacy
+        // sweep, which would delete a dir we could not attribute
+        digits.toLongOption.foreach { p =>
+          if (p != pid && ProcessHandle.of(p).isEmpty) rmTree(d)
+        }
+      } else {
+        // legacy pre-namespacing dir (graft-ckpt/<queryName> from
+        // before the p<pid> scheme) — can only belong to the old
+        // single-namespace contract, never to a live pid namespace,
+        // so it is safe to sweep (unswept, these accumulate forever on
+        // the RAM-backed scratch)
+        rmTree(d)
+      }
+    })
+
+  /** Delete `f` and, when it is a real directory, everything under it. A
+    * symlink is removed itself: `listFiles` on a link to a directory
+    * lists the target, so recursing there would empty a directory that
+    * lives outside the tree. */
+  private def rmTree(f: java.io.File): Unit = {
+    if (!java.nio.file.Files.isSymbolicLink(f.toPath))
+      Option(f.listFiles()).foreach(_.foreach(rmTree))
+    f.delete()
   }
 
   /** Configs every graft session needs, set by [[localSession]] — the
@@ -97,6 +106,19 @@ object Engine {
     *    arithmetic exact (DuckDB-side equivalent: `epoch_ns(ts)`).
     *  - AQE on: runtime re-planning (skew joins, coalesced shuffle
     *    partitions) is the 100 TB story for free.
+    *  - `fs.file.impl` / `fs.AbstractFileSystem.file.impl`: without
+    *    native libhadoop on the library path, Hadoop's `RawLocalFileSystem`
+    *    starts a `chmod` process for every file and directory it creates and a
+    *    `readlink` process for every `FileContext` rename. JFR counted
+    *    3,390 process starts in one `llm_curation` benchmark run on a
+    *    4-vCPU VM (2,352 `readlink`s, mostly q141's per-batch checkpoint
+    *    commits) and 650 in a `mabna_ingest` run (342 `chmod 0755`, 300
+    *    `chmod 0644`); with these confs 127 and 8 remain, all Spark's own
+    *    `rm -rf`. [[ForkFreeLocalFileSystem]] and [[ForkFreeLocalFs]]
+    *    do the same work in-process, with the same permission bits,
+    *    `.crc` sidecars and rename semantics. `FileSystem` caches one
+    *    instance per scheme for the whole JVM, so these only hold if no
+    *    stock `file:` filesystem was built before the first session.
     */
   private def withGraftConfs(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -130,6 +152,10 @@ object Engine {
     // catalog tables (bucketing metadata) land in tmp, never the repo
     .config("spark.sql.warehouse.dir",
       s"${System.getProperty("java.io.tmpdir")}/graft-warehouse")
+    // local files without a process per chmod/readlink (see above)
+    .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+      classOf[ForkFreeLocalFs].getName)
     // fast shuffle/spill scratch where available (see fastScratch)
     .config(fastScratch.map("spark.local.dir" -> _).toMap)
 
