@@ -1,7 +1,9 @@
 package graft
 
+import java.util.concurrent.{ExecutionException, Executors}
+
 import scala.jdk.CollectionConverters._
-import scala.util.{Failure, Success, Try}
+import scala.util.{Failure, Try}
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
@@ -19,10 +21,11 @@ import graft.sources.api.TransportRegistry
   * types → 78 source tables — and runs extract → transform → load as an
   * Airflow DAG with per-table try/except isolation and retries
   * (mabna_tables_create.py:21-30, :80-90, :303-322). Here the same
-  * registry drives one driver program: each phase is a DataFrame plan,
-  * tasks parallelize across the cluster instead of Celery workers, and
-  * the watermark dict (XCom, mabna_tables_update.py:103) is a plain
-  * driver map.
+  * registry drives one driver program: each table is a DataFrame plan,
+  * a phase's tables run concurrently as the DAG's parallel tasks do,
+  * each phase is a barrier before the next, tasks parallelize across
+  * the cluster instead of Celery workers, and the watermark dict (XCom,
+  * mabna_tables_update.py:103) is a plain driver map.
   */
 final case class EndpointSpec(collection: String, item: String,
                               instType: Option[String] = None) {
@@ -96,20 +99,48 @@ final class Pipeline(spark: SparkSession, store: LayeredStore,
     obs.get("rows").asInstanceOf[Long]
   }
 
+  /** Run one phase: `body` for every table, each inside its own retried
+    * `Try` (C5), concurrently on min(#tables, defaultParallelism) threads
+    * as the reference's DAG runs a task group's tables as parallel tasks
+    * (C2). Each table is a fetch plus a job or two over few rows, so a
+    * phase is bound by fixed per-job cost, not by cores. Returns once
+    * every table has finished (the phase barrier of C1); a fatal
+    * throwable is rethrown here after that. The threads are made per
+    * call: Spark's job group, description and scheduler pool are
+    * inheritable thread-locals copied when a thread is created, so a
+    * long-lived pool would carry stale ones. One table runs inline. */
+  private def eachTable[A](items: Seq[A])(name: A => String)(
+      body: A => Long): Map[String, Try[Long]] = {
+    def run(a: A) = name(a) -> Retry.retrying(retries)(body(a))
+    val threads = math.min(items.size, spark.sparkContext.defaultParallelism)
+    if (threads <= 1) items.map(run).toMap
+    else {
+      val pool = Executors.newFixedThreadPool(threads, (r: Runnable) => {
+        val t = new Thread(() => { SparkSession.setActiveSession(spark); r.run() })
+        t.setDaemon(true)
+        t
+      })
+      val tasks = try items.map(a => pool.submit(() => run(a))) finally pool.shutdown()
+      val done = tasks.map { f =>
+        try Right(f.get()) catch { case e: ExecutionException => Left(e.getCause) }
+      }
+      done.collectFirst { case Left(fatal) => throw fatal }
+      done.collect { case Right(r) => r }.toMap
+    }
+  }
+
   /** Phase 1 — EXTRACT (full refresh): driver-side fetch per endpoint,
     * schema inferred from the JSON like the reference's
     * `json_normalize + to_sql(replace)` (mabna_tables_create.py:55-61).
     * Returns per-table row counts; failures are isolated (C5). */
   def fullRefresh(specs: Seq[EndpointSpec]): Map[String, Try[Long]] =
-    specs.map { spec =>
-      spec.tableName -> Retry.retrying(retries) {
-        import spark.implicits._
-        val body = TransportRegistry.get(transport)
-          .fetch(spec.endpoint, Map("meta.version" -> "0", "meta.version_op" -> "gt"))
-        val df = JsonFlatten.parseEnvelope(spark, Seq(body).toDS())
-        written(df)(store.replace("source", spec.tableName, _))
-      }
-    }.toMap
+    eachTable(specs)(_.tableName) { spec =>
+      import spark.implicits._
+      val body = TransportRegistry.get(transport)
+        .fetch(spec.endpoint, Map("meta.version" -> "0", "meta.version_op" -> "gt"))
+      val df = JsonFlatten.parseEnvelope(spark, Seq(body).toDS())
+      written(df)(store.replace("source", spec.tableName, _))
+    }
 
   /** Phase 1' — EXTRACT (incremental): watermark probe per table (A1),
     * then the DSv2 source with the `version > wm` filter pushed into
@@ -117,21 +148,19 @@ final class Pipeline(spark: SparkSession, store: LayeredStore,
     * pinned schema the cluster source requires. */
   def incrementalRefresh(specs: Seq[EndpointSpec],
                          versionCol: String = "meta_version"): Map[String, Try[Long]] =
-    specs.map { spec =>
-      spec.tableName -> Retry.retrying(retries) {
-        val existing = store.read("source", spec.tableName)
-        val wm = graft.operators.Incremental
-          .maxWatermark(existing, versionCol).getOrElse(0L)
-        val fresh = spark.read.format("graft-api")
-          .schema(existing.schema)
-          .option("endpoints", spec.endpoint)
-          .option("transport", transport)
-          .option("versionColumn", versionCol)
-          .load()
-          .filter(col(versionCol) > lit(wm))
-        written(fresh)(store.append("source", spec.tableName, _))
-      }
-    }.toMap
+    eachTable(specs)(_.tableName) { spec =>
+      val existing = store.read("source", spec.tableName)
+      val wm = graft.operators.Incremental
+        .maxWatermark(existing, versionCol).getOrElse(0L)
+      val fresh = spark.read.format("graft-api")
+        .schema(existing.schema)
+        .option("endpoints", spec.endpoint)
+        .option("transport", transport)
+        .option("versionColumn", versionCol)
+        .load()
+        .filter(col(versionCol) > lit(wm))
+      written(fresh)(store.append("source", spec.tableName, _))
+    }
 
   /** Phase 2 — TRANSFORM: named staging transforms (P1/F1/X1/X2 shapes)
     * applied source → staging, replacing (`"replace"`) or appending to
@@ -141,12 +170,10 @@ final class Pipeline(spark: SparkSession, store: LayeredStore,
                 mode: String = "replace"): Map[String, Try[Long]] = {
     require(mode == "replace" || mode == "append",
       s"transform mode must be \"replace\" or \"append\", not \"$mode\"")
-    tables.map { case (table, fn) =>
-      table -> Retry.retrying(retries) {
-        written(fn(store.read("source", table))) { out =>
-          if (mode == "replace") store.replace("staging", table, out)
-          else store.append("staging", table, out)
-        }
+    eachTable(tables.toSeq)(_._1) { case (table, fn) =>
+      written(fn(store.read("source", table))) { out =>
+        if (mode == "replace") store.replace("staging", table, out)
+        else store.append("staging", table, out)
       }
     }
   }

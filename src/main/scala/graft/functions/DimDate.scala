@@ -30,58 +30,54 @@ object DimDate {
     "Tir", "Mordad", "Shahrivar", "Mehr", "Aban", "Azar", "Dey",
     "Bahman", "Esfand")
 
+  /** The calendar as one projection over `d` and its Jalali parts: each
+    * derived column is written out in terms of those two, not as a
+    * `withColumn` over the previous ones, so analysis sees one Project
+    * instead of re-resolving a plan that grows by one per column. */
   def generate(spark: SparkSession, start: String, end: String): DataFrame = {
     GraftFunctions.register(spark)
-    val jMonthName = jMonthNames.zipWithIndex
-      .foldLeft(lit("")) { case (acc, (n, i)) =>
-        when(col("jmonth") === (i + 1), lit(n)).otherwise(acc)
-      }
     // distributed generation: explode(sequence(...)) would build the
     // whole span inside one task; range() shards it across the cluster
     val nDays = java.time.temporal.ChronoUnit.DAYS.between(
       java.time.LocalDate.parse(start), java.time.LocalDate.parse(end))
     require(nDays >= 0, s"end $end precedes start $start")
+    val d = col("d")
+    val (jy, jm, jd) = (col("jp.jy"), col("jp.jm"), col("jp.jd"))
+    val jDayOfYear =
+      when(jm <= 7, (jm - 1) * 31 + jd)
+        .otherwise(lit(186) + (jm - 7) * 30 + jd)
+        .cast("int")
+    val jWeekDay = (pmod(dayofweek(d), lit(7)) + 1).cast("int") // 1=Saturday .. 7=Friday
     spark.range(nDays + 1)
       .select(date_add(to_date(lit(start)), col("id").cast("int")).as("d"))
-      .withColumn("jp", GraftFunctions.jalaliParts(col("d")))
+      .select(d, GraftFunctions.jalaliParts(d).as("jp"))
       .select(
-        date_format(col("d"), "yyyy-MM-dd").as("miladi"),
-        col("jp.jy").as("jyear"),
-        col("jp.jm").as("jmonth"),
-        col("jp.jd").as("jday"),
-        col("d"))
-      .withColumn("jalali", format_string("%04d/%02d/%02d",
-        col("jyear"), col("jmonth"), col("jday")))
-      .withColumn("jmonth_name", jMonthName)
-      .withColumn("jquarter", ((col("jmonth") - 1) / 3 + 1).cast("int"))
-      .withColumn("jnime", when(col("jmonth") <= 6, 1).otherwise(2))
-      .withColumn("jday_of_year",
-        when(col("jmonth") <= 7, (col("jmonth") - 1) * 31 + col("jday"))
-          .otherwise(lit(186) + (col("jmonth") - 7) * 30 + col("jday"))
-          .cast("int"))
-      .withColumn("jweek_day", // 1=Saturday .. 7=Friday
-        (pmod(dayofweek(col("d")), lit(7)) + 1).cast("int"))
-      // Saturday-based offset of Farvardin 1, recovered from the row's
-      // own weekday: offset ≡ jweek_day-1 - (jday_of_year-1)  (mod 7).
-      .withColumn("jweek_num",
-        ((col("jday_of_year") - 1 +
-          pmod(col("jweek_day") - 1 - (col("jday_of_year") - 1), lit(7)))
-          .divide(7).cast("int") + 1).cast("int"))
-      .withColumn("myear", year(col("d")))
-      .withColumn("mmonth", month(col("d")))
-      .withColumn("mday", dayofmonth(col("d")))
-      .withColumn("mmonth_name", date_format(col("d"), "MMMM"))
-      .withColumn("mquarter", quarter(col("d")))
-      .withColumn("mnime", when(col("mmonth") <= 6, 1).otherwise(2))
-      .withColumn("mweek_day", date_format(col("d"), "EEEE"))
-      // Excel WEEKNUM(d, 1): Sunday-start weeks anchored at Jan 1.
-      // Spark dayofweek is 1=Sunday..7=Saturday, so dayofweek(jan1)-1
-      // is the Sunday-based offset of the year start.
-      .withColumn("mweek_num",
-        ((dayofyear(col("d")) +
-          dayofweek(trunc(col("d"), "year")) - 2)
-          .divide(7).cast("int") + 1).cast("int"))
-      .drop("d")
+        date_format(d, "yyyy-MM-dd").as("miladi"),
+        jy.as("jyear"),
+        jm.as("jmonth"),
+        jd.as("jday"),
+        format_string("%04d/%02d/%02d", jy, jm, jd).as("jalali"),
+        lookup(jm, jMonthNames).as("jmonth_name"),
+        ((jm - 1) / 3 + 1).cast("int").as("jquarter"),
+        when(jm <= 6, 1).otherwise(2).as("jnime"),
+        jDayOfYear.as("jday_of_year"),
+        jWeekDay.as("jweek_day"),
+        // Saturday-based offset of Farvardin 1, recovered from the row's
+        // own weekday: offset ≡ jweek_day-1 - (jday_of_year-1)  (mod 7).
+        ((jDayOfYear - 1 + pmod(jWeekDay - 1 - (jDayOfYear - 1), lit(7)))
+          .divide(7).cast("int") + 1).cast("int").as("jweek_num"),
+        year(d).as("myear"),
+        month(d).as("mmonth"),
+        dayofmonth(d).as("mday"),
+        date_format(d, "MMMM").as("mmonth_name"),
+        quarter(d).as("mquarter"),
+        when(month(d) <= 6, 1).otherwise(2).as("mnime"),
+        date_format(d, "EEEE").as("mweek_day"),
+        // Excel WEEKNUM(d, 1): Sunday-start weeks anchored at Jan 1.
+        // Spark dayofweek is 1=Sunday..7=Saturday, so dayofweek(jan1)-1
+        // is the Sunday-based offset of the year start.
+        ((dayofyear(d) + dayofweek(trunc(d, "year")) - 2)
+          .divide(7).cast("int") + 1).cast("int").as("mweek_num"))
   }
 
   // Farsi vocabulary exactly as the artifact spells it (sheet DATES,

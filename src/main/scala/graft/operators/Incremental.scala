@@ -91,7 +91,9 @@ object Incremental {
   * (reference-semantics parity against a relational database). Pipeline
   * code never cares which one it talks to. `replace` and `append` must
   * write the DataFrame they are given in one write action: Pipeline
-  * observes its row count on that execution.
+  * observes its row count on that execution. A Pipeline phase calls
+  * `replace`, `append` and `read` concurrently from several threads,
+  * each call on a distinct table, so an implementation must allow that.
   */
 trait LayeredStore {
   def spark: SparkSession
@@ -165,14 +167,18 @@ final case class TableStore(spark: SparkSession, root: String) extends LayeredSt
     else Seq.empty
   }
 
-  /** Directory-with-content check, not `_SUCCESS`: dynamic-partition
-    * overwrites commit through a staging dir and do not leave a root
-    * success marker. */
+  /** A directory holding an entry the parquet reader would list, not a
+    * `_SUCCESS` check: dynamic-partition overwrites commit through a
+    * staging dir and do not leave a root success marker. A directory
+    * holding only hidden entries (the `_temporary` of a first write
+    * that crashed or is still in flight) is no table: reading it would
+    * fail schema inference. */
   override def exists(layer: String, table: String): Boolean =
-    children(path(layer, table)).nonEmpty
+    children(path(layer, table)).exists(e => !ParquetFooters.hidden(e.getPath.getName))
 
   override def tables(layer: String): Seq[String] =
-    children(s"$root/$layer").filter(_.isDirectory).map(_.getPath.getName).sorted
+    children(s"$root/$layer").filter(_.isDirectory).map(_.getPath.getName)
+      .filter(exists(layer, _)).sorted
 
   /** Schema-evolving read: unions the schemas of every file in the
     * table (parquet mergeSchema), so an append that added columns stays
@@ -256,7 +262,12 @@ final case class TableStore(spark: SparkSession, root: String) extends LayeredSt
   * against any dialect Spark ships; tested against embedded Derby).
   * `replace` uses truncate=true so the DDL survives, matching the
   * engine-upgrade note in SURVEY.md §7.4 (pandas `to_sql(replace)`
-  * drops and re-infers — truncating is strictly safer). */
+  * drops and re-infers — truncating is strictly safer). Writes are not
+  * atomic: Spark's JDBC writer commits each partition in its own
+  * transaction, so a write that fails part-way keeps the partitions
+  * committed before the failure, and a failed replace has already
+  * truncated the table. Each call opens its own connections, so
+  * concurrent calls on distinct tables share no state here. */
 final case class JdbcTableStore(spark: SparkSession, url: String) extends LayeredStore {
   private def name(layer: String, table: String) = s"${layer}_$table"
 

@@ -28,6 +28,12 @@ private[graft] object ParquetFooters {
     * (ParquetReadSupport.SPARK_METADATA_KEY). */
   private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
+  /** The file index's rule for entry names it never lists: `_` names
+    * (bar partition directories), `.` names and in-flight copies. */
+  def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")
+
   private def footer(conf: Configuration, path: Path,
                      filter: ParquetMetadataConverter.MetadataFilter): ParquetMetadata =
     ParquetFooterReader.readFooter(HadoopInputFile.fromPath(path, conf), filter)
@@ -43,11 +49,7 @@ private[graft] object ParquetFooters {
   def inferredSchema(spark: SparkSession, entries: Seq[FileStatus]): Option[StructType] = {
     val summary = entries.map(_.getPath.getName)
       .exists(n => n.startsWith("_metadata") || n.startsWith("_common_metadata"))
-    // the file index's rule for names it never lists
-    val listed = entries.filterNot { e =>
-      val n = e.getPath.getName
-      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_")
-    }
+    val listed = entries.filterNot(e => hidden(e.getPath.getName))
     if (spark.sessionState.conf.isParquetSchemaMergingEnabled || summary ||
         listed.exists(_.isDirectory)) None
     else listed.sortBy(_.getPath.toString).headOption.flatMap { first =>

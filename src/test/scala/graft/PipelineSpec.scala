@@ -1,7 +1,7 @@
 package graft
 
-import java.nio.file.Files
-import java.util.concurrent.ConcurrentHashMap
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.concurrent.{Await, Future}
@@ -13,7 +13,7 @@ import scala.util.Success
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Incremental, LayeredStore, TableStore}
+import graft.operators.{Incremental, JdbcTableStore, LayeredStore, TableStore}
 import graft.sources.api.{ApiTransport, TransportRegistry}
 
 class PipelineSpec extends SparkSpec {
@@ -241,7 +241,12 @@ class PipelineSpec extends SparkSpec {
     val news = "src_exchange_news"
     val keep = (df: DataFrame) => df.select(col("id"), col("meta_version"))
     def load() = pipe.load("prd_news", _.read("staging", news), Seq("id"), "meta_version")
-    assert(pipe.fullRefresh(specs).values.forall(_ == Success(5L)))
+    // the phase's worker threads carry this thread's job group, so the
+    // count below sees their jobs; if it saw none, the budget would hold
+    // vacuously
+    val (full, fullJobs) = jobsIn(pipe.fullRefresh(specs))
+    assert(full.values.forall(_ == Success(5L)))
+    assert(fullJobs >= specs.size, s"a ${specs.size}-table full refresh counted $fullJobs jobs")
     assert(pipe.transform(Map(news -> keep)) == Map(news -> Success(5L)))
     assert(load() == Success(5L))
 
@@ -260,6 +265,77 @@ class PipelineSpec extends SparkSpec {
     assert(inc == specs.map(_.tableName -> Success(3L)).toMap)
     assert(staged == Map(news -> Success(3L)) && loaded == Success(8L))
     assert(jobs <= BatchJobBudget, s"one batch took $jobs jobs; its budget is $BatchJobBudget")
+  }
+
+  test("a phase runs its tables concurrently: a full refresh has two " +
+    "fetches in flight at once") {
+    val root = Files.createTempDirectory("graft-pipe-overlap").toString
+    val specs = EndpointRegistry.fromYaml(yaml)
+    val met = new CountDownLatch(2)
+    val inFlight = new AtomicInteger
+    val peak = new AtomicInteger
+    TransportRegistry.register("pipe-overlap", new VersionedTransport(3) {
+      override def fetch(endpoint: String, params: Map[String, String]): String = {
+        peak.accumulateAndGet(inFlight.incrementAndGet(), (a, b) => a max b)
+        try {
+          // were the fetches run one after another, the first would wait
+          // out the bound alone
+          met.countDown()
+          met.await(10, TimeUnit.SECONDS)
+          super.fetch(endpoint, params)
+        } finally inFlight.decrementAndGet()
+      }
+    })
+    val pipe = new Pipeline(spark, TableStore(spark, root), "pipe-overlap")
+    assert(bounded(pipe.fullRefresh(specs)) == specs.map(_.tableName -> Success(3L)).toMap)
+    assert(peak.get >= 2, s"at most ${peak.get} fetch in flight")
+  }
+
+  test("a table directory holding only a leftover _temporary is no table: " +
+    "the probe skips it and the next append lands every source row") {
+    val root = Files.createTempDirectory("graft-pipe-tmp").toString
+    val store = TableStore(spark, root)
+    val specs = EndpointRegistry.fromYaml(yaml)
+    TransportRegistry.register("pipe-tmp", new VersionedTransport(5))
+    val pipe = new Pipeline(spark, store, "pipe-tmp")
+    assert(bounded(pipe.fullRefresh(specs)).values.forall(_ == Success(5L)))
+    val news = "src_exchange_news"
+    val keep = (df: DataFrame) => df.select(col("id"), col("meta_version"))
+    val others = specs.map(_.tableName).filter(_ != news).sorted
+    assert(bounded(pipe.transform(others.map(_ -> keep).toMap)).values
+      .forall(_ == Success(5L)))
+    // the first write of staging news died before its job committed
+    val attempt = Paths.get(root, "staging", news, "_temporary", "0", "_temporary",
+      "attempt_000000000000_0000_m_000000_0")
+    Files.createDirectories(attempt)
+    Files.write(attempt.resolve("part-00000.snappy.parquet"), Array[Byte](1, 2, 3))
+
+    assert(!store.exists("staging", news))
+    assert(store.tables("staging") == others)
+    val swm = store.probeWatermarks("staging", "meta_version")
+    assert(swm == others.map(_ -> 5L).toMap)
+    val staged = bounded(pipe.transform(Map(news -> ((df: DataFrame) =>
+      Incremental.newerThan(keep(df), "meta_version", swm.get(news)))), mode = "append"))
+    assert(staged == Map(news -> Success(5L)))
+    assert(store.exists("staging", news) && store.read("staging", news).count() == 5L)
+  }
+
+  test("JdbcTableStore takes a phase's concurrent writes: full and " +
+    "incremental refresh count as on TableStore") {
+    val specs = EndpointRegistry.fromYaml(yaml)
+    def refreshes(store: LayeredStore) = {
+      TransportRegistry.register("pipe-jdbc", new VersionedTransport(5))
+      val pipe = new Pipeline(spark, store, "pipe-jdbc")
+      val full = bounded(pipe.fullRefresh(specs))
+      TransportRegistry.register("pipe-jdbc", new VersionedTransport(8))
+      val inc = bounded(pipe.incrementalRefresh(specs))
+      (full, inc, specs.map(s => s.tableName -> store.read("source", s.tableName).count()).toMap)
+    }
+    val parquet = refreshes(TableStore(spark,
+      Files.createTempDirectory("graft-pipe-jdbc").toString))
+    assert(parquet == ((specs.map(_.tableName -> Success(5L)).toMap,
+      specs.map(_.tableName -> Success(3L)).toMap, specs.map(_.tableName -> 8L).toMap)))
+    assert(refreshes(JdbcTableStore(spark, "jdbc:derby:memory:graftpipe;create=true")) == parquet)
   }
 
   test("per-table error isolation: one bad endpoint never fails the run") {

@@ -11,8 +11,10 @@ object TestSession {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
 
-  /** `body`'s result and the number of Spark jobs it launched from this
-    * thread, counted by job group. A sentinel job in a second group runs
+  /** `body`'s result and the number of Spark jobs it launched, counted
+    * by job group: from this thread, and from threads `body` created
+    * (they inherit the job group when they are made), provided they are
+    * done when `body` returns. A sentinel job in a second group runs
     * after `body`: the status store sees job starts in order, so once it
     * shows the sentinel it shows every job of `body` too. */
   def jobsIn[T](body: => T): (T, Int) = {
