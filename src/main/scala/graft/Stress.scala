@@ -1502,7 +1502,7 @@ object Stress {
     * the curation stores) are written to `input` one parquet file per
     * batch; child JVMs — this main, mode `<name>-child`, forked with the
     * parent's own classpath and JVM flags — run the REAL maintain query
-    * over that backlog, are halt(137)'d at the poison sysprop's crash
+    * over that backlog, are halted (exit 137) at the poison sysprop's crash
     * window (so no shutdown hook can tidy up) and restarted from the
     * checkpoint; the recovered store is then diffed row for row against
     * a sequential no-crash control. */
@@ -1711,7 +1711,7 @@ object Stress {
   private def gatecrash(c: Ctx): Unit = {
     // Drift→swap-under-load storm (r16, verdict #6): a scheduler tick
     // invokes CurationEpochs.retrainIfDrifted WHILE the epoch-aware
-    // maintain query is mid-backlog, and the tick's JVM is halt(137)'d
+    // maintain query is mid-backlog, and the tick's JVM is halted (exit 137)
     // at BOTH gate crash windows (after the candidate build; after the
     // decision row, before the pointer move) — killing the in-flight
     // micro-batch with it. Recovery must converge: the next tick's

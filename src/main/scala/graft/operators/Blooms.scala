@@ -76,4 +76,57 @@ object Blooms {
     val keys = probe.select(col(probeKey).as("__probe_key"))
     pruned.join(keys, col(bigKey) === col("__probe_key"), "left_semi")
   }
+
+  /** (Re)build a store's persisted COVERAGE bloom at `out`: one row —
+    * `bf`, the bloom over `key` for every row of the parquet store at
+    * `store` with `b ≤ coveredUpTo` (the whole store when it carries no
+    * `b`), exact item count, Spark's default ~3% fpp — plus
+    * `covered_up_to` and `n_items`, so a serve can split covered rows
+    * from those absorbed since. Rebuilt at init and fold time; between
+    * rebuilds the artifact goes stale-but-correct, because serves run
+    * the `b > covered_up_to` slice through a plain exact join. A store
+    * with no readable schema (no partition written yet) or no rows
+    * writes no sketch. */
+  def writeCoverage(s: SparkSession, store: String, key: Column,
+                    coveredUpTo: Long, out: String): Unit = {
+    scala.util.Try {
+      val df = s.read.parquet(store)
+      df.schema // force analysis — inference failure must land in the Try
+      df
+    }.foreach { all =>
+      val slice =
+        if (all.columns.contains("b")) all.filter(col("b").cast("long") <= coveredUpTo)
+        else all
+      val n = slice.count()
+      if (n > 0) {
+        register(s)
+        slice
+          .agg(call_function("graft_bloom_agg", key, lit(n)).as("bf"))
+          .withColumn("covered_up_to", lit(coveredUpTo))
+          .withColumn("n_items", lit(n))
+          .coalesce(1)
+          .write.mode("overwrite").parquet(out)
+      }
+    }
+  }
+
+  /** The coverage bloom at `dir` ([[writeCoverage]]) as an in-plan
+    * scalar plus its coverage bound — None when absent, unreadable
+    * (e.g. a mid-rebuild crash; the caller falls back to the plain
+    * join) or smaller than `minItems` (below which the sketch's fixed
+    * overhead costs more than the shuffle it saves). The sketch is an
+    * access path, never a semantics. */
+  def readCoverage(s: SparkSession, dir: String,
+                   minItems: Long): Option[(Column, Long)] = {
+    val bp = new org.apache.hadoop.fs.Path(dir)
+    if (!bp.getFileSystem(s.sessionState.newHadoopConf()).exists(bp)) None
+    else scala.util.Try {
+      val art = s.read.parquet(dir)
+      val meta = art.select(col("covered_up_to"), col("n_items")).head()
+      register(s)
+      (art.select(col("bf")).scalar(), meta.getLong(0), meta.getLong(1))
+    }.toOption.collect {
+      case (bf, covered, n) if n >= minItems => (bf, covered)
+    }
+  }
 }

@@ -82,39 +82,15 @@ object Curation {
       dsirBuckets, s"$path/dsir", seed)
   }
 
-  /** (Re)build the persisted hash-log bloom sketch (`hashbloom/`): one
-    * binary row — Spark's own [[org.apache.spark.sql.catalyst
-    * .expressions.aggregate.BloomFilterAggregate]] over
-    * `xxhash64(content_hash)` for every log row with `b ≤ coveredUpTo`
-    * (the whole log for batch-layout stores, which carry no `b`) — plus
-    * the coverage bound serve needs to split covered from
-    * since-absorbed hashes. Built at store-init and REBUILT at fold
-    * time ([[graft.streaming.CurationStream.foldStore]]); between
-    * rebuilds the artifact goes stale-but-correct, because serve runs
-    * the residual `b > covered_up_to` slice through a plain exact
-    * anti-join. Sizing: exact item count, Spark's default ~3% fpp
-    * (items beyond the conf's bloom cap only raise the fpp — false
-    * positives fall through to the exact join, so correctness never
-    * depends on the sketch). An empty log writes no sketch. */
+  /** (Re)build the hash log's coverage bloom (`hashbloom/`,
+    * [[Blooms.writeCoverage]] over `xxhash64(content_hash)`): built at
+    * store-init, REBUILT at fold time
+    * ([[graft.streaming.CurationStream.foldStore]]). Batch-layout
+    * stores carry no `b` and cover the whole log. */
   def writeHashBloom(s: SparkSession, path: String,
-                     coveredUpTo: Long): Unit = {
-    val hashes = s.read.parquet(s"$path/hashes")
-    val slice =
-      if (hashes.columns.contains("b"))
-        hashes.filter(col("b").cast("long") <= coveredUpTo)
-      else hashes
-    val n = slice.count()
-    if (n > 0) {
-      Blooms.register(s)
-      slice
-        .agg(call_function("graft_bloom_agg",
-          xxhash64(col("content_hash")), lit(n)).as("bf"))
-        .withColumn("covered_up_to", lit(coveredUpTo))
-        .withColumn("n_items", lit(n))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/hashbloom")
-    }
-  }
+                     coveredUpTo: Long): Unit =
+    Blooms.writeCoverage(s, s"$path/hashes", xxhash64(col("content_hash")),
+      coveredUpTo, s"$path/hashbloom")
 
   /** The history hash log, cut to batches `b < batchCut` for
     * stream-layout stores (the redelivery fence); batch-layout stores
@@ -123,25 +99,6 @@ object Curation {
                         batchCut: Option[Long]): DataFrame = {
     val raw = s.read.parquet(s"$path/hashes")
     batchCut.fold(raw)(c => raw.filter(col("b").cast("long") < lit(c)))
-  }
-
-  /** The persisted hash-log bloom ([[writeHashBloom]]) as an in-plan
-    * scalar + its coverage bound — None when absent, unreadable (e.g. a
-    * mid-rebuild crash; the caller falls back to the plain join) or
-    * smaller than `bloomMinItems` (below which the sketch's fixed
-    * overhead costs more than the shuffle it saves). */
-  private def readBloomArt(s: SparkSession, path: String,
-                           bloomMinItems: Long): Option[(Column, Long)] = {
-    val bp = new org.apache.hadoop.fs.Path(s"$path/hashbloom")
-    if (!bp.getFileSystem(s.sessionState.newHadoopConf()).exists(bp)) None
-    else scala.util.Try {
-      val art = s.read.parquet(s"$path/hashbloom")
-      val meta = art.select(col("covered_up_to"), col("n_items")).head()
-      Blooms.register(s)
-      (art.select(col("bf")).scalar(), meta.getLong(0), meta.getLong(1))
-    }.toOption.collect {
-      case (bf, covered, n) if n >= bloomMinItems => (bf, covered)
-    }
   }
 
   /** Stage 1's history check, SHARED by [[serveBatch]] and
@@ -279,7 +236,7 @@ object Curation {
     // (default 1M ≈ tens of MB) the plain join wins and the sketch is
     // ignored; the storm forces it with bloomMinItems = 0.
     val hashes = cutHashes(s, path, batchCut)
-    val bloomArt = readBloomArt(s, path, bloomMinItems)
+    val bloomArt = Blooms.readCoverage(s, s"$path/hashbloom", bloomMinItems)
     // the bloom split consumes the exactDedup hub three times (the
     // might/not-might splits plus the prefilter probe) — cut it ONCE
     // (the q139 localCheckpoint-hub discipline; round-15 advice found
@@ -438,7 +395,7 @@ object Curation {
                  lexicalLane: Boolean = false): DataFrame = {
     ArrayMath.register(s) // int8_quantize resolves at construction below
     val hashes = cutHashes(s, path, batchCut)
-    val bloomArt = readBloomArt(s, path, bloomMinItems)
+    val bloomArt = Blooms.readCoverage(s, s"$path/hashbloom", bloomMinItems)
     // the audit always has 2+ consumers of the exactDedup hub (the
     // keeper labeling join + the hash check) — cut it once
     val keepers = TextOps.exactDedup(batchDocs, idCol, textCol)

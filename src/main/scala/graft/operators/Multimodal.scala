@@ -296,11 +296,8 @@ object Multimodal {
     * (round 18), whose drift-chain law PhashStreamSpec plants. */
   def appendPhash(hashes: DataFrame, path: String, batchId: Long): Unit = {
     require(batchId >= 1, s"batchId=$batchId collides with the b=0 seed")
-    hashes.select(col("media_id"), col("dhash"))
-      .withColumn("b", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("b").parquet(s"$path/phash")
+    graft.streaming.BatchStore.writeBatch(
+      hashes.select(col("media_id"), col("dhash")), batchId, s"$path/phash")
   }
 
   /** Serve ONE new media batch against the frozen phash store — the

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.streaming.BatchStore
+
 /** Exact-substring span dedup: find and cut MAXIMAL duplicated token
   * spans at arbitrary offsets — the stride-1 sibling of
   * [[TextOps.removeDuplicatedBlocks]]'s block grid, which by
@@ -135,7 +137,7 @@ object SpanDedup {
     * semantics. */
   private def storeHits(s: SparkSession, path: String, occ: DataFrame,
                         store: DataFrame, bloomMinItems: Long): DataFrame =
-    readGramBloom(s, path, bloomMinItems).fold(
+    Blooms.readCoverage(s, s"$path/grambloom", bloomMinItems).fold(
       occ.join(store.select("__gh"), Seq("__gh"), "left_semi")
     ) { case (bf, covered) =>
       val coveredSlice = store.filter(col("b").cast("long") <= covered)
@@ -299,65 +301,25 @@ object SpanDedup {
   }
 
   /** Absorb one batch's distinct gram hashes under `b = batchId` —
-    * an idempotent dynamic partition overwrite, the
-    * [[graft.streaming.CurationStream]] absorption discipline. The
-    * bloom's coverage does NOT move: absorbed batches sit above
-    * `covered_up_to` and serve through the residual plain semi-join
-    * until [[writeGramBloom]] re-sweeps. */
+    * an idempotent dynamic partition overwrite
+    * ([[graft.streaming.BatchStore.writeBatch]]). The bloom's coverage
+    * does NOT move: absorbed batches sit above `covered_up_to` and
+    * serve through the residual plain semi-join until
+    * [[writeGramBloom]] re-sweeps. */
   def appendGrams(docs: DataFrame, idCol: String, textCol: String,
                   k: Int, path: String, batchId: Long): Unit = {
     require(batchId >= 1, s"batchId=$batchId collides with the b=0 seed")
-    gramStarts(docs, idCol, textCol, k)
-      .select(col("__gh")).distinct()
-      .withColumn("b", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("b").parquet(s"$path/grams")
+    BatchStore.writeBatch(gramStarts(docs, idCol, textCol, k)
+      .select(col("__gh")).distinct(), batchId, s"$path/grams")
   }
 
-  /** (Re)build the bloom over batches `b <= coveredUpTo` — one
-    * aggregate over the slice, one atomic artifact overwrite. */
+  /** (Re)build the gram log's coverage bloom (`grambloom/`,
+    * [[Blooms.writeCoverage]] over `__gh`) over batches
+    * `b <= coveredUpTo`. */
   def writeGramBloom(s: SparkSession, path: String,
-                     coveredUpTo: Long): Unit = {
-    // an empty store has no readable schema (zero partitions) and
-    // needs no sketch
-    val slice = scala.util.Try {
-      val df = s.read.parquet(s"$path/grams")
-      df.schema
-      df
-    }.toOption match {
-      case Some(df) => df.filter(col("b").cast("long") <= coveredUpTo)
-      case None => return
-    }
-    val n = slice.count()
-    if (n > 0) {
-      Blooms.register(s)
-      slice
-        .agg(call_function("graft_bloom_agg", col("__gh"), lit(n)).as("bf"))
-        .withColumn("covered_up_to", lit(coveredUpTo))
-        .withColumn("n_items", lit(n))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/grambloom")
-    }
-  }
-
-  /** The persisted gram bloom as an in-plan scalar + its coverage
-    * bound — None when absent, unreadable, or too small to pay for
-    * itself (the [[Curation]] fallback discipline: the sketch is an
-    * access path, never a semantics). */
-  private def readGramBloom(s: SparkSession, path: String,
-                            bloomMinItems: Long): Option[(Column, Long)] = {
-    val bp = new org.apache.hadoop.fs.Path(s"$path/grambloom")
-    if (!bp.getFileSystem(s.sessionState.newHadoopConf()).exists(bp)) None
-    else scala.util.Try {
-      val art = s.read.parquet(s"$path/grambloom")
-      val meta = art.select(col("covered_up_to"), col("n_items")).head()
-      Blooms.register(s)
-      (art.select(col("bf")).scalar(), meta.getLong(0), meta.getLong(1))
-    }.toOption.collect {
-      case (bf, covered, n) if n >= bloomMinItems => (bf, covered)
-    }
-  }
+                     coveredUpTo: Long): Unit =
+    Blooms.writeCoverage(s, s"$path/grams", col("__gh"), coveredUpTo,
+      s"$path/grambloom")
 
   /** Cut ONE new batch against the frozen gram store — the shape the
     * 100 TB path runs: history never re-shuffles (only the batch's

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Engine
 import graft.functions.TextHashFunctions
+import graft.streaming.BatchStore
 
 /** Large-scale training-data text operators (the capabilities a 100 TB
   * document pipeline needs beyond the reference's ETL surface — see the
@@ -748,11 +749,8 @@ object TextOps {
   def appendSimhash(hashes: DataFrame, idCol: String, path: String,
                     batchId: Long): Unit = {
     require(batchId >= 1, s"batchId=$batchId collides with the b=0 seed")
-    hashes.select(col(idCol), col("simhash"))
-      .withColumn("b", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("b").parquet(s"$path/simhash")
+    BatchStore.writeBatch(hashes.select(col(idCol), col("simhash")),
+      batchId, s"$path/simhash")
   }
 
   /** Serve ONE new document batch against the frozen simhash store —
@@ -860,14 +858,11 @@ object TextOps {
     // row seen twice — a folded snapshot coexisting with its source
     // partitions after a mid-fold crash, or a redelivered overwrite —
     // can never double-count ([[graft.streaming.SegDfStream.foldSegDf]]).
-    val df = segmentsOf(docs, idCol, textCol, segLen)
-      .select(col("__seg"), col(idCol)).distinct()
-      .groupBy(col("__seg")).agg(count(lit(1)).as("df"))
-      .withColumn("src", lit(batchId))
-      .withColumn("b", lit(batchId))
-    df.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("b").parquet(s"$path/segdf")
+    BatchStore.writeBatch(segmentsOf(docs, idCol, textCol, segLen)
+        .select(col("__seg"), col(idCol)).distinct()
+        .groupBy(col("__seg")).agg(count(lit(1)).as("df"))
+        .withColumn("src", lit(batchId)),
+      batchId, s"$path/segdf")
   }
 
   /** The (idCol, __i, __seg) segment lattice shared by
@@ -1463,10 +1458,11 @@ object TextOps {
     * `b < upTo` directories. Not crash-atomic (a failure between the
     * last two steps leaves folded rows double-counted until the fold
     * is re-run) — same recovery-by-rerun class as the in-place
-    * partition rewrite; production wraps it in the store's commit
-    * protocol. Stream-committed batch markers (IndexStream) are kept:
-    * they fence a redelivered producer from re-appending a batch the
-    * fold already absorbed. */
+    * partition rewrite. A stream-maintained index folds through
+    * [[graft.streaming.IndexStream.foldPostingIndex]], which runs the
+    * commit-marker fence first; its markers are kept: they fence a
+    * redelivered producer from re-appending a batch the fold already
+    * absorbed. */
   def foldPostingIndexVersions(s: org.apache.spark.sql.SparkSession,
                                path: String, upTo: Long): Unit = {
     requireVersionedStatsLayout(s, path)
@@ -1481,10 +1477,8 @@ object TextOps {
           s.read.parquet(s"$path/$sub").filter(col("b") <= upTo).drop("b"))
         .withColumn("b", lit(upTo))
         .localCheckpoint() // materialize BEFORE touching source dirs
-      val w = merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-      w.partitionBy(parts: _*).parquet(s"$path/$sub")
-      deleteBatchDirsBelow(s, s"$path/$sub", upTo)
+      BatchStore.overwrite(merged, s"$path/$sub", parts)
+      BatchStore.dropBelow(s, s"$path/$sub", upTo)
     }
     foldArtifact("postings", df => df.repartition(col("tp")),
       Seq("tp", "b"))
@@ -1496,22 +1490,6 @@ object TextOps {
       df => df.agg(sum(col("n")).as("n"), sum(col("dl_sum")).as("dl_sum"),
         sum(col("dl_cnt")).as("dl_cnt")),
       Seq("b"))
-  }
-
-  /** Remove every `b=<k>` partition directory with k < upTo, at the
-    * artifact root and one `tp=` level below it. */
-  private def deleteBatchDirsBelow(s: org.apache.spark.sql.SparkSession,
-                                   dir: String, upTo: Long): Unit = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(s.sessionState.newHadoopConf())
-    val parents = root +: fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("tp="))
-      .map(_.getPath).toSeq
-    for (p <- parents; st <- fs.listStatus(p)
-         if st.isDirectory && st.getPath.getName.startsWith("b=")) {
-      val b = st.getPath.getName.stripPrefix("b=").toLong
-      if (b < upTo) fs.delete(st.getPath, true)
-    }
   }
 
   /** Idempotently (re)write ONE batch of a VERSIONED posting index —

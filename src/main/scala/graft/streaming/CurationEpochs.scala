@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -55,14 +55,8 @@ object CurationEpochs {
 
   /** Every published epoch, ascending (may include superseded ones —
     * they remain valid, fully-built stores until dropped). */
-  def publishedEpochs(s: SparkSession, root: String): Seq[Long] = {
-    val p = new Path(s"$root/_published")
-    val fs = fsOf(s, p)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .flatMap(st => scala.util.Try(st.getPath.getName.toLong).toOption)
-      .sorted
-  }
+  def publishedEpochs(s: SparkSession, root: String): Seq[Long] =
+    BatchStore.markerIds(s, s"$root/_published")
 
   /** The serving epoch: the highest published marker. */
   def currentEpoch(s: SparkSession, root: String): Long = {
@@ -76,14 +70,11 @@ object CurationEpochs {
     * the same fence [[CurationStream.foldStore]] applies to batches).
     * Idempotent: re-publishing an already-published epoch is a no-op. */
   def publish(s: SparkSession, root: String, epoch: Long): Unit = {
-    require(CurationStream.committed(s, epochPath(root, epoch), 0L),
+    require(BatchStore.committed(s, epochPath(root, epoch), 0L),
       s"publish(epoch=$epoch): store ${epochPath(root, epoch)} is not " +
         "complete (b=0 seed has no commit marker) — a half-built epoch " +
         "must never become the serving version")
-    val p = new Path(s"$root/_published/$epoch")
-    val fs = fsOf(s, p)
-    fs.mkdirs(p.getParent)
-    if (!fs.exists(p)) fs.create(p, false).close()
+    BatchStore.touch(s, s"$root/_published/$epoch")
   }
 
   /** Build AND publish an epoch: train every frozen model on the given
@@ -125,10 +116,7 @@ object CurationEpochs {
   private def pinEpoch(s: SparkSession, root: String, batchId: Long): Long =
     pinnedEpoch(s, root, batchId).getOrElse {
       val e = currentEpoch(s, root)
-      val p = new Path(s"$root/_epoch_of/$batchId.$e")
-      val fs = fsOf(s, p)
-      fs.mkdirs(p.getParent)
-      try { fs.create(p, false).close(); e }
+      try { BatchStore.touch(s, s"$root/_epoch_of/$batchId.$e", exclusive = true); e }
       catch { case ex: java.io.IOException =>
         // an exclusive-create failure is a LOST RACE only if a pin now
         // exists — then the recorded pin wins. Any other IOException
@@ -168,30 +156,21 @@ object CurationEpochs {
                clusterCap: Long, seed: String, checkpoint: String,
                batchIdOffset: Long = 1L,
                lexicalLane: Boolean = false): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val b = batch.toDF().localCheckpoint(true)
+    BatchStore.foreachBatch(docs, checkpoint, localCheckpoint = true) {
+      (b, batchId) =>
         applyBatchEpoch(
           b.select(col(idCol), col(srcCol), col(labelCol), col(textCol)),
           b.select(col(idCol), col(vecCol)),
           idCol, vecCol, labelCol, srcCol, textCol,
           root, thrNum, thrDen, clusterCap, seed,
           batchId + batchIdOffset, lexicalLane = lexicalLane): Unit
-      }
-      .start()
+    }
 
   /** Epochs whose curated output has been compacted into
     * `curated_archive/` and whose stores are retired (or mid-retirement
     * — the marker is created BEFORE the store drop). */
-  def archivedEpochs(s: SparkSession, root: String): Seq[Long] = {
-    val p = new Path(s"$root/_archived")
-    val fs = fsOf(s, p)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .flatMap(st => scala.util.Try(st.getPath.getName.toLong).toOption)
-      .sorted
-  }
+  def archivedEpochs(s: SparkSession, root: String): Seq[Long] =
+    BatchStore.markerIds(s, s"$root/_archived")
 
   /** All curated output across epochs, each row carrying the epoch that
     * served it (the verdict's "curated output carries the serving
@@ -254,17 +233,10 @@ object CurationEpochs {
       require(e != serving, s"foldEpochs: refusing to retire serving epoch $e")
       val cur = new Path(s"${epochPath(root, e)}/curated")
       if (fsOf(s, cur).exists(cur)) {
-        s.read.parquet(cur.toString)
-          .withColumn("epoch", lit(e))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("epoch")
-          .parquet(s"$root/curated_archive")
+        BatchStore.overwrite(s.read.parquet(cur.toString)
+          .withColumn("epoch", lit(e)), s"$root/curated_archive", Seq("epoch"))
       }
-      val m = new Path(s"$root/_archived/$e")
-      val fs = fsOf(s, m)
-      fs.mkdirs(m.getParent)
-      if (!fs.exists(m)) fs.create(m, false).close()
+      BatchStore.touch(s, s"$root/_archived/$e")
       dropEpoch(s, root, e)
     }
   }
@@ -307,11 +279,14 @@ object CurationEpochs {
     // reading `currentEpoch` — so a published epoch can never be
     // missing from the audit log, and a logged publish is completed at
     // the latest one tick later while the old epoch keeps serving.
+    // The gatecrash storm (Stress mode "gatecrash") kills the JVM in
+    // both windows: `-Dgraft.epochs.crashAfterBuild=<gateSeq>` after
+    // (1), `-Dgraft.epochs.crashAfterGate=<gateSeq>` after (2).
     if (published) {
       CurationStream.init(corpusDocs, corpusVecs, idCol, vecCol, labelCol,
         textCol, k, iters, numMerges, maxWords, dsirTarget, dsirBuckets,
         epochPath(root, newEpoch), seed)
-      crashPoint("graft.epochs.crashAfterBuild", gateSeq)
+      BatchStore.crashPoint("graft.epochs.crashAfterBuild", gateSeq)
     }
     s.range(1).select(
         lit(gateSeq).as("gate_seq"),
@@ -321,7 +296,7 @@ object CurationEpochs {
         lit(if (published) newEpoch else cur).as("serving_epoch"))
       .write.mode("append").parquet(s"$root/_gate")
     if (published) {
-      crashPoint("graft.epochs.crashAfterGate", gateSeq)
+      BatchStore.crashPoint("graft.epochs.crashAfterGate", gateSeq)
       publish(s, root, newEpoch)
     }
     (drift, published)
@@ -355,17 +330,6 @@ object CurationEpochs {
         expr("(n_docs - n_agree) * 10000 DIV n_docs"))
   }
 
-  /** Crash injection for the epoch-swap storm (Stress mode "gatecrash"):
-    * `-Dgraft.epochs.crashAfterBuild=<gateSeq>` halts right after the
-    * candidate store is built (pre-log, pre-swap),
-    * `-Dgraft.epochs.crashAfterGate=<gateSeq>` after the decision row
-    * lands but BEFORE the pointer moves — the two worst-ordered windows
-    * the gate ordering must survive. halt (not exit) so no shutdown
-    * hook tidies the simulated kill. */
-  private def crashPoint(prop: String, gateSeq: Long): Unit =
-    if (sys.props.get(prop).exists(_.toLong == gateSeq))
-      Runtime.getRuntime.halt(137)
-
   /** Heal the logged-but-unswapped crash window: any `_gate` row with
     * `published = 1` whose epoch has a COMPLETE store (b=0 seed commit
     * marker) but no published marker gets its [[publish]] completed —
@@ -381,7 +345,7 @@ object CurationEpochs {
       .collect().map(_.getLong(0))
     val already = publishedEpochs(s, root).toSet
     logged.filterNot(already).sorted.foreach { e =>
-      if (CurationStream.committed(s, epochPath(root, e), 0L))
+      if (BatchStore.committed(s, epochPath(root, e), 0L))
         publish(s, root, e)
     }
   }

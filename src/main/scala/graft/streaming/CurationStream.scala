@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -41,22 +41,8 @@ import graft.operators.{Clustering, Curation, Sampling, Similarity, TextOps}
   *   hashes/   — content hashes under b= (b=0 seeds the history)
   *   curated/  — the output: served rows under b=
   *   nb/ bpe/ dsir/ — the frozen per-doc models
-  *   _committed/<id> — batch markers */
+  *   the batch markers of [[BatchStore]] */
 object CurationStream {
-
-  /** Has `batchId` been fully applied (artifacts + marker)? */
-  def committed(s: SparkSession, path: String, batchId: Long): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_committed/$batchId")
-    p.getFileSystem(s.sessionState.newHadoopConf()).exists(p)
-  }
-
-  private def markCommitted(s: SparkSession, path: String,
-                            batchId: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_committed/$batchId")
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    fs.mkdirs(p.getParent)
-    fs.create(p, true).close()
-  }
 
   /** Build the stream-layout curation store: every frozen model trained
     * on history ONLY, history's members/hashes seeded under b=0.
@@ -81,24 +67,17 @@ object CurationStream {
       s"$path/bpe")
     Sampling.writeDsirWeights(histDocs, idCol, textCol, dsirTarget,
       dsirBuckets, s"$path/dsir", seed)
-    markCommitted(s, path, 0L)
+    BatchStore.commit(s, path, 0L)
   }
-
-  /** Crash injection for the curcrash storm (Stress mode "curcrash"):
-    * `-Dgraft.curation.crashAfterCurated=<b>` halts the JVM right after
-    * batch b's curated write, `-Dgraft.curation.crashAfterAbsorb=<b>`
-    * after its full absorption — both BEFORE the commit marker, the two
-    * worst-ordered crash windows redelivery must survive. `halt` (not
-    * exit) so no shutdown hook can tidy the simulated kill. Production
-    * cost: one sys.props read per batch. */
-  private def crashPoint(prop: String, batchId: Long): Unit =
-    if (sys.props.get(prop).exists(_.toLong == batchId))
-      Runtime.getRuntime.halt(137)
 
   /** Apply one micro-batch: skip if committed; else SERVE against the
     * pre-batch store (batchCut fence), write the curated rows, absorb
     * the survivors' routed vectors and hashes — all idempotent dynamic
-    * overwrites — then the marker.
+    * overwrites — then the marker. Crash points for the curcrash storm
+    * (Stress mode "curcrash"): `-Dgraft.curation.crashAfterCurated=<b>`
+    * halts the JVM right after batch b's curated write,
+    * `-Dgraft.curation.crashAfterAbsorb=<b>` after its full absorption
+    * ([[BatchStore.applyOnce]]).
     *
     * `lexicalLane` is [[graft.operators.Curation.serveBatch]]'s opt-in
     * passed through: vectorless keepers curate through the no-vector
@@ -117,8 +96,9 @@ object CurationStream {
                  lexicalLane: Boolean = false): Unit = {
     val s = batchDocs.sparkSession
     require(batchId >= 1, s"batchId=$batchId collides with the b=0 seed")
-    if (committed(s, path, batchId)) return
-    if (!batchDocs.isEmpty) {
+    BatchStore.applyOnce(batchDocs, path, batchId,
+        Some("graft.curation.crashAfterCurated"),
+        Some("graft.curation.crashAfterAbsorb")) {
       // materialize the serve ONCE: three artifacts derive from it,
       // and a lazy plan would re-run the whole serve per write
       val served = Curation.serveBatch(s, path, batchDocs, batchVecs,
@@ -126,29 +106,19 @@ object CurationStream {
           thrNum, thrDen, clusterCap, seed, batchCut = Some(batchId),
           lexicalLane = lexicalLane)
         .localCheckpoint(eager = true)
-      served.withColumn("b", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("b").parquet(s"$path/curated")
-      crashPoint("graft.curation.crashAfterCurated", batchId)
+      BatchStore.writeBatch(served, batchId, s"$path/curated")
+      served
+    } { served =>
       val survivors = served.select(col(idCol))
-      Clustering.assignToCentroidsKeepVec(
+      BatchStore.writeBatch(Clustering.assignToCentroidsKeepVec(
           batchVecs.join(survivors, Seq(idCol)), idCol, vecCol,
-          Similarity.readSemCents(s, s"$path/sem"))
-        .withColumn("b", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("b", "cluster").parquet(s"$path/sem/members")
-      batchDocs.join(survivors, Seq(idCol))
-        .select(md5(TextOps.normalizeText(col(textCol))).as("content_hash"))
-        .distinct()
-        .withColumn("b", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("b").parquet(s"$path/hashes")
+          Similarity.readSemCents(s, s"$path/sem")),
+        batchId, s"$path/sem/members", "cluster")
+      BatchStore.writeBatch(batchDocs.join(survivors, Seq(idCol))
+          .select(md5(TextOps.normalizeText(col(textCol))).as("content_hash"))
+          .distinct(),
+        batchId, s"$path/hashes")
     }
-    crashPoint("graft.curation.crashAfterAbsorb", batchId)
-    markCommitted(s, path, batchId)
   }
 
   /** Retention fold for the curation store — [[SemStream.foldSemStore]]'s
@@ -168,64 +138,14 @@ object CurationStream {
     * the driver oracle, which replays the 3-batch chain with no idea a
     * fold happened between batches 2 and 3.
     *
-    * Fold-safety fence (the foldSemStore discipline): every batch with
-    * rows on disk at or below the fold point must carry its commit
-    * marker — folding a crashed batch's partial absorption would strand
-    * rows under b=upTo that its redelivery then re-absorbs under b=k,
-    * duplicating members — and the fold point must not sit above the
-    * last committed batch. */
+    * [[BatchStore.fold]]'s fence checks both artifacts: every batch
+    * with rows at or below the fold point must carry its commit marker,
+    * and the fold point must not sit above the last committed batch. */
   def foldStore(s: SparkSession, path: String, upTo: Long): Unit = {
-    val hconf = s.sessionState.newHadoopConf()
-    def batchesOf(sub: String): Seq[Long] = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      val fs = p.getFileSystem(hconf)
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("b="))
-        .map(_.getPath.getName.stripPrefix("b=").toLong)
-    }
-    val present = (batchesOf("sem/members") ++ batchesOf("hashes"))
-      .distinct.filter(_ <= upTo)
-    val uncommitted = present.filterNot(committed(s, path, _)).sorted
-    require(uncommitted.isEmpty,
-      s"foldStore(upTo=$upTo): batch(es) ${uncommitted.mkString(", ")} " +
-        s"have rows under $path but no commit marker — a producer " +
-        "crashed mid-batch; let redelivery complete them before folding")
-    val committedMax: Long = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/_committed")
-      val fs = p.getFileSystem(hconf)
-      if (!fs.exists(p)) -1L
-      else fs.listStatus(p).toSeq
-        .flatMap(st => scala.util.Try(st.getPath.getName.toLong).toOption)
-        .foldLeft(-1L)(math.max)
-    }
-    require(upTo <= committedMax,
-      s"foldStore(upTo=$upTo): fold point is above the last committed " +
-        s"batch ($committedMax)")
-    def deleteBelow(sub: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      val fs = p.getFileSystem(hconf)
-      if (fs.exists(p)) fs.listStatus(p)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("b="))
-        .filter(_.getPath.getName.stripPrefix("b=").toLong < upTo)
-        .foreach(st => fs.delete(st.getPath, true))
-    }
-    def fold(sub: String, parts: Seq[String], dedupKeys: Seq[String],
-             shuffleKey: Option[String]): Unit =
-      if (batchesOf(sub).count(_ <= upTo) > 1) {
-        val read = s.read.parquet(s"$path/$sub")
-          .filter(col("b").cast("long") <= upTo).drop("b")
-          .dropDuplicates(dedupKeys) // exact: crash-rerun sees rows twice
-          .withColumn("b", lit(upTo))
-        val merged = shuffleKey.fold(read)(k => read.repartition(col(k)))
-          .localCheckpoint() // materialize BEFORE touching source dirs
-        merged.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(parts: _*).parquet(s"$path/$sub")
-        deleteBelow(sub)
-      }
-    fold("sem/members", Seq("b", "cluster"), Seq("id"), Some("cluster"))
-    fold("hashes", Seq("b"), Seq("content_hash"), None)
+    BatchStore.fold(s, path, upTo, "foldStore",
+      BatchStore.Folded("sem/members", Seq("id"), more = Seq("cluster"),
+        shuffle = Some("cluster")),
+      BatchStore.Folded("hashes", Seq("content_hash")))
     // rebuild the serve path's hash-log bloom over the folded snapshot
     // (Curation.writeHashBloom): between rebuilds the sketch is
     // stale-but-correct — serve runs b > covered_up_to through a plain
@@ -243,16 +163,13 @@ object CurationStream {
                clusterCap: Long, seed: String, checkpoint: String,
                batchIdOffset: Long = 1L,
                lexicalLane: Boolean = false): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val b = batch.toDF().localCheckpoint(true)
+    BatchStore.foreachBatch(docs, checkpoint, localCheckpoint = true) {
+      (b, batchId) =>
         applyBatch(
           b.select(col(idCol), col(srcCol), col(labelCol), col(textCol)),
           b.select(col(idCol), col(vecCol)),
           idCol, vecCol, labelCol, srcCol, textCol,
           path, thrNum, thrDen, clusterCap, seed, batchId + batchIdOffset,
           lexicalLane = lexicalLane)
-      }
-      .start()
+    }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.TextOps
@@ -20,11 +20,11 @@ import graft.operators.TextOps
   *     through — replaces that batch's partitions with identical
   *     content rather than appending duplicates; any replay converges
   *     to the same store state;
-  *  2. a committed-batch marker (`_committed/<batchId>`, written AFTER
+  *  2. a committed-batch marker ([[BatchStore.commit]], written AFTER
   *     the batch's artifacts) turns redelivery of a completed batch
   *     into a metadata-only no-op — and fences a replayed producer
   *     from re-creating a batch that a retention fold
-  *     ([[TextOps.foldPostingIndexVersions]]) has already absorbed
+  *     ([[foldPostingIndex]]) has already absorbed
   *     into the base snapshot (which is why folds keep the markers).
   *
   * A crash between the artifact writes and the marker is the case
@@ -43,34 +43,33 @@ import graft.operators.TextOps
   */
 object IndexStream {
 
-  /** Has `batchId` already been fully applied (artifacts + marker)? */
-  def committed(s: SparkSession, path: String, batchId: Long): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_committed/$batchId")
-    p.getFileSystem(s.sessionState.newHadoopConf()).exists(p)
-  }
-
-  private def markCommitted(s: SparkSession, path: String,
-                            batchId: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_committed/$batchId")
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    fs.mkdirs(p.getParent)
-    fs.create(p, true).close()
-  }
-
   /** Apply one micro-batch: skip if committed, else idempotent
-    * versioned upsert, then the marker. Public so a recovery path (or
-    * a spec) can replay delivery exactly as the running stream would.
-    * Empty batches write no artifacts but still commit their marker —
-    * an empty epoch is progress, not a gap. */
+    * versioned upsert, then the marker ([[BatchStore.applyOnce]]).
+    * Public so a recovery path (or a spec) can replay delivery exactly
+    * as the running stream would. Batch ids start at 0: the index has
+    * no seed. */
   def applyBatch(batch: DataFrame, idCol: String, textCol: String,
-                 path: String, parts: Int, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    if (!committed(s, path, batchId)) {
-      if (!batch.isEmpty)
-        TextOps.upsertPostingIndexBatch(batch, idCol, textCol, path, parts,
-          batchId)
-      markCommitted(s, path, batchId)
-    }
+                 path: String, parts: Int, batchId: Long): Unit =
+    BatchStore.applyOnce(batch, path, batchId) {
+      TextOps.upsertPostingIndexBatch(batch, idCol, textCol, path, parts,
+        batchId)
+    }(_ => ())
+
+  /** Retention fold for a stream-maintained index: the fold-safety
+    * fence every batch store shares ([[BatchStore.fence]], over the
+    * `b=` directories of `postings` and `dfreq` under their `tp=`
+    * partitions and of `stats`), then
+    * [[TextOps.foldPostingIndexVersions]]. Without the fence a fold
+    * over a crashed batch (artifacts written, marker missing) labels
+    * its partial rows `b = upTo`, and the redelivery's dynamic
+    * overwrite of that same partition then replaces the whole folded
+    * history; a fold point above the last committed batch goes the
+    * same way when that batch arrives. Scheduler-built versioned
+    * stores carry no markers and call TextOps directly. */
+  def foldPostingIndex(s: SparkSession, path: String, upTo: Long): Unit = {
+    BatchStore.fence(s, path, upTo, "foldPostingIndex",
+      Seq("postings", "dfreq", "stats"))
+    TextOps.foldPostingIndexVersions(s, path, upTo)
   }
 
   /** Start the maintenance query. Documents must carry `idCol` +
@@ -79,10 +78,8 @@ object IndexStream {
   def maintainPostingIndex(docs: DataFrame, idCol: String, textCol: String,
                            path: String, parts: Int,
                            checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(batch.toDF(), idCol, textCol, path, parts, batchId)
-      }
-      .start()
+    BatchStore.foreachBatch(docs, checkpoint, localCheckpoint = false) {
+      (batch, batchId) =>
+        applyBatch(batch, idCol, textCol, path, parts, batchId)
+    }
 }

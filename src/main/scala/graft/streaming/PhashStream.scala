@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -24,27 +24,14 @@ object PhashStream {
   def init(histMedia: DataFrame, width: Int, path: String): Unit = {
     val s = histMedia.sparkSession
     Multimodal.writePhashStore(histMedia, width, path)
-    markCommitted(s, path, 0L)
+    BatchStore.commit(s, path, 0L)
   }
-
-  private def markCommitted(s: SparkSession, path: String,
-                            batchId: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_committed/$batchId")
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    fs.mkdirs(p.getParent)
-    fs.create(p, true).close()
-  }
-
-  /** Crash injection for the phashcrash storm:
-    * `-Dgraft.phash.crashAfterServe=<b>` halts right after batch b's
-    * verdict write, `-Dgraft.phash.crashAfterAbsorb=<b>` after its hash
-    * absorption — both BEFORE the commit marker (the [[SpanStream]]
-    * windows). */
-  private def crashPoint(prop: String, batchId: Long): Unit =
-    if (sys.props.get(prop).exists(_.toLong == batchId))
-      Runtime.getRuntime.halt(137)
 
   /** Serve + absorb one micro-batch of media; skip if committed.
+    * Crash points for the phashcrash storm:
+    * `-Dgraft.phash.crashAfterServe=<b>` halts right after batch b's
+    * verdict write, `-Dgraft.phash.crashAfterAbsorb=<b>` after its hash
+    * absorption ([[BatchStore.applyOnce]]).
     *
     * `absorbFull` selects WHAT absorbs (round-18, from the round-17
     * recall note at [[Multimodal.appendPhash]]): the default keeper-
@@ -63,16 +50,15 @@ object PhashStream {
                  absorbFull: Boolean = false): Unit = {
     val s = batchMedia.sparkSession
     require(batchId >= 1, s"batchId=$batchId collides with the b=0 seed")
-    if (CurationStream.committed(s, path, batchId)) return
-    if (!batchMedia.isEmpty) {
+    BatchStore.applyOnce(batchMedia, path, batchId,
+        Some("graft.phash.crashAfterServe"),
+        Some("graft.phash.crashAfterAbsorb")) {
       val served = Multimodal.servePhashDedup(s, path, batchMedia,
           width, maxDist, batchCut = Some(batchId))
         .localCheckpoint(eager = true) // feeds the persist AND the absorb
-      served.withColumn("b", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("b").parquet(s"$path/served")
-      crashPoint("graft.phash.crashAfterServe", batchId)
+      BatchStore.writeBatch(served, batchId, s"$path/served")
+      served
+    } { served =>
       val batchHashes = Multimodal.perceptualHash(batchMedia, width)
       Multimodal.appendPhash(
         if (absorbFull) batchHashes
@@ -81,61 +67,15 @@ object PhashStream {
             Seq("media_id"), "left_semi"),
         path, batchId)
     }
-    crashPoint("graft.phash.crashAfterAbsorb", batchId)
-    markCommitted(s, path, batchId)
   }
 
-  /** Retention fold for the hash index — [[SpanStream.foldGrams]]'
-    * move on the one artifact the serve reads: batches `b ≤ upTo`
-    * merge into one snapshot labeled `b = upTo`; read-invisibility for
-    * any `batchCut > upTo`. Same fold-safety fence: no uncommitted
-    * batch at or below the fold point, fold point not above the last
-    * committed batch. */
-  def foldPhash(s: SparkSession, path: String, upTo: Long): Unit = {
-    val hconf = s.sessionState.newHadoopConf()
-    def batches: Seq[Long] = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/phash")
-      val fs = p.getFileSystem(hconf)
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("b="))
-        .map(_.getPath.getName.stripPrefix("b=").toLong)
-    }
-    val uncommitted = batches.filter(_ <= upTo)
-      .filterNot(CurationStream.committed(s, path, _)).sorted
-    require(uncommitted.isEmpty,
-      s"foldPhash(upTo=$upTo): batch(es) ${uncommitted.mkString(", ")} " +
-        s"have hashes under $path but no commit marker — a producer " +
-        "crashed mid-batch; let redelivery complete them before folding")
-    val committedMax: Long = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/_committed")
-      val fs = p.getFileSystem(hconf)
-      if (!fs.exists(p)) -1L
-      else fs.listStatus(p).toSeq
-        .flatMap(st => scala.util.Try(st.getPath.getName.toLong).toOption)
-        .foldLeft(-1L)(math.max)
-    }
-    require(upTo <= committedMax,
-      s"foldPhash(upTo=$upTo): fold point is above the last committed " +
-        s"batch ($committedMax)")
-    if (batches.count(_ <= upTo) > 1) {
-      val merged = s.read.parquet(s"$path/phash")
-        .filter(col("b").cast("long") <= upTo).drop("b")
-        .dropDuplicates("media_id") // exact: crash-rerun sees rows twice
-        .withColumn("b", lit(upTo))
-        .repartition(col("dhash"))
-        .localCheckpoint() // materialize BEFORE touching source dirs
-      merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("b").parquet(s"$path/phash")
-      val p = new org.apache.hadoop.fs.Path(s"$path/phash")
-      val fs = p.getFileSystem(hconf)
-      fs.listStatus(p)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("b="))
-        .filter(_.getPath.getName.stripPrefix("b=").toLong < upTo)
-        .foreach(st => fs.delete(st.getPath, true))
-    }
-  }
+  /** Retention fold for the hash index — [[BatchStore.fold]] on the
+    * one artifact the serve reads: batches `b ≤ upTo` merge into one
+    * snapshot labeled `b = upTo`, deduped on `media_id`;
+    * read-invisibility for any `batchCut > upTo`. */
+  def foldPhash(s: SparkSession, path: String, upTo: Long): Unit =
+    BatchStore.fold(s, path, upTo, "foldPhash",
+      BatchStore.Folded("phash", Seq("media_id"), shuffle = Some("dhash")))
 
   /** The real streaming loop: one [[applyBatch]] per micro-batch of
     * (idCol, payloadCol) rows, wrapped through the media-table
@@ -145,14 +85,11 @@ object PhashStream {
                path: String, checkpoint: String,
                batchIdOffset: Long = 1L,
                absorbFull: Boolean = false): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+    BatchStore.foreachBatch(rows, checkpoint, localCheckpoint = true) {
+      (batch, batchId) =>
         applyBatch(
-          Multimodal.asMediaTable(batch.toDF().localCheckpoint(true),
-            idCol, payloadCol, format),
+          Multimodal.asMediaTable(batch, idCol, payloadCol, format),
           width, maxDist, path, batchId + batchIdOffset,
           absorbFull = absorbFull)
-      }
-      .start()
+    }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.TextOps
@@ -29,48 +28,31 @@ object SegDfStream {
     val s = histDocs.sparkSession
     TextOps.writeSegmentDf(histDocs, idCol, textCol, segLen, path,
       batchId = 0L)
-    markCommitted(s, path, 0L)
+    BatchStore.commit(s, path, 0L)
   }
-
-  private def markCommitted(s: SparkSession, path: String,
-                            batchId: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_committed/$batchId")
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    fs.mkdirs(p.getParent)
-    fs.create(p, true).close()
-  }
-
-  /** Crash injection for the segdfcrash storm:
-    * `-Dgraft.segdf.crashAfterServe=<b>` halts right after batch b's
-    * verdict write, `-Dgraft.segdf.crashAfterAbsorb=<b>` after its
-    * count absorption — both BEFORE the commit marker. */
-  private def crashPoint(prop: String, batchId: Long): Unit =
-    if (sys.props.get(prop).exists(_.toLong == batchId))
-      Runtime.getRuntime.halt(137)
 
   /** Serve + absorb one micro-batch of documents; skip if committed.
     * The serve cuts against the SUMMED history df behind the fence;
     * absorption adds the batch's own counts so the next batch's
-    * threshold test sees them. */
+    * threshold test sees them. Crash points for the segdfcrash storm:
+    * `-Dgraft.segdf.crashAfterServe=<b>` halts right after batch b's
+    * verdict write, `-Dgraft.segdf.crashAfterAbsorb=<b>` after its
+    * count absorption ([[BatchStore.applyOnce]]). */
   def applyBatch(batchDocs: DataFrame, idCol: String, textCol: String,
                  segLen: Int, minDf: Int, path: String,
                  batchId: Long): Unit = {
     val s = batchDocs.sparkSession
     require(batchId >= 1, s"batchId=$batchId collides with the b=0 seed")
-    if (CurationStream.committed(s, path, batchId)) return
-    if (!batchDocs.isEmpty) {
-      val served = TextOps.serveSegmentCut(s, path, batchDocs,
-        idCol, textCol, segLen, minDf, batchCut = Some(batchId))
-      served.withColumn("b", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("b").parquet(s"$path/served")
-      crashPoint("graft.segdf.crashAfterServe", batchId)
+    BatchStore.applyOnce(batchDocs, path, batchId,
+        Some("graft.segdf.crashAfterServe"),
+        Some("graft.segdf.crashAfterAbsorb")) {
+      BatchStore.writeBatch(TextOps.serveSegmentCut(s, path, batchDocs,
+          idCol, textCol, segLen, minDf, batchCut = Some(batchId)),
+        batchId, s"$path/served")
+    } { _ =>
       TextOps.writeSegmentDf(batchDocs, idCol, textCol, segLen, path,
         batchId = batchId)
     }
-    crashPoint("graft.segdf.crashAfterAbsorb", batchId)
-    markCommitted(s, path, batchId)
   }
 
   /** Retention fold for the count store: partitions `b ≤ upTo` compact
@@ -86,66 +68,21 @@ object SegDfStream {
     * .serveSegmentCut]]), so any overlap between folded and unfolded
     * state collapses to the exact counts. Read-invisibility for any
     * fence then holds trivially: the fence keys on `src`, which the
-    * fold never rewrites. Same fold-safety fence as the other stores:
-    * no uncommitted batch at or below the fold point, fold point not
-    * above the last committed batch. */
-  def foldSegDf(s: SparkSession, path: String, upTo: Long): Unit = {
-    val hconf = s.sessionState.newHadoopConf()
-    def batches: Seq[Long] = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/segdf")
-      val fs = p.getFileSystem(hconf)
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("b="))
-        .map(_.getPath.getName.stripPrefix("b=").toLong)
-    }
-    val uncommitted = batches.filter(_ <= upTo)
-      .filterNot(CurationStream.committed(s, path, _)).sorted
-    require(uncommitted.isEmpty,
-      s"foldSegDf(upTo=$upTo): batch(es) ${uncommitted.mkString(", ")} " +
-        s"have counts under $path but no commit marker — a producer " +
-        "crashed mid-batch; let redelivery complete them before folding")
-    val committedMax: Long = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/_committed")
-      val fs = p.getFileSystem(hconf)
-      if (!fs.exists(p)) -1L
-      else fs.listStatus(p).toSeq
-        .flatMap(st => scala.util.Try(st.getPath.getName.toLong).toOption)
-        .foldLeft(-1L)(math.max)
-    }
-    require(upTo <= committedMax,
-      s"foldSegDf(upTo=$upTo): fold point is above the last committed " +
-        s"batch ($committedMax)")
-    if (batches.count(_ <= upTo) > 1) {
-      val merged = s.read.parquet(s"$path/segdf")
-        .filter(col("b").cast("long") <= upTo)
-        .select(col("__seg"), col("df"), col("src"))
-        .dropDuplicates("__seg", "src") // exact: crash-rerun sees rows twice
-        .withColumn("b", lit(upTo))
-        .repartition(col("__seg"))
-        .localCheckpoint() // materialize BEFORE touching source dirs
-      merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("b").parquet(s"$path/segdf")
-      val p = new org.apache.hadoop.fs.Path(s"$path/segdf")
-      val fs = p.getFileSystem(hconf)
-      fs.listStatus(p)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("b="))
-        .filter(_.getPath.getName.stripPrefix("b=").toLong < upTo)
-        .foreach(st => fs.delete(st.getPath, true))
-    }
-  }
+    * fold never rewrites. [[BatchStore.fold]] runs it, behind the
+    * fold-safety fence every store shares. */
+  def foldSegDf(s: SparkSession, path: String, upTo: Long): Unit =
+    BatchStore.fold(s, path, upTo, "foldSegDf",
+      BatchStore.Folded("segdf", Seq("__seg", "src"),
+        shuffle = Some("__seg"), project = Seq("__seg", "df", "src")))
 
   /** The real streaming loop: one [[applyBatch]] per micro-batch of
     * (idCol, textCol) rows. */
   def maintain(rows: DataFrame, idCol: String, textCol: String,
                segLen: Int, minDf: Int, path: String, checkpoint: String,
                batchIdOffset: Long = 1L): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(batch.toDF().localCheckpoint(true),
-          idCol, textCol, segLen, minDf, path, batchId + batchIdOffset)
-      }
-      .start()
+    BatchStore.foreachBatch(rows, checkpoint, localCheckpoint = true) {
+      (batch, batchId) =>
+        applyBatch(batch, idCol, textCol, segLen, minDf, path,
+          batchId + batchIdOffset)
+    }
 }

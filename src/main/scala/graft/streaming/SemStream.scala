@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -39,20 +39,6 @@ import graft.operators.{Clustering, Similarity}
   */
 object SemStream {
 
-  /** Has `batchId` been fully applied (artifacts + marker)? */
-  def committed(s: SparkSession, path: String, batchId: Long): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_committed/$batchId")
-    p.getFileSystem(s.sessionState.newHadoopConf()).exists(p)
-  }
-
-  private def markCommitted(s: SparkSession, path: String,
-                            batchId: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_committed/$batchId")
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    fs.mkdirs(p.getParent)
-    fs.create(p, true).close()
-  }
-
   /** Build the stream-layout store: frozen centroids trained on the
     * seed corpus, members under b=0. Batches then start at id 1
     * (foreachBatch ids start at 0 — pass `batchIdOffset = 1` below,
@@ -68,7 +54,7 @@ object SemStream {
     av.withColumn("b", lit(0L))
       .write.mode("overwrite").partitionBy("b", "cluster")
       .parquet(s"$path/members")
-    markCommitted(s, path, 0L)
+    BatchStore.commit(s, path, 0L)
   }
 
   /** Apply one micro-batch: skip if committed; else probe the batch
@@ -90,22 +76,16 @@ object SemStream {
                  clusterCap: Long, seed: String, batchId: Long): Unit = {
     val s = batch.sparkSession
     require(batchId >= 1, s"batchId=$batchId collides with the b=0 seed")
-    if (committed(s, path, batchId)) return
-    if (!batch.isEmpty) {
-      Similarity.probeSemStore(s, path, batch, idCol, vecCol,
-          thrNum, thrDen, clusterCap, seed, batchCut = Some(batchId))
-        .withColumn("b", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("b").parquet(s"$path/pairs")
-      Clustering.assignToCentroidsKeepVec(batch, idCol, vecCol,
-          Similarity.readSemCents(s, path))
-        .withColumn("b", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("b", "cluster").parquet(s"$path/members")
+    BatchStore.applyOnce(batch, path, batchId) {
+      BatchStore.writeBatch(
+        Similarity.probeSemStore(s, path, batch, idCol, vecCol,
+          thrNum, thrDen, clusterCap, seed, batchCut = Some(batchId)),
+        batchId, s"$path/pairs")
+    } { _ =>
+      BatchStore.writeBatch(Clustering.assignToCentroidsKeepVec(batch,
+          idCol, vecCol, Similarity.readSemCents(s, path)),
+        batchId, s"$path/members", "cluster")
     }
-    markCommitted(s, path, batchId)
   }
 
   /** Retention fold for the stream-maintained sem store — the q115
@@ -137,74 +117,11 @@ object SemStream {
     * and pairs by their full row — both unique keys whose payloads are
     * deterministic — so the re-run converges to the clean fold
     * bit-for-bit instead of summing duplicates. */
-  def foldSemStore(s: SparkSession, path: String, upTo: Long): Unit = {
-    val hconf = s.sessionState.newHadoopConf()
-    def artifact(sub: String): Option[org.apache.hadoop.fs.Path] = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      if (p.getFileSystem(hconf).exists(p)) Some(p) else None
-    }
-    def batchesOf(sub: String): Seq[Long] = artifact(sub).toSeq.flatMap { p =>
-      p.getFileSystem(hconf).listStatus(p).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("b="))
-        .map(_.getPath.getName.stripPrefix("b=").toLong)
-    }
-    def deleteBelow(sub: String): Unit = artifact(sub).foreach { p =>
-      val fs = p.getFileSystem(hconf)
-      fs.listStatus(p)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("b="))
-        .filter(_.getPath.getName.stripPrefix("b=").toLong < upTo)
-        .foreach(st => fs.delete(st.getPath, true))
-    }
-    // Fold-safety fence (round-14 advice): the fold relabels every
-    // batch b ≤ upTo into b=upTo — if a producer crashed mid-batch
-    // (member rows landed under b=k, marker missing) and the fold ran
-    // before redelivery, the fold would absorb the partial rows into
-    // b=upTo while the KEPT markers no longer fence batch k; the
-    // redelivery then re-applies k (batchCut excludes b=upTo), and the
-    // batch's docs exist under BOTH b=k and b=upTo — duplicate ids,
-    // duplicate probe pairs, effectively-once silently broken. So:
-    // every batch with rows on disk at or below the fold point must
-    // carry its commit marker, and the fold point itself must not sit
-    // above the last committed batch (folding "the future" would
-    // relabel history to a b that later batches' batchCut excludes,
-    // leaving them nothing to probe against). Fail loudly, same
-    // discipline as the posting store's lifecycle fences.
-    val present = (batchesOf("members") ++ batchesOf("pairs"))
-      .distinct.filter(_ <= upTo)
-    val uncommitted = present.filterNot(committed(s, path, _)).sorted
-    require(uncommitted.isEmpty,
-      s"foldSemStore(upTo=$upTo): batch(es) ${uncommitted.mkString(", ")} " +
-        s"have rows under $path but no commit marker — a producer " +
-        "crashed mid-batch; let redelivery complete them before folding")
-    val committedMax: Long = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/_committed")
-      val fs = p.getFileSystem(hconf)
-      if (!fs.exists(p)) -1L
-      else fs.listStatus(p).toSeq
-        .flatMap(st => scala.util.Try(st.getPath.getName.toLong).toOption)
-        .foldLeft(-1L)(math.max)
-    }
-    require(upTo <= committedMax,
-      s"foldSemStore(upTo=$upTo): fold point is above the last committed " +
-        s"batch ($committedMax) — folding ahead of the stream relabels " +
-        "history to a partition future batchCuts exclude")
-    def fold(sub: String, parts: Seq[String], dedupKeys: Seq[String],
-             shuffleKey: Option[String]): Unit =
-      if (batchesOf(sub).count(_ <= upTo) > 1) {
-        val read = s.read.parquet(s"$path/$sub")
-          .filter(col("b").cast("long") <= upTo).drop("b")
-          .dropDuplicates(dedupKeys) // exact: crash-rerun sees each row twice
-          .withColumn("b", lit(upTo))
-        val merged = shuffleKey.fold(read)(k => read.repartition(col(k)))
-          .localCheckpoint() // materialize BEFORE touching source dirs
-        merged.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(parts: _*).parquet(s"$path/$sub")
-        deleteBelow(sub)
-      }
-    fold("members", Seq("b", "cluster"), Seq("id"), Some("cluster"))
-    fold("pairs", Seq("b"), Seq("cluster", "store_id", "batch_id"), None)
-  }
+  def foldSemStore(s: SparkSession, path: String, upTo: Long): Unit =
+    BatchStore.fold(s, path, upTo, "foldSemStore",
+      BatchStore.Folded("members", Seq("id"), more = Seq("cluster"),
+        shuffle = Some("cluster")),
+      BatchStore.Folded("pairs", Seq("cluster", "store_id", "batch_id")))
 
   /** Start the maintenance query over a vector stream. `batchIdOffset`
     * shifts foreachBatch's 0-based ids past the b=0 seed. */
@@ -213,11 +130,9 @@ object SemStream {
                        clusterCap: Long, seed: String,
                        checkpoint: String,
                        batchIdOffset: Long = 1L): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(batch.toDF(), idCol, vecCol, path, thrNum, thrDen,
+    BatchStore.foreachBatch(vecs, checkpoint, localCheckpoint = false) {
+      (batch, batchId) =>
+        applyBatch(batch, idCol, vecCol, path, thrNum, thrDen,
           clusterCap, seed, batchId + batchIdOffset)
-      }
-      .start()
+    }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -29,27 +29,14 @@ object SimhashStream {
            path: String): Unit = {
     val s = histDocs.sparkSession
     TextOps.writeSimhashStore(histDocs, idCol, textCol, path)
-    markCommitted(s, path, 0L)
+    BatchStore.commit(s, path, 0L)
   }
-
-  private def markCommitted(s: SparkSession, path: String,
-                            batchId: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_committed/$batchId")
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    fs.mkdirs(p.getParent)
-    fs.create(p, true).close()
-  }
-
-  /** Crash injection for the simhashcrash storm:
-    * `-Dgraft.simhash.crashAfterServe=<b>` halts right after batch b's
-    * verdict write, `-Dgraft.simhash.crashAfterAbsorb=<b>` after its
-    * fingerprint absorption — both BEFORE the commit marker (the
-    * [[SpanStream]] windows). */
-  private def crashPoint(prop: String, batchId: Long): Unit =
-    if (sys.props.get(prop).exists(_.toLong == batchId))
-      Runtime.getRuntime.halt(137)
 
   /** Serve + absorb one micro-batch of documents; skip if committed.
+    * Crash points for the simhashcrash storm:
+    * `-Dgraft.simhash.crashAfterServe=<b>` halts right after batch b's
+    * verdict write, `-Dgraft.simhash.crashAfterAbsorb=<b>` after its
+    * fingerprint absorption ([[BatchStore.applyOnce]]).
     *
     * `absorbFull` selects WHAT absorbs ([[PhashStream.applyBatch]]'s
     * option on the text lens): keeper-only keeps the store at one row
@@ -65,16 +52,15 @@ object SimhashStream {
                  absorbFull: Boolean = false): Unit = {
     val s = batchDocs.sparkSession
     require(batchId >= 1, s"batchId=$batchId collides with the b=0 seed")
-    if (CurationStream.committed(s, path, batchId)) return
-    if (!batchDocs.isEmpty) {
+    BatchStore.applyOnce(batchDocs, path, batchId,
+        Some("graft.simhash.crashAfterServe"),
+        Some("graft.simhash.crashAfterAbsorb")) {
       val served = TextOps.serveSimhashDedup(s, path, batchDocs,
           idCol, textCol, maxDist, batchCut = Some(batchId))
         .localCheckpoint(eager = true) // feeds the persist AND the absorb
-      served.withColumn("b", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("b").parquet(s"$path/served")
-      crashPoint("graft.simhash.crashAfterServe", batchId)
+      BatchStore.writeBatch(served, batchId, s"$path/served")
+      served
+    } { served =>
       val batchHashes = TextOps.simhash(batchDocs, idCol, textCol)
       TextOps.appendSimhash(
         if (absorbFull) batchHashes
@@ -83,63 +69,16 @@ object SimhashStream {
             Seq(idCol), "left_semi"),
         idCol, path, batchId)
     }
-    crashPoint("graft.simhash.crashAfterAbsorb", batchId)
-    markCommitted(s, path, batchId)
   }
 
-  /** Retention fold for the fingerprint index — [[PhashStream
-    * .foldPhash]]'s move on the text lens: batches `b ≤ upTo` merge
-    * into one snapshot labeled `b = upTo`; read-invisibility for any
-    * `batchCut > upTo`. Same fold-safety fence: no uncommitted batch
-    * at or below the fold point, fold point not above the last
-    * committed batch. */
+  /** Retention fold for the fingerprint index — [[BatchStore.fold]] on
+    * the text lens: batches `b ≤ upTo` merge into one snapshot labeled
+    * `b = upTo`, deduped on `idCol`; read-invisibility for any
+    * `batchCut > upTo`. */
   def foldSimhash(s: SparkSession, path: String, idCol: String,
-                  upTo: Long): Unit = {
-    val hconf = s.sessionState.newHadoopConf()
-    def batches: Seq[Long] = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/simhash")
-      val fs = p.getFileSystem(hconf)
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("b="))
-        .map(_.getPath.getName.stripPrefix("b=").toLong)
-    }
-    val uncommitted = batches.filter(_ <= upTo)
-      .filterNot(CurationStream.committed(s, path, _)).sorted
-    require(uncommitted.isEmpty,
-      s"foldSimhash(upTo=$upTo): batch(es) ${uncommitted.mkString(", ")} " +
-        s"have fingerprints under $path but no commit marker — a " +
-        "producer crashed mid-batch; let redelivery complete them " +
-        "before folding")
-    val committedMax: Long = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/_committed")
-      val fs = p.getFileSystem(hconf)
-      if (!fs.exists(p)) -1L
-      else fs.listStatus(p).toSeq
-        .flatMap(st => scala.util.Try(st.getPath.getName.toLong).toOption)
-        .foldLeft(-1L)(math.max)
-    }
-    require(upTo <= committedMax,
-      s"foldSimhash(upTo=$upTo): fold point is above the last committed " +
-        s"batch ($committedMax)")
-    if (batches.count(_ <= upTo) > 1) {
-      val merged = s.read.parquet(s"$path/simhash")
-        .filter(col("b").cast("long") <= upTo).drop("b")
-        .dropDuplicates(idCol) // exact: crash-rerun sees rows twice
-        .withColumn("b", lit(upTo))
-        .repartition(col("simhash"))
-        .localCheckpoint() // materialize BEFORE touching source dirs
-      merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("b").parquet(s"$path/simhash")
-      val p = new org.apache.hadoop.fs.Path(s"$path/simhash")
-      val fs = p.getFileSystem(hconf)
-      fs.listStatus(p)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("b="))
-        .filter(_.getPath.getName.stripPrefix("b=").toLong < upTo)
-        .foreach(st => fs.delete(st.getPath, true))
-    }
-  }
+                  upTo: Long): Unit =
+    BatchStore.fold(s, path, upTo, "foldSimhash",
+      BatchStore.Folded("simhash", Seq(idCol), shuffle = Some("simhash")))
 
   /** The real streaming loop: one [[applyBatch]] per micro-batch of
     * (idCol, textCol) rows. */
@@ -147,12 +86,9 @@ object SimhashStream {
                maxDist: Int, path: String, checkpoint: String,
                batchIdOffset: Long = 1L,
                absorbFull: Boolean = false): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(batch.toDF().localCheckpoint(true),
-          idCol, textCol, maxDist, path, batchId + batchIdOffset,
-          absorbFull = absorbFull)
-      }
-      .start()
+    BatchStore.foreachBatch(rows, checkpoint, localCheckpoint = true) {
+      (batch, batchId) =>
+        applyBatch(batch, idCol, textCol, maxDist, path,
+          batchId + batchIdOffset, absorbFull = absorbFull)
+    }
 }

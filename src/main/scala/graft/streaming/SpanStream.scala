@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -28,112 +28,44 @@ object SpanStream {
            k: Int, path: String): Unit = {
     val s = histDocs.sparkSession
     SpanDedup.writeGramStore(s, histDocs, idCol, textCol, k, path)
-    markCommitted(s, path, 0L)
+    BatchStore.commit(s, path, 0L)
   }
 
-  private def markCommitted(s: SparkSession, path: String,
-                            batchId: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_committed/$batchId")
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    fs.mkdirs(p.getParent)
-    fs.create(p, true).close()
-  }
-
-  /** Crash injection for the spancrash storm (Stress mode
-    * "spancrash"): `-Dgraft.spans.crashAfterClean=<b>` halts the JVM
-    * right after batch b's clean write,
-    * `-Dgraft.spans.crashAfterAbsorb=<b>` after its gram absorption —
-    * both BEFORE the commit marker, the two worst-ordered crash
-    * windows redelivery must survive. `halt` so no shutdown hook can
-    * tidy the simulated kill; one sys.props read per batch. */
-  private def crashPoint(prop: String, batchId: Long): Unit =
-    if (sys.props.get(prop).exists(_.toLong == batchId))
-      Runtime.getRuntime.halt(137)
-
-  /** Serve + absorb one micro-batch; skip if committed (redelivery). */
+  /** Serve + absorb one micro-batch; skip if committed (redelivery).
+    * Crash points for the spancrash storm (Stress mode "spancrash"):
+    * `-Dgraft.spans.crashAfterClean=<b>` halts the JVM right after
+    * batch b's clean write, `-Dgraft.spans.crashAfterAbsorb=<b>` after
+    * its gram absorption. */
   def applyBatch(batchDocs: DataFrame, idCol: String, textCol: String,
                  k: Int, path: String, batchId: Long): Unit = {
     val s = batchDocs.sparkSession
     require(batchId >= 1, s"batchId=$batchId collides with the b=0 seed")
-    if (CurationStream.committed(s, path, batchId)) return
-    if (!batchDocs.isEmpty) {
+    BatchStore.applyOnce(batchDocs, path, batchId,
+        Some("graft.spans.crashAfterClean"),
+        Some("graft.spans.crashAfterAbsorb")) {
       val cleaned = SpanDedup.serveSpanCut(s, path, batchDocs,
           idCol, textCol, k, batchCut = Some(batchId))
         .localCheckpoint(eager = true)
-      cleaned.withColumn("b", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("b").parquet(s"$path/clean")
-      crashPoint("graft.spans.crashAfterClean", batchId)
+      BatchStore.writeBatch(cleaned, batchId, s"$path/clean")
+      cleaned
+    } { cleaned =>
       SpanDedup.appendGrams(
         cleaned.select(col(idCol), col("clean_text").as(textCol)),
         idCol, textCol, k, path, batchId)
     }
-    crashPoint("graft.spans.crashAfterAbsorb", batchId)
-    markCommitted(s, path, batchId)
   }
 
-  /** Retention fold for the gram store — [[CurationStream.foldStore]]'s
-    * move on the one artifact the serve path reads: every `grams`
-    * batch `b ≤ upTo` merges into one snapshot labeled `b = upTo`,
-    * later batches untouched. A pure relabel-union deduped on `__gh`,
-    * so a crash between overwrite and stale-dir delete re-runs to the
-    * clean fold bit-for-bit; the bloom re-sweeps to the fold point
-    * last (a crash before that leaves the previous, still-correct
-    * sketch — its covered slice is exactly the fold's content).
-    * Read-invisibility: [[SpanDedup.serveSpanCut]] with
-    * `batchCut = c > upTo` sees the identical gram set either way.
-    *
-    * Fold-safety fence (the foldStore discipline verbatim): every
-    * batch with rows at or below the fold point must carry its commit
-    * marker, and the fold point must not sit above the last committed
-    * batch — folding a crashed batch's partial absorption would strand
-    * grams under b=upTo that its redelivery then re-absorbs under
-    * b=k, breaking the fence for batch k+1. */
+  /** Retention fold for the gram store — [[BatchStore.fold]] on the
+    * one artifact the serve path reads: every `grams` batch `b ≤ upTo`
+    * merges into one snapshot labeled `b = upTo`, deduped on `__gh`.
+    * The bloom re-sweeps to the fold point last (a crash before that
+    * leaves the previous, still-correct sketch — its covered slice is
+    * exactly the fold's content). Read-invisibility:
+    * [[SpanDedup.serveSpanCut]] with `batchCut = c > upTo` sees the
+    * identical gram set either way. */
   def foldGrams(s: SparkSession, path: String, upTo: Long): Unit = {
-    val hconf = s.sessionState.newHadoopConf()
-    def batches: Seq[Long] = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/grams")
-      val fs = p.getFileSystem(hconf)
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("b="))
-        .map(_.getPath.getName.stripPrefix("b=").toLong)
-    }
-    val uncommitted = batches.filter(_ <= upTo)
-      .filterNot(CurationStream.committed(s, path, _)).sorted
-    require(uncommitted.isEmpty,
-      s"foldGrams(upTo=$upTo): batch(es) ${uncommitted.mkString(", ")} " +
-        s"have grams under $path but no commit marker — a producer " +
-        "crashed mid-batch; let redelivery complete them before folding")
-    val committedMax: Long = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/_committed")
-      val fs = p.getFileSystem(hconf)
-      if (!fs.exists(p)) -1L
-      else fs.listStatus(p).toSeq
-        .flatMap(st => scala.util.Try(st.getPath.getName.toLong).toOption)
-        .foldLeft(-1L)(math.max)
-    }
-    require(upTo <= committedMax,
-      s"foldGrams(upTo=$upTo): fold point is above the last committed " +
-        s"batch ($committedMax)")
-    if (batches.count(_ <= upTo) > 1) {
-      val merged = s.read.parquet(s"$path/grams")
-        .filter(col("b").cast("long") <= upTo).drop("b")
-        .dropDuplicates("__gh") // exact: crash-rerun sees grams twice
-        .withColumn("b", lit(upTo))
-        .repartition(col("__gh"))
-        .localCheckpoint() // materialize BEFORE touching source dirs
-      merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("b").parquet(s"$path/grams")
-      val p = new org.apache.hadoop.fs.Path(s"$path/grams")
-      val fs = p.getFileSystem(hconf)
-      fs.listStatus(p)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("b="))
-        .filter(_.getPath.getName.stripPrefix("b=").toLong < upTo)
-        .foreach(st => fs.delete(st.getPath, true))
-    }
+    BatchStore.fold(s, path, upTo, "foldGrams",
+      BatchStore.Folded("grams", Seq("__gh"), shuffle = Some("__gh")))
     SpanDedup.writeGramBloom(s, path, coveredUpTo = upTo)
   }
 
@@ -141,12 +73,9 @@ object SpanStream {
   def maintain(docs: DataFrame, idCol: String, textCol: String,
                k: Int, path: String, checkpoint: String,
                batchIdOffset: Long = 1L): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(batch.toDF().localCheckpoint(true)
-            .select(col(idCol), col(textCol)),
+    BatchStore.foreachBatch(docs, checkpoint, localCheckpoint = true) {
+      (batch, batchId) =>
+        applyBatch(batch.select(col(idCol), col(textCol)),
           idCol, textCol, k, path, batchId + batchIdOffset)
-      }
-      .start()
+    }
 }

@@ -110,4 +110,23 @@ class DocCountsSpec extends AnyFunSuite {
       s"queries with no oracleSql entry (driver degrades to rows-only): " +
         missing.mkString(", "))
   }
+
+  test("the batch-store protocol has one copy: `_committed` and halt(137) " +
+       "appear in src/main only in BatchStore") {
+    val home = "src/main/scala/graft/streaming/BatchStore.scala"
+    val needles = Seq("_committed", "halt(137)")
+    val offenders = {
+      val s = Files.walk(Paths.get("src/main"))
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala.map(_.toString)
+          .filter(p => p.endsWith(".scala") && p != home)
+          .flatMap(p => needles.filter(read(p).contains).map(n => s"$p: $n"))
+          .toList
+      } finally s.close()
+    }
+    assert(offenders.isEmpty,
+      s"the commit-marker protocol grew a copy outside $home: $offenders")
+    assert(needles.forall(read(home).contains), s"$home lost the protocol")
+  }
 }

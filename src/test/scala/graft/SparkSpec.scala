@@ -32,4 +32,20 @@ trait SparkSpec extends AnyFunSuite {
     }
     (out, sc.statusTracker.getJobIdsForGroup(s"budget-$tag").length)
   }
+
+  /** Every regular file under `dir`, by relative path, with a hash of
+    * its bytes and its modification time — what a refused store
+    * operation must leave exactly as it found it. */
+  def filesUnder(dir: String): Map[String, (Int, Long)] = {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get(dir)
+    val s = Files.walk(root)
+    try s.iterator().asScala.filter(Files.isRegularFile(_)).map { p =>
+      root.relativize(p).toString ->
+        (java.util.Arrays.hashCode(Files.readAllBytes(p)),
+          Files.getLastModifiedTime(p).toMillis)
+    }.toMap
+    finally s.close()
+  }
 }

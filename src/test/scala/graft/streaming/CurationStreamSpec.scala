@@ -589,9 +589,9 @@ class CurationStreamSpec extends SparkSpec {
     val marker = new org.apache.hadoop.fs.Path(s"$path/_committed/2")
     marker.getFileSystem(spark.sessionState.newHadoopConf())
       .delete(marker, false)
-    assert(!CurationStream.committed(spark, path, 2L))
+    assert(!BatchStore.committed(spark, path, 2L))
     redeliver2()
-    assert(CurationStream.committed(spark, path, 2L))
+    assert(BatchStore.committed(spark, path, 2L))
     assert(curated(path) == wantCur,
       "crash-window redelivery changed the curated rows — the batch " +
         "served against its own absorbed survivors")

@@ -99,10 +99,10 @@ class IndexStreamSpec extends SparkSpec {
     val marker = new org.apache.hadoop.fs.Path(s"$store/_committed/2")
     marker.getFileSystem(spark.sessionState.newHadoopConf())
       .delete(marker, false)
-    assert(!IndexStream.committed(spark, store, 2L))
+    assert(!BatchStore.committed(spark, store, 2L))
     IndexStream.applyBatch(batches(2).toDF(), "doc_id", "text", store,
       parts, 2L)
-    assert(IndexStream.committed(spark, store, 2L))
+    assert(BatchStore.committed(spark, store, 2L))
     assert(state() == before, "marker-loss redelivery changed a read")
   }
 
@@ -117,7 +117,7 @@ class IndexStreamSpec extends SparkSpec {
     }
     val before = probe(store)
     // retention: batches 0-1 fold into the base snapshot at b=1
-    TextOps.foldPostingIndexVersions(spark, store, upTo = 1L)
+    IndexStream.foldPostingIndex(spark, store, upTo = 1L)
     assert(probe(store) == before, "fold changed the un-cut read")
     // the producer replays batch 0 (e.g. a rebuilt checkpoint replaying
     // history): the marker — deliberately KEPT by the fold — must make
@@ -128,7 +128,48 @@ class IndexStreamSpec extends SparkSpec {
     assert(probe(store) == before,
       "replay of a folded batch re-entered the index")
     // and fresh batches continue to land normally after the fold
-    assert(IndexStream.committed(spark, store, 0L) &&
-      IndexStream.committed(spark, store, 2L))
+    assert(BatchStore.committed(spark, store, 0L) &&
+      BatchStore.committed(spark, store, 2L))
+  }
+
+  test("the fold fence: folding over a crashed batch or ahead of the " +
+       "stream throws and changes no file; redelivery then a legal fold " +
+       "equals the no-crash control") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-idxfoldcrash").toString
+    val batches = Seq(corpus.take(2), corpus.slice(2, 4), corpus.drop(4))
+    def apply(store: String, i: Int): Unit =
+      IndexStream.applyBatch(batches(i).toDF(), "doc_id", "text", store,
+        parts, i.toLong)
+    def state(store: String) = (probe(store),
+      spark.read.parquet(s"$store/stats").collect().map(_.toString).sorted.toSeq)
+    val control = s"$dir/control"
+    (0 to 2).foreach(apply(control, _))
+    IndexStream.foldPostingIndex(spark, control, upTo = 2L)
+    val expected = state(control)
+    assert(expected._1.size == 7 && expected._2.size == 1, expected)
+    // (crashed batch, the batch's artifacts landed with no marker) and
+    // (fold ahead of the stream, batch 2 not yet delivered)
+    Seq(
+      "crashed" -> { (store: String) =>
+        TextOps.upsertPostingIndexBatch(batches(2).toDF(), "doc_id", "text",
+          store, parts, 2L)
+        "no commit marker"
+      },
+      "ahead" -> { (_: String) => "above the last committed" }
+    ).foreach { case (name, window) =>
+      val store = s"$dir/$name"
+      (0 to 1).foreach(apply(store, _))
+      val refusal = window(store)
+      val files = filesUnder(store)
+      val ex = intercept[IllegalArgumentException] {
+        IndexStream.foldPostingIndex(spark, store, upTo = 2L)
+      }
+      assert(ex.getMessage.contains(refusal), s"$name: ${ex.getMessage}")
+      assert(filesUnder(store) == files, s"$name: a refused fold changed the store")
+      apply(store, 2)
+      IndexStream.foldPostingIndex(spark, store, upTo = 2L)
+      assert(state(store) == expected, s"$name: redelivery + fold lost history")
+    }
   }
 }

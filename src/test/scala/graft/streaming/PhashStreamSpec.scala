@@ -185,5 +185,14 @@ class PhashStreamSpec extends SparkSpec {
       PhashStream.foldPhash(spark, dir, upTo = 9L)
     }
     assert(ex.getMessage.contains("above the last committed"))
+    // a crashed batch 3 — hashes absorbed, no marker: a fold over it
+    // must refuse and leave every file as it was
+    Multimodal.appendPhash(Multimodal.perceptualHash(b3, 64), dir, 3L)
+    val files = filesUnder(dir)
+    val ex2 = intercept[IllegalArgumentException] {
+      PhashStream.foldPhash(spark, dir, upTo = 3L)
+    }
+    assert(ex2.getMessage.contains("no commit marker"), ex2.getMessage)
+    assert(filesUnder(dir) == files, "a refused fold changed the store")
   }
 }

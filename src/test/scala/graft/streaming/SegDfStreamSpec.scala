@@ -127,6 +127,15 @@ class SegDfStreamSpec extends SparkSpec {
       SegDfStream.foldSegDf(spark, dir, upTo = 9L)
     }
     assert(ex.getMessage.contains("above the last committed"))
+    // a crashed batch 3 — counts absorbed, no marker: a fold over it
+    // must refuse and leave every file as it was
+    TextOps.writeSegmentDf(b3, "doc_id", "text", 10, dir, batchId = 3L)
+    val files = filesUnder(dir)
+    val ex2 = intercept[IllegalArgumentException] {
+      SegDfStream.foldSegDf(spark, dir, upTo = 3L)
+    }
+    assert(ex2.getMessage.contains("no commit marker"), ex2.getMessage)
+    assert(filesUnder(dir) == files, "a refused fold changed the store")
   }
 
   test("mid-fold crash window: the fold snapshot COEXISTING with a stale " +

@@ -118,10 +118,10 @@ class SemStreamSpec extends SparkSpec {
     val marker = new org.apache.hadoop.fs.Path(s"$path/_committed/2")
     marker.getFileSystem(spark.sessionState.newHadoopConf())
       .delete(marker, false)
-    assert(!SemStream.committed(spark, path, 2L))
+    assert(!BatchStore.committed(spark, path, 2L))
     SemStream.applyBatch(b2, "vec_id", "embedding", path,
       thrNum, thrDen, cap, seed, 2L) // redelivery against a dirty store
-    assert(SemStream.committed(spark, path, 2L))
+    assert(BatchStore.committed(spark, path, 2L))
     assert(memberRows(path) == wantMembers,
       "redelivered batch changed the members")
     assert(pairRows(path) == wantPairs,
@@ -216,7 +216,7 @@ class SemStreamSpec extends SparkSpec {
     assert(bDirs("members") == Set(2L, 3L), s"members dirs: ${bDirs("members")}")
     assert(!bDirs("pairs").exists(_ < 2L), s"pairs dirs: ${bDirs("pairs")}")
     // markers kept: a redelivered folded batch stays a no-op
-    (1L to 3L).foreach(b => assert(SemStream.committed(spark, path, b)))
+    (1L to 3L).foreach(b => assert(BatchStore.committed(spark, path, b)))
     SemStream.applyBatch(batches(0), "vec_id", "embedding", path,
       thrNum, thrDen, cap, seed, 1L)
     assert(memberRows(path) == wantMembers,

@@ -146,5 +146,15 @@ class SimhashStreamSpec extends SparkSpec {
       SimhashStream.foldSimhash(spark, dir, "doc_id", upTo = 9L)
     }
     assert(ex.getMessage.contains("above the last committed"))
+    // a crashed batch 3 — fingerprints absorbed, no marker: a fold over
+    // it must refuse and leave every file as it was
+    TextOps.appendSimhash(TextOps.simhash(b3, "doc_id", "text"), "doc_id",
+      dir, 3L)
+    val files = filesUnder(dir)
+    val ex2 = intercept[IllegalArgumentException] {
+      SimhashStream.foldSimhash(spark, dir, "doc_id", upTo = 3L)
+    }
+    assert(ex2.getMessage.contains("no commit marker"), ex2.getMessage)
+    assert(filesUnder(dir) == files, "a refused fold changed the store")
   }
 }

@@ -119,6 +119,15 @@ class SpanStreamSpec extends SparkSpec {
       SpanStream.foldGrams(spark, dir, upTo = 9L)
     }
     assert(ex.getMessage.contains("above the last committed"))
+    // a crashed batch 3 — grams absorbed, no marker: a fold over it
+    // must refuse and leave every file as it was
+    SpanDedup.appendGrams(b3, "doc_id", "text", 8, dir, 3L)
+    val files = filesUnder(dir)
+    val ex2 = intercept[IllegalArgumentException] {
+      SpanStream.foldGrams(spark, dir, upTo = 3L)
+    }
+    assert(ex2.getMessage.contains("no commit marker"), ex2.getMessage)
+    assert(filesUnder(dir) == files, "a refused fold changed the store")
   }
 
   test("redelivery fence: partial absorption re-applies byte-identically") {
