@@ -178,15 +178,9 @@ object Engine {
     * Call it where a compute-heavy kernel feeds a shuffle anyway (pair
     * engines, banding, explodes) — NOT on pure per-row selects, whose
     * shuffle-free contract (PlanContractSpec) is the thing worth more
-    * at scale.
-    *
-    * `spark.graft.fanout=false` (session conf) disables it outright —
-    * used by the on/off measurement contrast in docs/SCALE.md, and an
-    * operational escape hatch if a deployment's scheduler makes the
-    * extra exchange a bad trade. */
+    * at scale. */
   def fanOutIfNarrow(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.conf.get("spark.graft.fanout", "true").toBoolean) return df
     val files = df.inputFiles
     if (files.isEmpty) return df // derived plan, no scan to rescue
     val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes.toDouble

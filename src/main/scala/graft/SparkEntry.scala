@@ -2040,9 +2040,9 @@ object SparkEntry {
   /** Index retention folding ([[TextOps.foldPostingIndexVersions]]):
     * the lifecycle move that keeps q94's time-travel history from
     * growing forever. Four versioned batches (doc_id mod 4) land, then
-    * batches ≤ 2 FOLD into one base snapshot at b=2 — postings
-    * relabel, per-batch dfreq contributions sum, stats rows sum (the
-    * mergeable-state design doing the work) — while batch 3 keeps its
+    * batches ≤ 2 FOLD into one base snapshot at b=2 — every artifact
+    * row relabels, and the reader sums df and stats across rows as it
+    * does before the fold — while batch 3 keeps its
     * own history level. The query then reads AS OF the fold point:
     * by the fold law (every as-of ≥ the fold point is preserved,
     * pinned in TextOpsSpec) the answer is identical to the unfolded

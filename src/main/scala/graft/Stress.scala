@@ -1,7 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
 import scala.collection.immutable.ListMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -97,28 +95,21 @@ object Stress {
       } finally s.close()
     }
 
-    /** Runs one cell under a task listener and prints its wall time,
+    /** Runs one cell under a [[Profile.Meter]] and prints its wall time,
       * the shuffle bytes its tasks actually read and its row count
       * (`rows` of the result); returns the result and those bytes. */
     def shuffleMetered[T](cell: String, name: String)(body: => T)(
         rows: T => Long): (T, Long) = {
-      val shuffled = new AtomicLong
-      val meter = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null)
-            shuffled.addAndGet(t.taskMetrics.shuffleReadMetrics.totalBytesRead): Unit
-      }
-      spark.sparkContext.addSparkListener(meter)
-      val t0 = System.nanoTime()
-      val out = body
-      val secs = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(2000) // storm-grade settle for the async listener bus
-      spark.sparkContext.removeSparkListener(meter)
-      val bytes = shuffled.get()
-      println(f"[stress] $cell/$name%-6s $secs%6.1f s  " +
-        f"shuffleRead=${bytes / 1048576.0}%9.2f MiB  (${rows(out)} rows)")
-      (out, bytes)
+      val meter = new Profile.Meter(spark)
+      try {
+        val t0 = System.nanoTime()
+        val out = body
+        val secs = (System.nanoTime() - t0) / 1e9
+        val bytes = meter.take().shuffleReadBytes
+        println(f"[stress] $cell/$name%-6s $secs%6.1f s  " +
+          f"shuffleRead=${bytes / 1048576.0}%9.2f MiB  (${rows(out)} rows)")
+        (out, bytes)
+      } finally meter.close()
     }
 
     /** `factor` perturbed copies of each vector (cosine ≥ 0.999 to the

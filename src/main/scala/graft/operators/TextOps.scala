@@ -1435,30 +1435,26 @@ object TextOps {
       if (batch == 0) "overwrite" else "append", Some(batch))
   }
 
-  /** Retention folding for the versioned posting index: merge every
+  /** Retention folding for the versioned posting index: relabel every
     * batch `b ≤ upTo` into ONE base snapshot labeled `b = upTo`,
     * leaving batches `> upTo` untouched — the lifecycle move that
     * keeps the time-travel history from growing forever (q94's layout
     * keeps one directory level per batch per touched term partition;
-    * a 15-minute cadence is 96/day). The mergeable-state design does
-    * all the work: postings rows of doc-disjoint batches simply
-    * relabel (a row union), per-batch dfreq contributions sum per
-    * term (negative purge retractions included), stats rows sum —
-    * so for every M ≥ upTo, `bm25TopKIndexed(asOf = Some(M))` — and
-    * the un-cut read — is IDENTICAL before and after the fold
-    * (pinned in TextOpsSpec), while the file/directory count drops to
-    * one `b=` level per touched partition. History BELOW the fold
-    * point is forfeited (asOf < upTo afterwards sees only batches
+    * a 15-minute cadence is 96/day). Every artifact row has a unique
+    * key — postings `(doc_id, term)` by doc-disjointness, dfreq
+    * `(term, origin_b)` and stats `origin_b`, the batch the row arrived
+    * in — so the fold is [[graft.streaming.BatchStore.relabel]]'s
+    * deduplicating relabel-union: the reader already sums df and stats
+    * across rows, so for every M ≥ upTo, `bm25TopKIndexed(asOf =
+    * Some(M))` — and the un-cut read — is IDENTICAL before and after
+    * the fold (pinned in TextOpsSpec), while the file/directory count
+    * drops to one `b=` level per touched partition. History BELOW the
+    * fold point is forfeited (asOf < upTo afterwards sees only batches
     * that escaped folding) — that is the retention semantics, not a
-    * defect.
-    *
-    * Sequence per artifact: materialize the merged contribution
-    * (localCheckpoint — the source partitions are about to change),
-    * dynamic-overwrite it into `b=upTo`, then delete the stale
-    * `b < upTo` directories. Not crash-atomic (a failure between the
-    * last two steps leaves folded rows double-counted until the fold
-    * is re-run) — same recovery-by-rerun class as the in-place
-    * partition rewrite. A stream-maintained index folds through
+    * defect. A crash between an artifact's overwrite and its stale-
+    * directory delete leaves rows present twice; re-running the fold
+    * deduplicates them back to the clean fold (pinned in
+    * IndexStreamSpec). A stream-maintained index folds through
     * [[graft.streaming.IndexStream.foldPostingIndex]], which runs the
     * commit-marker fence first; its markers are kept: they fence a
     * redelivered producer from re-appending a batch the fold already
@@ -1466,30 +1462,12 @@ object TextOps {
   def foldPostingIndexVersions(s: org.apache.spark.sql.SparkSession,
                                path: String, upTo: Long): Unit = {
     requireVersionedStatsLayout(s, path)
-    val bs = s.read.parquet(s"$path/stats")
-      .select(col("b").cast("long")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val folds = bs.filter(_ <= upTo)
-    if (folds.length <= 1) return // nothing to merge
-    def foldArtifact(sub: String, merge: DataFrame => DataFrame,
-                     parts: Seq[String]): Unit = {
-      val merged = merge(
-          s.read.parquet(s"$path/$sub").filter(col("b") <= upTo).drop("b"))
-        .withColumn("b", lit(upTo))
-        .localCheckpoint() // materialize BEFORE touching source dirs
-      BatchStore.overwrite(merged, s"$path/$sub", parts)
-      BatchStore.dropBelow(s, s"$path/$sub", upTo)
-    }
-    foldArtifact("postings", df => df.repartition(col("tp")),
-      Seq("tp", "b"))
-    foldArtifact("dfreq",
-      df => df.groupBy(col("tp"), col("term"))
-        .agg(sum(col("df")).as("df")).repartition(col("tp")),
-      Seq("tp", "b"))
-    foldArtifact("stats",
-      df => df.agg(sum(col("n")).as("n"), sum(col("dl_sum")).as("dl_sum"),
-        sum(col("dl_cnt")).as("dl_cnt")),
-      Seq("b"))
+    BatchStore.relabel(s, path, upTo,
+      BatchStore.Folded("postings", Seq("doc_id", "term"),
+        shuffle = Some("tp"), outer = Seq("tp")),
+      BatchStore.Folded("dfreq", Seq("term", "origin_b"),
+        shuffle = Some("tp"), outer = Seq("tp")),
+      BatchStore.Folded("stats", Seq("origin_b")))
   }
 
   /** Idempotently (re)write ONE batch of a VERSIONED posting index —
@@ -1576,15 +1554,19 @@ object TextOps {
     }
     writer(partitioned(post))
       .partitionBy(partCols: _*).parquet(s"$path/postings")
-    writer(partitioned(post.groupBy(col("term"))
-        .agg(count(lit(1)).cast("double").as("df"))))
+    // versioned dfreq and stats rows keep the batch they arrived in
+    // after a fold relabels `b`: their key in the fold's dedup
+    def origin(df: DataFrame) =
+      version.fold(df)(v => df.withColumn("origin_b", lit(v)))
+    writer(partitioned(origin(post.groupBy(col("term"))
+        .agg(count(lit(1)).cast("double").as("df")))))
       .partitionBy(partCols: _*).parquet(s"$path/dfreq")
     val dl = size(col("__w")).cast("double")
     val stats = d.agg(count(lit(1)).cast("double").as("n"),
       coalesce(sum(dl), lit(0.0)).as("dl_sum"),
       count(dl).cast("double").as("dl_cnt"))
     version.fold(stats.write.mode(mode)) { v =>
-      writer(stats.withColumn("b", lit(v))).partitionBy("b")
+      writer(origin(stats).withColumn("b", lit(v))).partitionBy("b")
     }.parquet(s"$path/stats")
   }
 

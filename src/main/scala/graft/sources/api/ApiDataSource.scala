@@ -106,94 +106,36 @@ final class ApiScan(schema: StructType, opts: Map[String, String],
       .map(e => ApiInputPartition(e): InputPartition)
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ApiReaderFactory(schema, opts.getOrElse("transport", "http"), watermark,
-      opts.get("pageSize").map(_.toInt))
+    new ApiReaderFactory(schema, opts.getOrElse("transport", "http"), watermark)
 }
 
 final case class ApiInputPartition(endpoint: String) extends InputPartition
 
 final class ApiReaderFactory(schema: StructType, transportName: String,
-                             watermark: Option[Long], pageSize: Option[Int])
+                             watermark: Option[Long])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val ep = partition.asInstanceOf[ApiInputPartition].endpoint
-    new ApiPartitionReader(schema, transportName, ep, watermark, pageSize)
+    new ApiPartitionReader(schema, transportName, ep, watermark)
   }
 }
 
 /** Fetches one endpoint and streams its `data` array as InternalRows.
   * The watermark travels as the reference's exact parameter pair
-  * (`meta.version` / `meta.version_op=gt`, constants.yaml:3-9).
-  * With `pageSize` set, pages are requested lazily (`page=1,2,…`) until
-  * a short page — the stream never holds more than one page. */
-object ApiPartitionReader {
-  /** Absolute paging backstop: with the repeated-page detector this only
-    * trips on a transport returning an endless stream of DISTINCT full
-    * pages — at that point failing loudly beats fetching forever. */
-  val MaxPages: Int = 1000000
-}
-
+  * (`meta.version` / `meta.version_op=gt`, constants.yaml:3-9). */
 final class ApiPartitionReader(schema: StructType, transportName: String,
-                               endpoint: String, watermark: Option[Long],
-                               pageSize: Option[Int])
+                               endpoint: String, watermark: Option[Long])
     extends PartitionReader[InternalRow] {
 
-  private def fetchPage(extra: Map[String, String]): Iterator[InternalRow] = {
+  private lazy val rows: Iterator[InternalRow] = {
     val params = Map(
       "meta.version" -> watermark.getOrElse(0L).toString,
-      "meta.version_op" -> "gt") ++ extra
+      "meta.version_op" -> "gt")
     val body = TransportRegistry.get(transportName).fetch(endpoint, params)
     val root = new ObjectMapper().readTree(body)
     val data = root.get("data")
     if (data == null || !data.isArray) Iterator.empty
     else data.elements().asScala.map(rec => JsonRow.toRow(flatten(rec), schema))
-  }
-
-  private lazy val rows: Iterator[InternalRow] = pageSize match {
-    case None => fetchPage(Map.empty)
-    case Some(ps) =>
-      // stop after the first page that is not exactly full: handles the
-      // documented short-page end (no extra request) and the empty page.
-      // A transport that ignores page/page_size and whose everything-page
-      // is exactly ps rows would otherwise refetch forever with
-      // duplicated rows — that failure mode always re-serves PAGE 1, so
-      // detect it by comparing each later page against page 1 (not its
-      // immediate predecessor: duplicate-heavy feeds may legitimately
-      // serve row-identical consecutive pages). A generous absolute cap
-      // stays as the final backstop.
-      //
-      // SOURCE CONTRACT: a full page that is row-for-row identical to
-      // page 1 is indistinguishable from a paging-ignoring transport and
-      // terminates the scan — a feed whose legitimate page 2 exactly
-      // equals page 1 (every row, every column, same order) is read as
-      // one page. Feeds carrying any distinguishing column (id,
-      // meta.version, a timestamp — everything in the reference's API
-      // does) never trigger this. A cursor stuck on a LATER page
-      // (serving page 2 forever, never re-serving page 1) is NOT
-      // detected early — consecutive identical pages are legal in
-      // duplicate-heavy feeds — so that failure mode runs to the
-      // MaxPages backstop and fails LOUDLY there, by design: a silent
-      // early stop would truncate a legitimate feed.
-      new Iterator[Seq[InternalRow]] {
-        private var page = 1
-        private var done = false
-        private var first: Seq[InternalRow] = null
-        override def hasNext: Boolean = !done
-        override def next(): Seq[InternalRow] = {
-          val rows = fetchPage(Map(
-            "page" -> page.toString, "page_size" -> ps.toString)).toSeq
-          val repeated = first != null && rows == first
-          if (rows.size != ps || repeated) done = true
-          else if (page >= ApiPartitionReader.MaxPages)
-            throw new IllegalStateException(
-              s"graft-api: endpoint '$endpoint' exceeded " +
-                s"${ApiPartitionReader.MaxPages} pages of size $ps — " +
-                "transport is likely ignoring paging parameters")
-          if (first == null) first = rows
-          page += 1
-          if (repeated) Seq.empty else rows
-        }
-      }.flatten
   }
   private var current: InternalRow = _
 

@@ -176,25 +176,33 @@ private[graft] object BatchStore {
   }
 
   /** One artifact of a relabel-union fold: `sub` under the store,
-    * partitioned by `b` then `more`, its rows cut to `project` (all
-    * columns when empty), deduplicated on `keys` and, when `shuffle`
-    * is set, hash-partitioned on it before the write. */
+    * partitioned by `outer`, then `b`, then `more`, its rows cut to
+    * `project` (all columns when empty), deduplicated on `keys` and,
+    * when `shuffle` is set, hash-partitioned on it before the write. */
   final case class Folded(sub: String, keys: Seq[String],
                           more: Seq[String] = Nil,
                           shuffle: Option[String] = None,
-                          project: Seq[String] = Nil)
+                          project: Seq[String] = Nil,
+                          outer: Seq[String] = Nil)
 
-  /** The fenced retention fold: [[fence]], then for each artifact with
-    * more than one batch at or below `upTo`, its rows `b ≤ upTo` merge
-    * into one snapshot labeled `b = upTo` and the older batch
-    * directories go; later batches are untouched. A pure relabel-union
-    * deduplicated on each artifact's unique key, so a crash between the
-    * overwrite and the delete — the folded rows present twice — re-runs
-    * to the clean fold bit for bit. Every read fenced above `upTo` sees
-    * the same rows before and after. */
+  /** The fenced retention fold: [[fence]], then [[relabel]]. */
   def fold(s: SparkSession, path: String, upTo: Long, entry: String,
            artifacts: Folded*): Unit = {
     fence(s, path, upTo, entry, artifacts.map(_.sub))
+    relabel(s, path, upTo, artifacts: _*)
+  }
+
+  /** The fold itself, with no fence — for stores that carry no commit
+    * markers: for each artifact with more than one batch at or below
+    * `upTo`, its rows `b ≤ upTo` merge into one snapshot labeled
+    * `b = upTo` and the older batch directories go; later batches are
+    * untouched. A pure relabel-union deduplicated on each artifact's
+    * unique key, so a crash between the overwrite and the delete — the
+    * folded rows present twice — re-runs to the clean fold bit for bit.
+    * Every read fenced above `upTo` sees the same rows before and
+    * after. */
+  def relabel(s: SparkSession, path: String, upTo: Long,
+              artifacts: Folded*): Unit =
     artifacts.foreach { a =>
       val dir = s"$path/${a.sub}"
       if (batches(s, dir).count(_ <= upTo) > 1) {
@@ -206,9 +214,8 @@ private[graft] object BatchStore {
           .withColumn("b", lit(upTo))
         val merged = a.shuffle.fold(read)(k => read.repartition(col(k)))
           .localCheckpoint() // materialize BEFORE touching source dirs
-        overwrite(merged, dir, "b" +: a.more)
+        overwrite(merged, dir, a.outer ++ ("b" +: a.more))
         dropBelow(s, dir, upTo)
       }
     }
-  }
 }

@@ -84,6 +84,38 @@ class DocCountsSpec extends AnyFunSuite {
       s"docs/SCALE.md cites unregistered storms: ${unknown.mkString(", ")}")
   }
 
+  test("every `runMain graft.<Name>` cited in README.md or docs/*.md is a " +
+       "main in src/main") {
+    val docs = "README.md" +: {
+      val s = Files.list(Paths.get("docs"))
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala.map(_.toString).filter(_.endsWith(".md")).toList
+      } finally s.close()
+    }
+    val cited = docs.flatMap(d => raw"runMain graft\.(\w+)".r
+      .findAllMatchIn(read(d)).map(m => d -> m.group(1))).distinct
+    assert(cited.exists(_._2 == "Verify"), s"no cited main found in $docs")
+    // top-level objects of package graft in src/main, each of which
+    // must also compile to a class with a static `main` forwarder
+    val objects = {
+      val s = Files.list(Paths.get("src/main/scala/graft"))
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala.map(_.toString).filter(_.endsWith(".scala"))
+          .flatMap(p => raw"(?m)^object\s+(\w+)".r.findAllMatchIn(read(p)).map(_.group(1)))
+          .toSet
+      } finally s.close()
+    }
+    val missing = cited.filterNot { case (_, name) =>
+      objects(name) && scala.util.Try(java.lang.reflect.Modifier.isStatic(
+        Class.forName(s"graft.$name")
+          .getMethod("main", classOf[Array[String]]).getModifiers)).getOrElse(false)
+    }
+    assert(missing.isEmpty,
+      s"docs cite mains that src/main does not define: ${missing.mkString(", ")}")
+  }
+
   test("SparkEntry.matching: prefixes select sorted names; an unknown " +
     "prefix fails with the candidates") {
     val all = SparkEntry.queries.keys.toSeq.sorted

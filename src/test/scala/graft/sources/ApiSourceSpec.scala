@@ -79,31 +79,6 @@ class ApiSourceSpec extends SparkSpec {
     assert(fake.calls.asScala.head._2("meta.version") == "0")
   }
 
-  test("paged read walks page=1,2,… until a short page") {
-    val fake = new ApiTransport {
-      val calls = new ConcurrentLinkedQueue[Map[String, String]]()
-      override def fetch(e: String, p: Map[String, String]): String = {
-        calls.add(p)
-        val page = p("page").toInt
-        val ps = p("page_size").toInt
-        val all = (1 to 25).map(v =>
-          s"""{"id": $v, "date_time": "x", "close_price": 1.0,
-             |"instrument": {"id": 1, "type": "s"}, "meta": {"version": $v}}"""
-            .stripMargin.replace("\n", " "))
-        val kept = all.slice((page - 1) * ps, page * ps)
-        s"""{"data": [${kept.mkString(",")}]}"""
-      }
-    }
-    TransportRegistry.register("fake-paged", fake)
-    val df = spark.read.format("graft-api")
-      .schema(schemaDdl)
-      .option("endpoints", "exchange/trades/share")
-      .option("transport", "fake-paged")
-      .option("pageSize", "10")
-      .load()
-    assert(df.count() == 25) // pages of 10, 10, 5
-  }
-
   test("a transport that ignores the version param still yields correct results") {
     TransportRegistry.register("fake-ignores-wm", new ApiTransport {
       override def fetch(e: String, p: Map[String, String]): String = {
@@ -122,85 +97,6 @@ class ApiSourceSpec extends SparkSpec {
       .load()
       .filter(col("meta_version") > 7L)
     assert(df.count() == 3) // residual re-check catches the stale rows
-  }
-
-  test("pageSize against a transport that ignores paging terminates after one fetch") {
-    val calls = new java.util.concurrent.atomic.AtomicInteger
-    TransportRegistry.register("fake-no-paging", new ApiTransport {
-      override def fetch(e: String, p: Map[String, String]): String = {
-        calls.incrementAndGet()
-        val all = (1 to 25).map(v =>
-          s"""{"id": $v, "date_time": "x", "close_price": 1.0,
-             |"instrument": {"id": 1, "type": "s"}, "meta": {"version": $v}}"""
-            .stripMargin.replace("\n", " "))
-        s"""{"data": [${all.mkString(",")}]}""" // same 25 rows every call
-      }
-    })
-    val df = spark.read.format("graft-api")
-      .schema(schemaDdl)
-      .option("endpoints", "e")
-      .option("transport", "fake-no-paging")
-      .option("pageSize", "10")
-      .load()
-    assert(df.count() == 25) // the 25-row "page" != pageSize → last page
-    assert(calls.get() <= 2) // terminated, no infinite refetch
-  }
-
-  test("paging-ignoring transport whose response is exactly pageSize rows terminates") {
-    val calls = new java.util.concurrent.atomic.AtomicInteger
-    TransportRegistry.register("fake-no-paging-full", new ApiTransport {
-      override def fetch(e: String, p: Map[String, String]): String = {
-        calls.incrementAndGet()
-        val all = (1 to 10).map(v =>
-          s"""{"id": $v, "date_time": "x", "close_price": 1.0,
-             |"instrument": {"id": 1, "type": "s"}, "meta": {"version": $v}}"""
-            .stripMargin.replace("\n", " "))
-        s"""{"data": [${all.mkString(",")}]}""" // exactly pageSize rows, every call
-      }
-    })
-    val df = spark.read.format("graft-api")
-      .schema(schemaDdl)
-      .option("endpoints", "e")
-      .option("transport", "fake-no-paging-full")
-      .option("pageSize", "10")
-      .load()
-    // round-1 advice: this shape used to refetch forever with duplicated
-    // rows; the repeated-page detector must stop after the second fetch
-    // and emit the 10 rows exactly once
-    assert(df.count() == 10)
-    assert(calls.get() <= 3)
-  }
-
-  test("row-identical consecutive full pages are not mistaken for a paging loop") {
-    // advice-round finding: a duplicate-heavy feed whose pages 2 and 3
-    // happen to be row-for-row identical is legitimate data; only a
-    // transport that re-serves PAGE 1 forever is a paging loop.
-    def page(vs: Range): String = {
-      val rows = vs.map(v =>
-        s"""{"id": $v, "date_time": "x", "close_price": 1.0,
-           |"instrument": {"id": 1, "type": "s"}, "meta": {"version": $v}}"""
-          .stripMargin.replace("\n", " "))
-      s"""{"data": [${rows.mkString(",")}]}"""
-    }
-    val calls = new java.util.concurrent.atomic.AtomicInteger
-    TransportRegistry.register("fake-dup-pages", new ApiTransport {
-      override def fetch(e: String, p: Map[String, String]): String = {
-        calls.incrementAndGet()
-        p("page").toInt match {
-          case 1 => page(1 to 10)
-          case 2 | 3 => page(11 to 20) // identical consecutive full pages
-          case _ => page(21 to 25)     // short page ends the scan
-        }
-      }
-    })
-    val df = spark.read.format("graft-api")
-      .schema(schemaDdl)
-      .option("endpoints", "e")
-      .option("transport", "fake-dup-pages")
-      .option("pageSize", "10")
-      .load()
-    assert(df.count() == 35) // 10 + 10 + 10 + 5: nothing truncated
-    assert(calls.get() == 4)
   }
 
   test("HttpTransport.buildUrl uses '&' when the endpoint already has a query string") {

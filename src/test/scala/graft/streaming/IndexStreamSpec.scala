@@ -147,7 +147,8 @@ class IndexStreamSpec extends SparkSpec {
     (0 to 2).foreach(apply(control, _))
     IndexStream.foldPostingIndex(spark, control, upTo = 2L)
     val expected = state(control)
-    assert(expected._1.size == 7 && expected._2.size == 1, expected)
+    // the fold relabels the three stats rows (one per origin batch) to b=2
+    assert(expected._1.size == 7 && expected._2.size == 3, expected)
     // (crashed batch, the batch's artifacts landed with no marker) and
     // (fold ahead of the stream, batch 2 not yet delivered)
     Seq(
@@ -171,5 +172,45 @@ class IndexStreamSpec extends SparkSpec {
       IndexStream.foldPostingIndex(spark, store, upTo = 2L)
       assert(state(store) == expected, s"$name: redelivery + fold lost history")
     }
+  }
+
+  test("a fold that crashed before deleting the folded batch dirs re-runs " +
+       "to the clean fold: no artifact is counted twice") {
+    import java.nio.file.{Files, Path}
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("graft-idxfoldrerun").toString
+    val batches = Seq(corpus.take(2), corpus.slice(2, 4), corpus.drop(4))
+    def build(store: String): Unit = batches.zipWithIndex.foreach { case (b, i) =>
+      IndexStream.applyBatch(b.toDF(), "doc_id", "text", store, parts, i.toLong)
+    }
+    def reads(store: String) = (probe(store),
+      TextOps.bm25TopKIndexed(spark, store, parts, queriesDf,
+          "query_id", "qtext", k = 5, asOf = Some(2L))
+        .collect().map(_.toString).sorted.toSeq)
+    val control = s"$dir/control"
+    build(control)
+    IndexStream.foldPostingIndex(spark, control, upTo = 2L)
+    val store = s"$dir/store"
+    build(store)
+    val stale = Path.of(s"$dir/stale")
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(store), stale.toFile)
+    IndexStream.foldPostingIndex(spark, store, upTo = 2L)
+    // the crash window: the b=2 snapshot holds batches 0-2, and the
+    // folded b=0 and b=1 directories of every artifact are still there
+    val folded = Set("b=0", "b=1")
+    val files = Files.walk(stale)
+    val restored = try files.iterator().asScala
+      .filter(p => Files.isRegularFile(p) &&
+        stale.relativize(p).iterator().asScala.exists(seg => folded(seg.toString)))
+      .map { p =>
+        val to = Path.of(store).resolve(stale.relativize(p))
+        Files.createDirectories(to.getParent)
+        Files.copy(p, to)
+      }.size
+    finally files.close()
+    assert(restored > 0, "setup: no folded batch files to restore")
+    IndexStream.foldPostingIndex(spark, store, upTo = 2L)
+    assert(reads(store) == reads(control),
+      "a re-run fold counted the folded batches twice")
   }
 }
