@@ -381,6 +381,19 @@ object Bench {
       case _                  => false
     }
 
+  /** Short ids of the serve family ([[graft.queries.ServeQueries]]), whose
+    * medians get 5 reps minimum (round-18, from the round-17
+    * adjudication: 11 serve/stream queries are 31% of board wall and
+    * swing ±20-40% between probe-CLEAN windows, so every round's
+    * adjudication budget went to re-litigating their medians). Each of
+    * these re-serves a real fenced batch per rep by design — the honest
+    * measurement is expensive AND oscillates with host I/O pressure the
+    * probes only partially see — so median-of-5 cuts the published
+    * swing roughly in half at ~+60 s of driver wall, and the window
+    * normalization corrects the rest. */
+  private[graft] val serveFamily: Set[String] =
+    graft.queries.ServeQueries.records.map(_.shortId).toSet
+
   def main(args: Array[String]): Unit = {
     // dev-only subset knob (comma-separated name prefixes, mirroring
     // Verify's; an unknown prefix fails here, before any work): the
@@ -586,17 +599,6 @@ object Bench {
       else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
     }
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    // Serve-family rep policy (round-18, from the round-17 adjudication:
-    // 11 serve/stream queries are 31% of board wall and swing ±20-40%
-    // between probe-CLEAN windows, so every round's adjudication budget
-    // went to re-litigating their medians). Each of these re-serves a
-    // real fenced batch per rep by design — the honest measurement is
-    // expensive AND oscillates with host I/O pressure the probes only
-    // partially see — so their medians get 5 reps minimum: median-of-5
-    // cuts the published swing roughly in half at ~+60 s of driver
-    // wall, and the window normalization below corrects the rest.
-    val serveFamily = Set("q139", "q141", "q147", "q149", "q150", "q154",
-      "q155", "q158", "q159", "q160", "q161")
     def perQueryReps(name: String): Int =
       if (serveFamily.contains(name.takeWhile(_ != '_'))) math.max(reps, 5)
       else reps

@@ -91,7 +91,7 @@ object Engine {
     * symlink is removed itself: `listFiles` on a link to a directory
     * lists the target, so recursing there would empty a directory that
     * lives outside the tree. */
-  private def rmTree(f: java.io.File): Unit = {
+  private[graft] def rmTree(f: java.io.File): Unit = {
     if (!java.nio.file.Files.isSymbolicLink(f.toPath))
       Option(f.listFiles()).foreach(_.foreach(rmTree))
     f.delete()

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Engine
 import graft.functions.ZOrder
 
 /** Data-layout operators: Hive-style partitioned parquet writes and
@@ -195,11 +196,7 @@ object Layout {
       if (!tmp.isDirectory) tmp.mkdirs() // partition emptied by transform
       swapInto(rootF, new java.io.File(rootF, name), tmp)
     }
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(); ()
-    }
-    rm(tmpRoot)
+    Engine.rmTree(tmpRoot)
     existing.size
   }
 
@@ -211,11 +208,7 @@ object Layout {
     val old = new java.io.File(rootF, s".old-${d.getName}")
     require(d.renameTo(old), s"could not move aside $d")
     require(tmp.renameTo(d), s"could not install rewritten ${d.getName}")
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(); ()
-    }
-    rm(old)
+    Engine.rmTree(old)
   }
 
   private def listParquetBytes(dir: java.io.File): Long =

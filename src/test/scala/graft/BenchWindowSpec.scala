@@ -310,4 +310,9 @@ class BenchWindowSpec extends AnyFunSuite {
       assert(Bench.triggerSpread(ts) <= ts.max - ts.min + 1e-12)
     }
   }
+
+  test("the 5-rep serve floor covers exactly the serve family's 11 queries") {
+    assert(Bench.serveFamily == Set("q139", "q141", "q147", "q149", "q150",
+      "q154", "q155", "q158", "q159", "q160", "q161"))
+  }
 }

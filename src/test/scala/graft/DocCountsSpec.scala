@@ -143,6 +143,18 @@ class DocCountsSpec extends AnyFunSuite {
         missing.mkString(", "))
   }
 
+  test("the registry rejects two queries with one short id; the real " +
+       "registry has 202 distinct ones") {
+    val build: (org.apache.spark.sql.SparkSession, String) =>
+      org.apache.spark.sql.DataFrame = (_, _) => fail("never built")
+    val e = intercept[IllegalArgumentException](queries.QuerySpec.registry(Seq(
+      queries.QuerySpec("q01_a", build, "SELECT 1"),
+      queries.QuerySpec("q01_b", build, "SELECT 2"))))
+    assert(e.getMessage.contains("q01_a") && e.getMessage.contains("q01_b"))
+    assert(SparkEntry.registry.map(_.shortId).distinct.size == 202)
+    assert(SparkEntry.registry.size == 202)
+  }
+
   test("the batch-store protocol has one copy: `_committed` and halt(137) " +
        "appear in src/main only in BatchStore") {
     val home = "src/main/scala/graft/streaming/BatchStore.scala"
