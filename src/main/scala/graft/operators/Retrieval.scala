@@ -81,8 +81,8 @@ object Retrieval {
 
   /** Ranking-quality metrics (MRR and micro-averaged nDCG@k with
     * binary gains) for each arm against a ground-truth relevant set —
-    * the metric layer [[graft.SparkEntry]]'s q92 recall audit lacks:
-    * recall says WHETHER the truth was returned, these say WHERE.
+    * the metric layer q92's recall audit ([[graft.queries.AnnQueries]])
+    * lacks: recall says WHETHER the truth was returned, these say WHERE.
     *
     * `arms`: `(name, df)` with `(query_id, neighbor_id, rank)`
     * (1-based, the arm's own top-k). `exact`: the relevant pairs
